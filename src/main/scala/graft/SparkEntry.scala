@@ -1834,10 +1834,11 @@ object SparkEntry {
     val conf = s.sparkContext.hadoopConfiguration
     val src = new org.apache.hadoop.fs.Path(template)
     val dst = new org.apache.hadoop.fs.Path(runPath)
-    val srcFs = src.getFileSystem(conf)
-    val dstFs = dst.getFileSystem(conf)
-    dstFs.delete(dst, true)
-    if (!org.apache.hadoop.fs.FileUtil.copy(srcFs, src, dstFs, dst, false, conf))
+    // through the store protocol's reset, so the last run's memoized
+    // relations under `runPath` go with its files
+    graft.sources.DeltaStore.reset(s, runPath)
+    if (!org.apache.hadoop.fs.FileUtil.copy(src.getFileSystem(conf), src,
+        dst.getFileSystem(conf), dst, false, conf))
       throw new java.io.IOException(s"template copy $template -> $runPath failed")
     runPath
   }

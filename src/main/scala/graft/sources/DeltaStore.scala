@@ -31,19 +31,35 @@ object DeltaStore {
     * serve on every invocation. A COMMITTED delta dir is immutable by
     * the rename-commit protocol (writers stage under `.staging-*` and
     * rename once; sweeps only delete dirs that are already invisible),
-    * so a relation keyed on the EXACT path set can never serve stale
-    * rows: any store mutation (update/delete/compact) changes the
-    * visible delta set and therefore the key. No rows are cached —
-    * consuming queries still plan, prune and scan parquet themselves;
-    * this pins only the listing + footer schema (guide §6). Callers
-    * must pass committed delta paths, never staging paths. */
+    * but a delta PATH is not: [[reset]] deletes the store and a rebuild
+    * re-commits the same tags (a merge dest's `delta-00000`, a stream's
+    * `delta-batch-N`) over new part files, so the path set alone does
+    * not identify the files. The memo is therefore invalidated where a
+    * path's files change: [[reset]] drops every entry under the store
+    * root, and [[commit]] every entry under the delta it makes visible
+    * — for all sessions, on the qualified path form (callers pass both
+    * `/tmp/…` and `file:/tmp/…`). Between mutations a hit is exact. No
+    * rows are cached — consuming queries still plan, prune and scan
+    * parquet themselves; this pins only the listing + footer schema
+    * (guide §6). Callers must pass committed delta paths, never
+    * staging paths. */
   private val relCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, Seq[String]), DataFrame]()
   def readRelation(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val key = (spark, paths.sorted)
+    val key = (spark, paths.map(p => qualified(fsOf(spark, p), p)).sorted)
     val hit = relCache.get(key)
     if (hit != null) hit
     else relCache.computeIfAbsent(key, k => spark.read.parquet(k._2: _*))
+  }
+
+  private def qualified(fs: FileSystem, path: String): String =
+    fs.makeQualified(new Path(path)).toString
+
+  /** Drop every memoized relation reading any path at or under `dir`. */
+  private def forgetRelations(fs: FileSystem, dir: String): Unit = {
+    val q = qualified(fs, dir)
+    relCache.keySet.removeIf(_._2.exists(p => p == q || p.startsWith(q + "/")))
+    ()
   }
 
   /** Raw delta listing plus the superseded (stale) name subset — the
@@ -148,10 +164,13 @@ object DeltaStore {
     }
   }
 
-  /** Reset the store (full rebuild entry point). */
+  /** Reset the store (full rebuild entry point). The deleted files are
+    * gone for every session, so every memoized relation under the
+    * store goes with them. */
   def reset(spark: SparkSession, path: String): Unit = {
-    fsOf(spark, path).delete(new Path(path), true)
-    ()
+    val fs = fsOf(spark, path)
+    fs.delete(new Path(path), true)
+    forgetRelations(fs, path)
   }
 
   def writeRange(fs: FileSystem, dir: Path, lo: Long, hi: Long): Unit = {
@@ -299,6 +318,7 @@ object DeltaStore {
     if (history.nonEmpty) writeList("tags.history", history)
     if (!fs.rename(staging, new Path(s"$path/delta-$tag")))
       throw new java.io.IOException(s"commit failed for $path/delta-$tag")
+    forgetRelations(fs, s"$path/delta-$tag")
   }
 
   /** Compact all committed deltas into ONE: `restage` rewrites the

@@ -107,6 +107,37 @@ class DeltaStoreSpec extends AnyFunSuite {
     assert(scored > 0)
   }
 
+  private def memoIds(paths: Seq[String]): Seq[Long] =
+    DeltaStore.readRelation(spark, paths).collect().map(_.getLong(0)).toSeq.sorted
+
+  test("reset then a same-tag re-commit invalidates the readRelation memo") {
+    val store = newStore()
+    writeDelta(store, "00000", Seq(1L, 2L))
+    // both path forms callers pass: listed (file:/…) and constructed (/…)
+    val listed = DeltaStore.committedDeltas(spark, store).map(d => s"$d/rows")
+    val raw = Seq(s"$store/delta-00000/rows")
+    assert(memoIds(listed) == Seq(1L, 2L))
+    assert(memoIds(raw) == Seq(1L, 2L))
+    // the rebuild: same root, same tag, same path set — new part files
+    DeltaStore.reset(spark, store)
+    writeDelta(store, "00000", Seq(7L, 8L, 9L))
+    assert(DeltaStore.committedDeltas(spark, store).map(d => s"$d/rows") == listed)
+    assert(memoIds(listed) == Seq(7L, 8L, 9L))
+    assert(memoIds(raw) == Seq(7L, 8L, 9L))
+  }
+
+  test("a re-commit invalidates the memo for its delta even when the store was deleted outside reset") {
+    val store = newStore()
+    writeDelta(store, "00000", Seq(1L))
+    writeDelta(store, "00001", Seq(2L))
+    val paths = DeltaStore.committedDeltas(spark, store).map(d => s"$d/rows")
+    assert(memoIds(paths) == Seq(1L, 2L))
+    DeltaStore.fsOf(spark, store).delete(new org.apache.hadoop.fs.Path(store), true)
+    writeDelta(store, "00000", Seq(3L))
+    writeDelta(store, "00001", Seq(4L, 5L))
+    assert(memoIds(paths) == Seq(3L, 4L, 5L))
+  }
+
   test("a batch holding the same id twice is rejected before commit") {
     val store = newStore()
     writeDelta(store, "ok", Seq(1L, 2L))
