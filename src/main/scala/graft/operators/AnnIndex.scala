@@ -64,23 +64,18 @@ object AnnIndex {
     // DeltaStore.commit directly, or a param-less legacy delta listed
     // first) must not let a mismatched batch slip in and corrupt search
     // — the same all-deltas validation compactDeltas runs
-    val storedAll = deltas.flatMap(d => readParams(DeltaStore.fsOf(spark, path), d)).distinct
+    val fs = DeltaStore.fsOf(spark, path)
+    val storedAll = deltas.flatMap(DeltaStore.readSidecar(fs, _, "lsh.params")).distinct
     require(storedAll.size <= 1, s"deltas disagree on LSH params: $storedAll")
     storedAll.foreach { stored =>
       require(stored == params,
         s"LSH params $params do not match the store's $stored — " +
           "rebuild the index to change hyperplane parameters")
     }
-    val (batchEmpty, lo, hi) = DeltaStore.batchRange(embeddings, "vec_id")
-    if (deltas.nonEmpty && !batchEmpty) {
-      val fs = DeltaStore.fsOf(spark, path)
-      // tombstone-only deltas carry no vectors; a deleted id stays
-      // reserved until compaction purges it (the Bm25Index contract)
-      val candidates = DeltaStore.overlappingDeltas(fs, deltas, lo, hi)
-        .filter(d => fs.exists(new org.apache.hadoop.fs.Path(s"$d/vectors")))
-      DeltaStore.rejectDuplicateIds(spark, candidates,
-        "vectors", "vec_id", embeddings, "ANN-index")
-    }
+    val br @ (_, lo, hi) = DeltaStore.batchRange(embeddings, "vec_id")
+    // tombstone-only deltas carry no vectors; a deleted id stays
+    // reserved until compaction purges it (the Bm25Index contract)
+    DeltaStore.rejectDuplicateIds(spark, deltas, "vectors", "vec_id", embeddings, br, "ANN-index")
     val range = if (lo <= hi) Some((lo, hi)) else None
     DeltaStore.commit(spark, path, tag, range) { staging =>
       // independent staged writes — overlap them (guide §2.6)
@@ -93,9 +88,7 @@ object AnnIndex {
           .repartition(col("t"), col("bucket"))
           .sortWithinPartitions("t", "bucket")
           .write.mode(SaveMode.Overwrite).parquet(s"$staging/buckets")))
-      val fs = DeltaStore.fsOf(spark, staging)
-      val out = fs.create(new org.apache.hadoop.fs.Path(staging, "lsh.params"), true)
-      try out.write(params.getBytes("UTF-8")) finally out.close()
+      DeltaStore.writeSidecar(spark, staging, "lsh.params", params)
     }
   }
 
@@ -109,11 +102,11 @@ object AnnIndex {
   def compactDeltas(spark: SparkSession, path: String): Unit = {
     val fs = DeltaStore.fsOf(spark, path)
     DeltaStore.compact(spark, path) { (deltas, staging) =>
-      val params = deltas.flatMap(d => readParams(fs, d)).distinct
+      val params = deltas.flatMap(DeltaStore.readSidecar(fs, _, "lsh.params")).distinct
       require(params.size <= 1, s"deltas disagree on LSH params: $params")
       // physical purge: live rows only, tombstones dropped — the
       // compacted store equals one built without the deleted vectors
-      val (vectors, buckets) = liveIndex(spark, deltas)
+      val (vectors, buckets) = DeltaStore.livePair(spark, deltas, "vec_id", "vectors", "buckets")
       // independent rewrites — overlap them (guide §2.6)
       graft.Jobs.inParallel(Seq(
         () => vectors.write.parquet(s"$staging/vectors"),
@@ -121,10 +114,7 @@ object AnnIndex {
           .repartition(col("t"), col("bucket"))
           .sortWithinPartitions("t", "bucket")
           .write.parquet(s"$staging/buckets")))
-      params.headOption.foreach { ps =>
-        val out = fs.create(new org.apache.hadoop.fs.Path(staging, "lsh.params"), true)
-        try out.write(ps.getBytes("UTF-8")) finally out.close()
-      }
+      params.headOption.foreach(DeltaStore.writeSidecar(spark, staging, "lsh.params", _))
     }
   }
 
@@ -152,29 +142,14 @@ object AnnIndex {
     // local), and a handle from one would probe/write the wrong store
     val fsA = DeltaStore.fsOf(spark, pathA)
     val fsB = DeltaStore.fsOf(spark, pathB)
-    val params = (dA.flatMap(d => readParams(fsA, d)) ++
-      dB.flatMap(d => readParams(fsB, d))).distinct
+    val params = (dA.flatMap(DeltaStore.readSidecar(fsA, _, "lsh.params")) ++
+      dB.flatMap(DeltaStore.readSidecar(fsB, _, "lsh.params"))).distinct
     require(params.size <= 1,
       s"stores disagree on LSH params: $params — a merged bucket space " +
         "would be incompatible; rebuild one side first")
-    val (va, ba) = liveIndex(spark, dA)
-    val (vb, bb) = liveIndex(spark, dB)
-    // two independent guard aggregations — overlapped (guide §2.6)
-    val br = new Array[(Boolean, Long, Long)](2)
-    graft.Jobs.inParallel(Seq(
-      () => br(0) = DeltaStore.batchRange(va, "vec_id"),
-      () => br(1) = DeltaStore.batchRange(vb, "vec_id")))
-    val ((eA, loA, hiA), (eB, loB, hiB)) = (br(0), br(1))
-    val rangesDisjoint = loA <= hiA && loB <= hiB && (hiA < loB || hiB < loA)
-    if (!eA && !eB && !rangesDisjoint) {
-      val nShared = va.select("vec_id").join(vb.select("vec_id"), "vec_id").count()
-      require(nShared == 0,
-        s"stores share $nShared live vec_ids — shard merge requires " +
-          "disjoint id spaces (re-key one side or delete the duplicates first)")
-    }
-    val range =
-      if (loA <= hiA && loB <= hiB) Some((math.min(loA, loB), math.max(hiA, hiB)))
-      else None
+    val (va, ba) = DeltaStore.livePair(spark, dA, "vec_id", "vectors", "buckets")
+    val (vb, bb) = DeltaStore.livePair(spark, dB, "vec_id", "vectors", "buckets")
+    val range = DeltaStore.requireDisjoint(va, vb, "vec_id")
     DeltaStore.reset(spark, dest)
     // FILE-LEVEL COPY-THROUGH for the vectors relation (guide §6, the
     // DedupStore.mergeStores discipline): with no tombstones on either
@@ -184,10 +159,7 @@ object AnnIndex {
     // ALWAYS re-cluster on (t, bucket): the hash key interleaves
     // across shards and the re-cluster is what recovers query-pruning
     // row-group locality (scaladoc above) — never copied.
-    val noTomb = (dA ++ dB).forall { d =>
-      val fs = if (dA.contains(d)) fsA else fsB
-      !fs.exists(new org.apache.hadoop.fs.Path(s"$d/tombstones"))
-    }
+    val noTomb = Seq(dA, dB).forall(DeltaStore.havingSub(spark, _, "tombstones").isEmpty)
     DeltaStore.commit(spark, dest, "00000", range) { staging =>
       // independent staged writes/copies — overlap them (guide §2.6)
       graft.Jobs.inParallel(Seq(
@@ -199,11 +171,7 @@ object AnnIndex {
           .repartition(col("t"), col("bucket"))
           .sortWithinPartitions("t", "bucket")
           .write.mode(SaveMode.Overwrite).parquet(s"$staging/buckets")))
-      params.headOption.foreach { ps =>
-        val fsD = DeltaStore.fsOf(spark, staging)
-        val out = fsD.create(new org.apache.hadoop.fs.Path(staging, "lsh.params"), true)
-        try out.write(ps.getBytes("UTF-8")) finally out.close()
-      }
+      params.headOption.foreach(DeltaStore.writeSidecar(spark, staging, "lsh.params", _))
     }
   }
 
@@ -222,69 +190,9 @@ object AnnIndex {
     val deltas = DeltaStore.committedDeltas(spark, path)
     require(deltas.nonEmpty, s"no committed deltas under $path")
     val ids = vecIds.select(col("vec_id")).distinct().cutLineage()
-    // batch-scaled liveness check: presence range-prunes via the
-    // id-range sidecars (the rejectDuplicateIds discipline), the
-    // tombstone side is delete-scaled by nature
-    val (bEmpty, lo, hi) = DeltaStore.batchRange(ids, "vec_id")
-    if (!bEmpty) {
-      val fs = DeltaStore.fsOf(spark, path)
-      val candidates = DeltaStore.overlappingDeltas(fs, deltas, lo, hi)
-        .filter(d => fs.exists(new org.apache.hadoop.fs.Path(s"$d/vectors")))
-      val present =
-        if (candidates.isEmpty) ids.limit(0)
-        else ids.join(DeltaStore.readRelation(spark, candidates.map(d => s"$d/vectors"))
-          .select("vec_id"), Seq("vec_id"), "left_semi")
-      val live = readSub(spark, deltas, "tombstones") match {
-        case None => present
-        case Some(ts) => present.join(ts.select("vec_id"), Seq("vec_id"), "left_anti")
-      }
-      val nMissing = ids.join(live, Seq("vec_id"), "left_anti").count()
-      require(nMissing == 0,
-        s"delete batch names $nMissing vec_ids that are not live in the store " +
-          "(absent or already tombstoned) — refusing a partially-effective delete")
-    }
+    DeltaStore.requireLive(spark, deltas, ids, "vec_id", "vectors")
     DeltaStore.commit(spark, path, tag, None) { staging =>
       ids.write.mode(SaveMode.Overwrite).parquet(s"$staging/tombstones")
-    }
-  }
-
-  /** Read one sub-relation across the deltas that HAVE it (delete
-    * deltas carry only `tombstones`). */
-  private def readSub(spark: SparkSession, deltas: Seq[String],
-                      sub: String): Option[DataFrame] = {
-    require(deltas.nonEmpty, "no committed deltas")
-    val fs = DeltaStore.fsOf(spark, deltas.head)
-    val present = deltas.filter(d =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$d/$sub")))
-    if (present.isEmpty) None
-    else Some(DeltaStore.readRelation(spark, present.map(d => s"$d/$sub")))
-  }
-
-  /** The LIVE (vectors, buckets) pair: physical rows minus tombstoned
-    * vec_ids. */
-  private def liveIndex(spark: SparkSession,
-                        deltas: Seq[String]): (DataFrame, DataFrame) = {
-    val vectors = readSub(spark, deltas, "vectors")
-      .getOrElse(throw new IllegalStateException("store holds no vectors"))
-    val buckets = readSub(spark, deltas, "buckets")
-      .getOrElse(throw new IllegalStateException("store holds no buckets"))
-    readSub(spark, deltas, "tombstones") match {
-      case None => (vectors, buckets)
-      case Some(ts) =>
-        val dead = ts.select("vec_id")
-        (vectors.join(dead, Seq("vec_id"), "left_anti"),
-          buckets.join(dead, Seq("vec_id"), "left_anti"))
-    }
-  }
-
-  private def readParams(fs: org.apache.hadoop.fs.FileSystem,
-                         delta: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(delta, "lsh.params")
-    if (!fs.exists(p)) None // pre-params delta: unguarded (legacy)
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
     }
   }
 
@@ -318,7 +226,7 @@ object AnnIndex {
                            deltas: Seq[String],
                            queryId: Long, k: Int): DataFrame = {
     require(deltas.nonEmpty, s"no committed deltas under $path")
-    val (vectors, buckets) = liveIndex(spark, deltas)
+    val (vectors, buckets) = DeltaStore.livePair(spark, deltas, "vec_id", "vectors", "buckets")
     val qb = buckets.filter(col("vec_id") === queryId)
       .select(col("t").as("qt"), col("bucket").as("qbucket"))
     val candidates = buckets
@@ -363,12 +271,12 @@ object AnnIndex {
     val deltas = DeltaStore.committedDeltas(spark, path)
     require(deltas.nonEmpty, s"no committed deltas under $path")
     val fs = DeltaStore.fsOf(spark, path)
-    val params = deltas.flatMap(d => readParams(fs, d)).distinct
+    val params = deltas.flatMap(DeltaStore.readSidecar(fs, _, "lsh.params")).distinct
     require(params.size == 1,
       s"multiprobe serve needs exactly one lsh.params across the store's " +
         s"deltas to derive the probe width; found ${params.size} ($params)")
     val bits = params.head.split(",")(1).toInt
-    val (vectors, buckets) = liveIndex(spark, deltas)
+    val (vectors, buckets) = DeltaStore.livePair(spark, deltas, "vec_id", "vectors", "buckets")
     val qb = buckets.filter(col("vec_id") === queryId)
       .select(col("t").as("qt"), col("bucket").as("qbucket"))
     val probes = qb.select(col("qt"), explode(expr(
@@ -399,8 +307,9 @@ object AnnIndex {
     * per table. Deterministic: one row per table, ordered by t. */
   def diffVersions(spark: SparkSession, path: String,
                    tagA: String, tagB: String): DataFrame = {
-    val (va, ba) = liveIndex(spark, DeltaStore.visibleAt(spark, path, tagA))
-    val (vb, bb) = liveIndex(spark, DeltaStore.visibleAt(spark, path, tagB))
+    def liveAt(tag: String) = DeltaStore.livePair(spark,
+      DeltaStore.visibleAt(spark, path, tag), "vec_id", "vectors", "buckets")
+    val ((va, ba), (vb, bb)) = (liveAt(tagA), liveAt(tagB))
     val na = va.agg(count(lit(1)).as("n_vecs_a"))
     val nb = vb.agg(count(lit(1)).as("n_vecs_b"))
     val ca = ba.groupBy("t", "bucket").agg(count(lit(1)).as("cnt_a"))

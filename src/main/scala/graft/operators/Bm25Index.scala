@@ -79,43 +79,6 @@ object Bm25Index {
         .write.mode(SaveMode.Overwrite).parquet(s"$staging/blockmax")
     }
   }
-  private def committedDeltas(spark: SparkSession, path: String): Seq[String] =
-    DeltaStore.committedDeltas(spark, path)
-
-  /** Read one per-delta sub-relation across every delta that HAS it —
-    * delete deltas carry only `tombstones`, update deltas only
-    * `postings`/`doclen`, so every glob filters by existence. */
-  private def readSub(spark: SparkSession, deltas: Seq[String],
-                      sub: String): Option[DataFrame] = {
-    require(deltas.nonEmpty, "no committed deltas")
-    val fs = DeltaStore.fsOf(spark, deltas.head)
-    val present = deltas.filter(d =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$d/$sub")))
-    if (present.isEmpty) None
-    else Some(DeltaStore.readRelation(spark, present.map(d => s"$d/$sub")))
-  }
-
-  /** The LIVE (postings, doclen) pair: physical rows minus tombstoned
-    * doc_ids. Corpus stats (n_docs, avgdl, per-term df) re-derive from
-    * the live rows downstream, so every IDF shifts exactly as a full
-    * rebuild without the deleted docs would — serving correctness
-    * never waits for compaction. The anti-join's right side is the
-    * tombstone set (delete-scaled, broadcast-sized in practice). */
-  private def liveIndex(spark: SparkSession,
-                        deltas: Seq[String]): (DataFrame, DataFrame) = {
-    val postings = readSub(spark, deltas, "postings")
-      .getOrElse(throw new IllegalStateException("store holds no postings"))
-    val doclen = readSub(spark, deltas, "doclen")
-      .getOrElse(throw new IllegalStateException("store holds no doclen"))
-    readSub(spark, deltas, "tombstones") match {
-      case None => (postings, doclen)
-      case Some(ts) =>
-        val dead = ts.select("doc_id")
-        (postings.join(dead, Seq("doc_id"), "left_anti"),
-          doclen.join(dead, Seq("doc_id"), "left_anti"))
-    }
-  }
-
   /** Full (re)build: reset the store and ingest the corpus as the
     * first delta. */
   def build(docs: DataFrame, path: String): Unit = {
@@ -138,25 +101,16 @@ object Bm25Index {
              tag: String = java.util.UUID.randomUUID().toString): Unit = {
     val spark = newDocs.sparkSession
     if (DeltaStore.isCommitted(spark, path, tag)) return // replayed batch
-    val deltas = committedDeltas(spark, path)
+    val deltas = DeltaStore.committedDeltas(spark, path)
     // batch id range (integral doc_id only): one batch-scaled agg,
     // reused for range-pruning the duplicate check AND this delta's
     // own sidecar. Non-integral or all-NULL ids get NO range (lo > hi)
     // → the check falls back to scanning every delta, never silently
     // skipped; an empty batch cannot contain a duplicate
-    val (batchEmpty, batchLo, batchHi) = DeltaStore.batchRange(newDocs, "doc_id")
-    if (deltas.nonEmpty && !batchEmpty) {
-      val fs = DeltaStore.fsOf(spark, path)
-      // tombstone-only deltas carry no doclen — dedup-check candidates
-      // are the update deltas whose id range can overlap. A DELETED id
-      // stays rejected until compaction physically purges its rows:
-      // tombstoning marks the doc dead, it does not free the id
-      val candidates = DeltaStore
-        .overlappingDeltas(fs, deltas, batchLo, batchHi)
-        .filter(d => fs.exists(new org.apache.hadoop.fs.Path(s"$d/doclen")))
-      DeltaStore.rejectDuplicateIds(spark, candidates,
-        "doclen", "doc_id", newDocs, "postings")
-    }
+    val br @ (_, batchLo, batchHi) = DeltaStore.batchRange(newDocs, "doc_id")
+    // tombstone-only deltas carry no doclen; a DELETED id stays
+    // rejected until compaction physically purges its rows
+    DeltaStore.rejectDuplicateIds(spark, deltas, "doclen", "doc_id", newDocs, br, "postings")
     val range = if (batchLo <= batchHi) Some((batchLo, batchHi)) else None
     DeltaStore.commit(spark, path, tag, range) { staging =>
       Bm25.tf(newDocs)
@@ -191,31 +145,10 @@ object Bm25Index {
   def delete(docIds: DataFrame, path: String, tag: String): Unit = {
     val spark = docIds.sparkSession
     if (DeltaStore.isCommitted(spark, path, tag)) return // replayed batch
-    val deltas = committedDeltas(spark, path)
+    val deltas = DeltaStore.committedDeltas(spark, path)
     require(deltas.nonEmpty, s"no committed deltas under $path")
     val ids = docIds.select(col("doc_id")).distinct().cutLineage()
-    // liveness check stays BATCH-scaled on a long-running store: the
-    // presence side range-prunes to the update deltas whose id-range
-    // sidecar can overlap the batch (the rejectDuplicateIds
-    // discipline); the tombstone side is delete-scaled by nature
-    val (bEmpty, lo, hi) = DeltaStore.batchRange(ids, "doc_id")
-    if (!bEmpty) {
-      val fs = DeltaStore.fsOf(spark, path)
-      val candidates = DeltaStore.overlappingDeltas(fs, deltas, lo, hi)
-        .filter(d => fs.exists(new org.apache.hadoop.fs.Path(s"$d/doclen")))
-      val present =
-        if (candidates.isEmpty) ids.limit(0)
-        else ids.join(DeltaStore.readRelation(spark, candidates.map(d => s"$d/doclen"))
-          .select("doc_id"), Seq("doc_id"), "left_semi")
-      val live = readSub(spark, deltas, "tombstones") match {
-        case None => present
-        case Some(ts) => present.join(ts.select("doc_id"), Seq("doc_id"), "left_anti")
-      }
-      val nMissing = ids.join(live, Seq("doc_id"), "left_anti").count()
-      require(nMissing == 0,
-        s"delete batch names $nMissing doc_ids that are not live in the store " +
-          "(absent or already tombstoned) — refusing a partially-effective delete")
-    }
+    val (bEmpty, lo, hi) = DeltaStore.requireLive(spark, deltas, ids, "doc_id", "doclen")
     DeltaStore.commit(spark, path, tag, None) { staging =>
       // deaddf sidecar: per-term counts of the postings rows this
       // delete tombstones, so block-max serving can reconstruct the
@@ -226,11 +159,10 @@ object Bm25Index {
       // check above); each physical row is counted at most once
       // across delete deltas because a delete requires its ids LIVE
       // and a tombstoned id stays reserved until compaction.
-      val fs = DeltaStore.fsOf(spark, path)
       val candPost =
         if (bEmpty) Seq.empty
-        else DeltaStore.overlappingDeltas(fs, deltas, lo, hi)
-          .filter(d => fs.exists(new org.apache.hadoop.fs.Path(s"$d/postings")))
+        else DeltaStore.overlappingDeltas(DeltaStore.fsOf(spark, path),
+          DeltaStore.havingSub(spark, deltas, "postings"), lo, hi)
       val dead =
         if (candPost.isEmpty)
           spark.createDataFrame(
@@ -267,7 +199,8 @@ object Bm25Index {
     * would double-count for a concurrent reader). */
   def compactDeltas(spark: SparkSession, path: String): Unit =
     DeltaStore.compact(spark, path) { (deltas, staging) =>
-      val (postings, doclen) = liveIndex(spark, deltas)
+      val (postings, doclen) =
+        DeltaStore.livePair(spark, deltas, "doc_id", "postings", "doclen")
       // postings and doclen rewrites are independent — overlap them
       // (guide §2.6); the block-max sidecar READS the staged pair, so
       // it stays sequenced after both
@@ -311,42 +244,21 @@ object Bm25Index {
     * only read). */
   def mergeStores(spark: SparkSession, pathA: String, pathB: String,
                   dest: String): Unit = {
-    val dA = committedDeltas(spark, pathA)
+    val dA = DeltaStore.committedDeltas(spark, pathA)
     require(dA.nonEmpty, s"no committed deltas under $pathA")
-    val dB = committedDeltas(spark, pathB)
+    val dB = DeltaStore.committedDeltas(spark, pathB)
     require(dB.nonEmpty, s"no committed deltas under $pathB")
-    val (pa, la) = liveIndex(spark, dA)
-    val (pb, lb) = liveIndex(spark, dB)
-    // two independent guard aggregations — overlapped (guide §2.6)
-    val br = new Array[(Boolean, Long, Long)](2)
-    graft.Jobs.inParallel(Seq(
-      () => br(0) = DeltaStore.batchRange(la, "doc_id"),
-      () => br(1) = DeltaStore.batchRange(lb, "doc_id")))
-    val ((eA, loA, hiA), (eB, loB, hiB)) = (br(0), br(1))
-    val rangesDisjoint = loA <= hiA && loB <= hiB && (hiA < loB || hiB < loA)
-    if (!eA && !eB && !rangesDisjoint) {
-      val nShared = la.select("doc_id")
-        .join(lb.select("doc_id"), "doc_id").count()
-      require(nShared == 0,
-        s"stores share $nShared live doc_ids — shard merge requires " +
-          "disjoint id spaces (re-key one side or delete the duplicates first)")
-    }
-    // FileSystems resolve PER SIDE: the two source stores can live on
-    // different filesystems, and pathA's handle probing pathB's deltas
-    // would throw wrong-FS (or silently probe the wrong store)
-    val fsA = DeltaStore.fsOf(spark, pathA)
-    val fsB = DeltaStore.fsOf(spark, pathB)
-    def has(fs: org.apache.hadoop.fs.FileSystem)(d: String, sub: String) =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$d/$sub"))
-    def hasEach(sub: String): Seq[String] =
-      dA.filter(has(fsA)(_, sub)) ++ dB.filter(has(fsB)(_, sub))
-    val noTombstones = hasEach("tombstones").isEmpty
-    val upd = hasEach("postings")
+    val (pa, la) = DeltaStore.livePair(spark, dA, "doc_id", "postings", "doclen")
+    val (pb, lb) = DeltaStore.livePair(spark, dB, "doc_id", "postings", "doclen")
+    val range = DeltaStore.requireDisjoint(la, lb, "doc_id")
+    // sub-relation listings resolve PER SIDE: the two source stores can
+    // live on different filesystems
+    val sides = Seq(dA, dB)
+    val noTombstones = sides.forall(DeltaStore.havingSub(spark, _, "tombstones").isEmpty)
+    val updSides = sides.map(DeltaStore.havingSub(spark, _, "postings"))
+    val upd = updSides.flatten
     val sidecarsExact = noTombstones &&
-      upd.forall(d => has(if (dA.contains(d)) fsA else fsB)(d, "blockmax"))
-    val range =
-      if (loA <= hiA && loB <= hiB) Some((math.min(loA, loB), math.max(hiA, hiB)))
-      else None
+      updSides.forall(u => DeltaStore.havingSub(spark, u, "blockmax") == u)
     DeltaStore.reset(spark, dest)
     DeltaStore.commit(spark, dest, "00000", range) { staging =>
       val writePostings = () => pa.union(pb)
@@ -397,8 +309,9 @@ object Bm25Index {
     * (|delta| desc, term asc). */
   def diffVersions(spark: SparkSession, path: String,
                    tagA: String, tagB: String, k: Int = 10): DataFrame = {
-    val (pa, _) = liveIndex(spark, DeltaStore.visibleAt(spark, path, tagA))
-    val (pb, _) = liveIndex(spark, DeltaStore.visibleAt(spark, path, tagB))
+    def postingsAt(tag: String) = DeltaStore.livePair(spark,
+      DeltaStore.visibleAt(spark, path, tag), "doc_id", "postings", "doclen")._1
+    val (pa, pb) = (postingsAt(tagA), postingsAt(tagB))
     val dfa = pa.groupBy("term").agg(count(lit(1)).as("df_a"))
     val dfb = pb.groupBy("term").agg(count(lit(1)).as("df_b"))
     dfa.join(dfb, Seq("term"), "full_outer")
@@ -414,7 +327,7 @@ object Bm25Index {
     * same corpus exactly (same formula, rounding, tie-breaks). */
   def score(spark: SparkSession, path: String,
             queryTerms: Seq[String] = Bm25.QueryTerms): DataFrame = {
-    val deltas = committedDeltas(spark, path)
+    val deltas = DeltaStore.committedDeltas(spark, path)
     require(deltas.nonEmpty, s"no committed deltas under $path")
     scoreDeltas(spark, deltas, queryTerms)
   }
@@ -437,7 +350,7 @@ object Bm25Index {
 
   private def scoreDeltas(spark: SparkSession, deltas: Seq[String],
                           queryTerms: Seq[String]): DataFrame = {
-    val (postings, dl) = liveIndex(spark, deltas)
+    val (postings, dl) = DeltaStore.livePair(spark, deltas, "doc_id", "postings", "doclen")
     val tfq = postings
       .filter(col("term").isin(queryTerms: _*)) // pushed to the scan
     // corpus stats aggregate doc-cardinality rows at query time — no
@@ -472,9 +385,9 @@ object Bm25Index {
   def maxScoreTopN(spark: SparkSession, path: String,
                    queryTerms: Seq[String] = Bm25.QueryTerms,
                    k: Int = 10): DataFrame = {
-    val deltas = committedDeltas(spark, path)
+    val deltas = DeltaStore.committedDeltas(spark, path)
     require(deltas.nonEmpty, s"no committed deltas under $path")
-    val (postings, dl) = liveIndex(spark, deltas)
+    val (postings, dl) = DeltaStore.livePair(spark, deltas, "doc_id", "postings", "doclen")
     SearchExtras.maxScoreFrom(
       postings.filter(col("term").isin(queryTerms: _*)), dl, k)
   }
@@ -519,7 +432,7 @@ object Bm25Index {
     * otherwise. */
   private def blockmaxDeltas(spark: SparkSession,
                              path: String): (Seq[String], Seq[String], Seq[String]) = {
-    val deltas = committedDeltas(spark, path)
+    val deltas = DeltaStore.committedDeltas(spark, path)
     require(deltas.nonEmpty, s"no committed deltas under $path")
     val (upd, del) = requireSidecars(spark, path, deltas)
     (deltas, upd, del)
@@ -532,13 +445,10 @@ object Bm25Index {
     * verdict task 6), never silently diverging. */
   private def requireSidecars(spark: SparkSession, path: String,
                               deltas: Seq[String]): (Seq[String], Seq[String]) = {
-    val fs = DeltaStore.fsOf(spark, deltas.head)
-    def has(d: String, sub: String) =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$d/$sub"))
-    val updDeltas = deltas.filter(has(_, "postings"))
-    val delDeltas = deltas.filter(has(_, "tombstones"))
-    val missingBm = updDeltas.filterNot(has(_, "blockmax"))
-    val missingDd = delDeltas.filterNot(has(_, "deaddf"))
+    val updDeltas = DeltaStore.havingSub(spark, deltas, "postings")
+    val delDeltas = DeltaStore.havingSub(spark, deltas, "tombstones")
+    val missingBm = updDeltas.diff(DeltaStore.havingSub(spark, updDeltas, "blockmax"))
+    val missingDd = delDeltas.diff(DeltaStore.havingSub(spark, delDeltas, "deaddf"))
     require(missingBm.isEmpty && missingDd.isEmpty,
       s"store $path lacks full block-max sidecar coverage " +
         s"(${missingBm.size} update deltas without blockmax, " +
@@ -625,7 +535,7 @@ object Bm25Index {
   private def blockMaxServe(spark: SparkSession, deltas: Seq[String],
                             updDeltas: Seq[String], delDeltas: Seq[String],
                             queryTerms: Seq[String], k: Int): DataFrame = {
-    val (postings, dlLive) = liveIndex(spark, deltas)
+    val (postings, dlLive) = DeltaStore.livePair(spark, deltas, "doc_id", "postings", "doclen")
     val (blocks, dfLive0) = blockBounds(spark, updDeltas, delDeltas, queryTerms)
     // the θ protocol consumes dfLive / the corpus stats / the block
     // bound-sums in SEVERAL jobs (seed collect, seed exact pass, final
@@ -726,9 +636,9 @@ object Bm25Index {
     * store. Relations are lazy scans: term pruning/pushdown still
     * happens per consuming plan exactly as in [[batchSearch]]. */
   def liveServe(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
-    val deltas = committedDeltas(spark, path)
+    val deltas = DeltaStore.committedDeltas(spark, path)
     require(deltas.nonEmpty, s"no committed deltas under $path")
-    liveIndex(spark, deltas)
+    DeltaStore.livePair(spark, deltas, "doc_id", "postings", "doclen")
   }
 
   /** [[batchSearch]] against a pre-resolved static side — the
@@ -772,7 +682,7 @@ object Bm25Index {
   def blockMaxBatchSearch(spark: SparkSession, path: String,
                           queries: DataFrame, k: Int = 10): DataFrame = {
     val (deltas, updDeltas, delDeltas) = blockmaxDeltas(spark, path)
-    val (postings, dlLive) = liveIndex(spark, deltas)
+    val (postings, dlLive) = DeltaStore.livePair(spark, deltas, "doc_id", "postings", "doclen")
     val qterms = Bm25.queryTermsOf(queries)
     val termCap = 4096
     val terms = qterms.select("term").distinct().limit(termCap + 1)

@@ -53,8 +53,9 @@ import graft.Lineage._
   *   <path>/delta-<tag>/tombstones + rekeys — a DELETE delta
   *       ([[delete]]): the deleted doc_ids plus, per group whose rep
   *       died with survivors, the re-elected (old_rep, new_rep) row.
-  *       Serving applies these as a rename+drop view ([[readFrom]]);
-  *       compaction materializes them and purges.
+  *       Serving applies these as a rename+drop view
+  *       ([[graft.sources.RepGroupStore.live]]); compaction
+  *       materializes them and purges.
   *
   * Incremental ingest ([[update]]) is append-only and batch-scaled:
   * new texts hash-match old groups through `reps`, only genuinely new
@@ -73,7 +74,19 @@ import graft.Lineage._
   */
 object DedupStore {
 
-  import graft.sources.DeltaStore
+  import graft.sources.{DeltaStore, RepGroupStore}
+  import graft.sources.RepGroupStore._
+
+  /** The rep-group protocol over this store's six relations: live
+    * view, tombstone + re-elect delete, monotone-id guard, compaction
+    * and the merge's id gate and copy-through. */
+  private[graft] val Store = RepGroupStore("doc_id", "dedup substrate", Seq(
+    "members" -> Members,
+    "reps" -> Reps,
+    "bands" -> IdKeyed(Seq("band", "bkey"), Seq("band", "bkey")),
+    "shingles" -> IdKeyed(Seq("doc_id"), Seq("doc_id", "sh")),
+    "cands" -> Pair("doc_a", "doc_b"),
+    "pairs" -> Pair("doc_a", "doc_b", swap = Some("na" -> "nb"))))
 
   /** Banding configuration baked into the staged pairs (the engine
     * default: S-curve midpoint ≈ 0.71, matching verify thresholds
@@ -99,43 +112,15 @@ object DedupStore {
     val spark = newDocs.sparkSession
     if (DeltaStore.isCommitted(spark, path, tag)) return // replayed batch
     val deltas = DeltaStore.committedDeltas(spark, path)
-    val (batchEmpty, batchLo, batchHi) = DeltaStore.batchRange(newDocs, "doc_id")
-    if (deltas.nonEmpty && !batchEmpty) {
-      // both checks read RAW members (no live view): a tombstoned id
-      // stays USED — re-ingesting it before compaction purges it
-      // would resurrect rows the rekey map still references. Delete
-      // deltas carry no members/ranges, so both legs scan the data
-      // deltas only.
-      val dataDeltas = havingSub(spark, deltas, "members")
-      DeltaStore.rejectDuplicateIds(spark,
-        DeltaStore.overlappingDeltas(DeltaStore.fsOf(spark, path), dataDeltas, batchLo, batchHi),
-        "members", "doc_id", newDocs, "dedup substrate")
-      // monotone-id contract: an id below the stored maximum could
-      // become a group's new minimum and silently invalidate every
-      // staged rep-keyed relation — refuse rather than corrupt. The
-      // maximum comes from the per-delta range sidecars when every
-      // delta carries one (O(#deltas) sidecar reads); otherwise one
-      // store-scaled aggregate — never silently skipped.
-      val fs = DeltaStore.fsOf(spark, path)
-      val ranges = dataDeltas.map(d => DeltaStore.readRange(fs, d))
-      val maxExisting: Option[Long] =
-        if (ranges.forall(_.isDefined)) Some(ranges.flatten.map(_._2).max)
-        else {
-          val r = DeltaStore.readRelation(spark, dataDeltas.map(d => s"$d/members"))
-            .agg(max(col("doc_id"))).collect()(0)
-          if (r.isNullAt(0)) None else Some(r.getLong(0))
-        }
-      maxExisting.foreach(hi => require(batchLo > hi,
-        s"batch doc_ids start at $batchLo but the store already holds ids up to " +
-          s"$hi — the append-only substrate requires monotone ingest; rebuild instead"))
-    }
+    val br @ (_, batchLo, batchHi) = DeltaStore.batchRange(newDocs, "doc_id")
+    Store.admitBatch(spark, path, deltas, newDocs, br)
     val empty = deltas.isEmpty
     // matching/banding reads the LIVE view: a fully-deleted group's
     // text must match NOTHING (its re-ingest becomes a fresh rep),
     // a rekeyed group must hand out its CURRENT rep, and dead reps'
     // bands must not spawn candidate pairs
     def existing(sub: String): Option[DataFrame] =
-      if (empty) None else Some(readFrom(spark, deltas, sub))
+      if (empty) None else Some(Store.live(spark, deltas, sub))
 
     val withH = newDocs.select(col("doc_id"), md5(col("text")).as("h"))
     // group the batch internally first (min id per hash)...
@@ -228,81 +213,36 @@ object DedupStore {
     * as one `rekeys` (old_rep, new_rep) row. Nothing else moves:
     * exact copies have identical text, so the survivor's hash,
     * shingle set, band keys and staged intersections are the dead
-    * rep's bit-for-bit, and the serve-side live view ([[readFrom]])
-    * RENAMES rather than recomputes — O(group) delta, store-scaled
-    * only in the columnar scans that find the group, never in
-    * what is written. Groups deleted whole drop from every relation
-    * (their rep is tombstoned and never re-keyed); physical purge is
+    * rep's bit-for-bit, and the serve-side live view
+    * ([[graft.sources.RepGroupStore.live]]) RENAMES rather than
+    * recomputes — O(group) delta, store-scaled only in the columnar
+    * scans that find the group, never in what is written. Groups
+    * deleted whole drop from every relation (their rep is tombstoned
+    * and never re-keyed); physical purge is
     * [[compactDeltas]]'s job. Idempotent per `tag` (the caller-owned
     * tag makes a retried delete a no-op); every id must be LIVE —
     * a typo'd delete fails loudly instead of half-applying; deleted
     * ids stay reserved against re-ingest until compaction purges
     * them (the [[Bm25Index.delete]] contract throughout). */
-  def delete(docIds: DataFrame, path: String, tag: String): Unit = {
-    val spark = docIds.sparkSession
-    if (DeltaStore.isCommitted(spark, path, tag)) return // replayed batch
-    val deltas = DeltaStore.committedDeltas(spark, path)
-    require(deltas.nonEmpty, s"no committed deltas under $path")
-    val ids = docIds.select(col("doc_id")).distinct().cutLineage()
-    // LIVE members once: the liveness gate, the affected-group scan
-    // and the re-election all read this one relation
-    val mem = readFrom(spark, deltas, "members")
-    val nMissing = ids.join(mem.select("doc_id"), Seq("doc_id"), "left_anti").count()
-    require(nMissing == 0,
-      s"delete batch names $nMissing doc_ids that are not live in the store " +
-        "(absent or already deleted) — refusing a partially-effective delete")
-    // per touched group: the min surviving member (null = group dies)
-    // and whether the current rep itself is among the deleted
-    val flagged = mem
-      .join(ids.withColumn("del", lit(true)), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("rep"), coalesce(col("del"), lit(false)).as("del"))
-    val touched = flagged
-      .join(flagged.filter(col("del")).select("rep").distinct(), Seq("rep"), "left_semi")
-    val rekeys = touched.groupBy("rep")
-      .agg(min(when(!col("del"), col("doc_id"))).as("new_rep"),
-        max(when(col("del") && col("doc_id") === col("rep"), 1).otherwise(0)).as("rep_del"))
-      .filter(col("rep_del") === 1 && col("new_rep").isNotNull)
-      .select(col("rep").as("old_rep"), col("new_rep"))
-    DeltaStore.commit(spark, path, tag, None) { staging =>
-      // independent staged writes — overlap them (guide §2.6)
-      graft.Jobs.inParallel(Seq(
-        () => ids.write.mode(SaveMode.Overwrite).parquet(s"$staging/tombstones"),
-        () => rekeys.write.mode(SaveMode.Overwrite).parquet(s"$staging/rekeys")))
-    }
-  }
+  def delete(docIds: DataFrame, path: String, tag: String): Unit =
+    Store.delete(docIds, path, tag)
 
   /** Fold all committed deltas into ONE delta — the small-files
     * maintenance leg ([[graft.sources.DeltaStore.compact]]'s
     * crash-atomic supersedes protocol; replayed ingest tags stay
     * no-ops through the cumulative tag history) — and PHYSICALLY
     * PURGE deletes: each relation is re-staged from its LIVE view
-    * ([[readFrom]] — tombstones applied, rekeys materialized into
-    * the rows) and the tombstone/rekey sidecar relations are
-    * dropped, so the compacted store is relation-identical to one
-    * built without the deleted docs. With no deletes the fold is
+    * (tombstones applied, rekeys materialized into the rows) and the
+    * tombstone/rekey sidecar relations are dropped, so the compacted
+    * store is relation-identical to one built without the deleted
+    * docs. With no deletes the fold is
     * the plain per-delta union it always was. Bands and shingles
     * re-cluster on their join keys so candidate generation and the
     * pair-driven verify recover row-group locality after many small
     * ingests. Serving is identical before and after by
     * construction. */
   def compactDeltas(spark: SparkSession, path: String): Unit =
-    DeltaStore.compact(spark, path) { (deltas, staging) =>
-      def live(sub: String) = readFrom(spark, deltas, sub)
-      // six INDEPENDENT relation rewrites — submitted concurrently
-      // (guide §2.6) so one rewrite's straggler tail back-fills with
-      // the next's tasks instead of serializing six job chains
-      graft.Jobs.inParallel(Seq(
-        () => live("members").write.parquet(s"$staging/members"),
-        () => live("reps").write.parquet(s"$staging/reps"),
-        () => live("bands").repartition(col("band"), col("bkey"))
-          .sortWithinPartitions("band", "bkey")
-          .write.parquet(s"$staging/bands"),
-        () => live("shingles").repartition(col("doc_id"))
-          .sortWithinPartitions("doc_id", "sh")
-          .write.parquet(s"$staging/shingles"),
-        () => live("cands").write.parquet(s"$staging/cands"),
-        () => live("pairs").write.parquet(s"$staging/pairs")))
-    }
+    Store.compact(spark, path)
 
   /** SHARD MERGE — the pair-substrate member of the merge family
     * ([[Bm25Index.mergeStores]] / [[AnnIndex.mergeStores]]): fold two
@@ -338,37 +278,14 @@ object DedupStore {
     require(dA.nonEmpty, s"no committed deltas under $pathA")
     val dB = DeltaStore.committedDeltas(spark, pathB)
     require(dB.nonEmpty, s"no committed deltas under $pathB")
-    val memA = readFrom(spark, dA, "members").cutLineage()
-    val memB = readFrom(spark, dB, "members").cutLineage()
-    // two independent guard aggregations — overlapped (guide §2.6);
-    // Thread.join orders the writes before the reads below. Each side
-    // also carries its min/max + uniqueness counts so the merged
-    // store's id-range sidecar and duplicate check derive HERE instead
-    // of a third members-union aggregation barrier: the monotone gate
-    // makes the sides disjoint, so per-side uniqueness IS union
-    // uniqueness, min(union) = min(A), max(union) = max(B) — exactly
-    // what DeltaStore.batchRange(members) re-derived (remapping only
-    // renames reps, never doc_ids).
-    val hilo = new Array[org.apache.spark.sql.Row](2)
-    graft.Jobs.inParallel(Seq(
-      () => hilo(0) = memA.agg(max(col("doc_id")), min(col("doc_id")),
-        count(col("doc_id")), countDistinct(col("doc_id"))).collect()(0),
-      () => hilo(1) = memB.agg(min(col("doc_id")), max(col("doc_id")),
-        count(col("doc_id")), countDistinct(col("doc_id"))).collect()(0)))
-    val (hiA, loB) = (hilo(0), hilo(1))
-    Seq(("A", pathA, hilo(0)), ("B", pathB, hilo(1))).foreach { case (s, p, r) =>
-      require(r.getLong(2) == r.getLong(3),
-        s"shard $s ($p) holds ${r.getLong(2) - r.getLong(3)} duplicated " +
-          "doc_ids — committing the merge would double-count them")
-    }
-    require(!hiA.isNullAt(0) && !loB.isNullAt(0),
-      "shard merge requires two non-empty live stores")
-    require(hiA.getLong(0) < loB.getLong(0),
-      s"every live id in $pathA (max ${hiA.getLong(0)}) must sit below every " +
-        s"live id in $pathB (min ${loB.getLong(0)}) — the sharded form of the " +
-        "monotone-ingest contract; merge shards in id order")
-    val repsA = readFrom(spark, dA, "reps").cutLineage()
-    val repsB = readFrom(spark, dB, "reps").cutLineage()
+    def liveA(sub: String) = Store.live(spark, dA, sub)
+    def liveB(sub: String) = Store.live(spark, dB, sub)
+    val memA = liveA("members").cutLineage()
+    val memB = liveB("members").cutLineage()
+    // the id gate's two aggregations also yield the merged id range
+    val range = Store.mergeRange(memA, memB, pathA, pathB)
+    val repsA = liveA("reps").cutLineage()
+    val repsB = liveB("reps").cutLineage()
     // exact unification: one hash join of two rep-scaled relations.
     // NULL-SAFE (`<=>`) BY DESIGN: h = md5(text) is NULL exactly for
     // null-text docs, and update() groups those into ONE store group
@@ -385,39 +302,31 @@ object DedupStore {
         col("bh") <=> col("ah"))
       .select(col("old_rep"), col("new_rep"))
       .cutLineage()
-    val members = memA.unionByName(remapCol(memB, "rep", matched))
+    val memBnew = Store.remap(memB, "rep", matched)
     val repsBnew = repsB
       .join(matched.select(col("old_rep").as("rep")), Seq("rep"), "left_anti")
       .cutLineage()
     val reps = repsA.unionByName(repsBnew)
-    val bandsA = readFrom(spark, dA, "bands").cutLineage()
-    val bandsBnew = readFrom(spark, dB, "bands")
+    val bandsA = liveA("bands").cutLineage()
+    val bandsBnew = liveB("bands")
       .join(repsBnew.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
       .cutLineage()
-    val shinglesA = readFrom(spark, dA, "shingles")
-    val shinglesBnew = readFrom(spark, dB, "shingles")
+    val shinglesA = liveA("shingles")
+    val shinglesBnew = liveB("shingles")
       .join(repsBnew.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
     val allSh = shinglesA.unionByName(shinglesBnew).cutLineage()
     // staged candidates rename through the adoption map; the rekey
     // can shrink an id, so the canonical order is restored
-    val candsB2 = remapCol(remapCol(readFrom(spark, dB, "cands"),
-        "doc_a", matched), "doc_b", matched)
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
+    val candsB2 = Store.remapPairs(liveB("cands"), "cands", matched)
     val cross = bandsBnew.as("b").join(bandsA.as("a"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey"))
       .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
       .distinct()
-    val cands = readFrom(spark, dA, "cands")
+    val cands = liveA("cands")
       .unionByName(candsB2).unionByName(cross).distinct().cutLineage()
-    val pairsA = readFrom(spark, dA, "pairs")
-    val pb = remapCol(remapCol(readFrom(spark, dB, "pairs"),
-      "doc_a", matched), "doc_b", matched)
-    val pairsB2 = pb.select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-      greatest(col("doc_a"), col("doc_b")).as("doc_b"), col("inter"),
-      when(col("doc_a") <= col("doc_b"), col("na")).otherwise(col("nb")).as("na"),
-      when(col("doc_a") <= col("doc_b"), col("nb")).otherwise(col("na")).as("nb"))
+    val pairsA = liveA("pairs")
+    val pairsB2 = Store.remapPairs(liveB("pairs"), "pairs", matched)
     val known = pairsA.select("doc_a", "doc_b")
       .unionByName(pairsB2.select("doc_a", "doc_b"))
     // single consumer (statsNew) — a cut here would be pure
@@ -435,206 +344,29 @@ object DedupStore {
       .join(allSizes.select(col("rep").as("doc_b"), col("n_sh").as("nb")), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"), col("inter"), col("na"), col("nb"))
     val pairs = pairsA.unionByName(pairsB2).unionByName(statsNew).distinct()
-    // id-range sidecar from the guard aggregations above (min(union) =
-    // min(A), max(union) = max(B) under the monotone gate) — the
-    // members-union batchRange this replaced was a third sequential
-    // aggregation barrier re-deriving exactly these numbers
-    val range = Some((hilo(0).getLong(1), hilo(1).getLong(1)))
-    // FILE-LEVEL COPY-THROUGH (guide §6): when shard A's live view is
-    // the plain per-delta union (no delete deltas), its members /
-    // reps / bands / shingles rows pass through the merge VERBATIM —
-    // no rekey ever touches the A side (adoption renames B-side rows
-    // only) — so those four relations stage as byte copies of A's
-    // files plus a Spark write of just the B-new rows, instead of a
-    // full decode + shuffle + re-encode of the union. Relation
-    // identity is untouched (a parquet relation is the union of its
-    // files; spec-gated set-wise against the full rebuild); the one
-    // physical difference is that bands keep per-shard (band, bkey)
-    // clustering instead of re-clustering across the boundary — the
-    // shards' own build-time layout, restored by the next compaction;
-    // shingles/members lose nothing (doc ranges are disjoint by the
-    // monotone gate, so per-shard doc_id clustering IS the union's).
-    // cands/pairs always rewrite: their unions dedup via distinct()
-    // across sides, which no file copy can express. A delete delta on
-    // A falls back to the full rewrite of all six (B never needs the
-    // gate: its relations are filtered/renamed through Spark anyway).
-    val aPlain = havingSub(spark, dA, "tombstones").isEmpty
-    DeltaStore.reset(spark, dest)
-    DeltaStore.commit(spark, dest, "00000", range) { staging =>
-      // INDEPENDENT staged writes + file copies — submitted
-      // concurrently (guide §2.6): serialized, the merge's wall time
-      // is the SUM of the write chains (measured ~70 sequential
-      // 1-task stages at bench SF; at 100 TB the straggler tails run
-      // back-to-back); overlapped, it is the longest chain, and
-      // shared upstream cuts (matched, repsBnew, bandsBnew, allSh,
-      // cands) materialize once under whichever consumer gets there
-      // first
-      val rewriteAll: Seq[() => Unit] = Seq(
-        () => members.write.mode(SaveMode.Overwrite).parquet(s"$staging/members"),
-        () => reps.write.mode(SaveMode.Overwrite).parquet(s"$staging/reps"),
-        () => bandsA.unionByName(bandsBnew)
-          .repartition(col("band"), col("bkey"))
-          .sortWithinPartitions("band", "bkey")
-          .write.mode(SaveMode.Overwrite).parquet(s"$staging/bands"),
-        () => allSh.repartition(col("doc_id"))
-          .sortWithinPartitions("doc_id", "sh")
-          .write.mode(SaveMode.Overwrite).parquet(s"$staging/shingles"))
-      val copyThrough: Seq[() => Unit] = Seq(
-        () => {
-          remapCol(memB, "rep", matched)
-            .select(memA.columns.map(col): _*)
-            .write.mode(SaveMode.Overwrite).parquet(s"$staging/members")
-          DeltaStore.copySubFiles(spark, dA, "members", staging, "a")
-        },
-        () => {
-          repsBnew.select(repsA.columns.map(col): _*)
-            .write.mode(SaveMode.Overwrite).parquet(s"$staging/reps")
-          DeltaStore.copySubFiles(spark, dA, "reps", staging, "a")
-        },
-        () => {
-          bandsBnew.repartition(col("band"), col("bkey"))
-            .sortWithinPartitions("band", "bkey")
-            .write.mode(SaveMode.Overwrite).parquet(s"$staging/bands")
-          DeltaStore.copySubFiles(spark, dA, "bands", staging, "a")
-        },
-        () => {
-          shinglesBnew.repartition(col("doc_id"))
-            .sortWithinPartitions("doc_id", "sh")
-            .write.mode(SaveMode.Overwrite).parquet(s"$staging/shingles")
-          DeltaStore.copySubFiles(spark, dA, "shingles", staging, "a")
-        })
-      graft.Jobs.inParallel(
-        (if (aPlain) copyThrough else rewriteAll) ++ Seq[() => Unit](
-          () => cands.write.mode(SaveMode.Overwrite).parquet(s"$staging/cands"),
-          () => pairs.write.mode(SaveMode.Overwrite).parquet(s"$staging/pairs")))
-    }
+    // members / reps / bands / shingles pass A's rows through the
+    // merge verbatim (no rekey ever touches the A side); shingles and
+    // members lose nothing under copy-through (doc ranges are
+    // disjoint by the id gate, so per-shard doc_id clustering IS the
+    // union's). cands/pairs always rewrite: their unions dedup via
+    // distinct() across sides, which no file copy can express.
+    Store.commitMerge(spark, dA, dest, range,
+      carried = Seq(
+        Carried("members", memA, memBnew, memA.unionByName(memBnew)),
+        Carried("reps", repsA, repsBnew, reps),
+        Carried("bands", bandsA, bandsBnew, bandsA.unionByName(bandsBnew)),
+        Carried("shingles", shinglesA, shinglesBnew, allSh)),
+      rewritten = Seq("cands" -> cands, "pairs" -> pairs))
   }
 
-  private def read(spark: SparkSession, path: String, sub: String): DataFrame = {
-    val deltas = DeltaStore.committedDeltas(spark, path)
-    require(deltas.nonEmpty, s"no committed deltas under $path")
-    readFrom(spark, deltas, sub)
-  }
+  def members(spark: SparkSession, path: String): DataFrame = Store.read(spark, path, "members")
+  def reps(spark: SparkSession, path: String): DataFrame = Store.read(spark, path, "reps")
+  def pairStats(spark: SparkSession, path: String): DataFrame = Store.read(spark, path, "pairs")
+  def candidates(spark: SparkSession, path: String): DataFrame = Store.read(spark, path, "cands")
 
-  /** The deltas (from `deltas`) that carry `sub` — update/compact
-    * deltas hold the six data relations, delete deltas hold only
-    * `tombstones`/`rekeys`, so every glob filters by existence
-    * (the [[Bm25Index]] readSub discipline). */
-  private def havingSub(spark: SparkSession, deltas: Seq[String],
-                        sub: String): Seq[String] = {
-    val fs = DeltaStore.fsOf(spark, deltas.head)
-    deltas.filter(d => fs.exists(new org.apache.hadoop.fs.Path(s"$d/$sub")))
-  }
-
-  /** The store's delete state across `deltas`: the tombstoned doc_id
-    * set and the RESOLVED rep rekey map (old_rep → final live rep).
-    * None when no delete delta exists — the common read path stays a
-    * plain union. A rekey chain (a re-elected rep later deleted
-    * itself) can only grow by one link per delete delta, so
-    * ceil(log2(#delete deltas)) self-composition (squaring) steps
-    * reach the fixpoint deterministically — no convergence probe. */
-  private def tombStateOf(spark: SparkSession,
-                          deltas: Seq[String]): Option[(DataFrame, DataFrame)] = {
-    val dd = havingSub(spark, deltas, "tombstones")
-    if (dd.isEmpty) None
-    else {
-      val t = DeltaStore.readRelation(spark, dd.map(d => s"$d/tombstones"))
-      var m = DeltaStore.readRelation(spark, dd.map(d => s"$d/rekeys"))
-      val steps = if (dd.size <= 1) 0
-        else 32 - Integer.numberOfLeadingZeros(dd.size - 1) // ceil(log2(n))
-      for (_ <- 0 until steps)
-        m = m.as("a")
-          .join(m.select(col("old_rep").as("o2"), col("new_rep").as("n2")),
-            col("a.new_rep") === col("o2"), "left")
-          .select(col("a.old_rep"),
-            coalesce(col("n2"), col("a.new_rep")).as("new_rep"))
-      Some((t, m))
-    }
-  }
-
-  /** Follow the resolved rekey map on one rep-reference column. */
-  private def remapCol(df: DataFrame, key: String, m: DataFrame): DataFrame =
-    df.join(m.withColumnRenamed("old_rep", key), Seq(key), "left")
-      .withColumn(key, coalesce(col("new_rep"), col(key)))
-      .drop("new_rep")
-
-  /** Drop rows whose `key` names a DEAD rep (group fully deleted). */
-  private def dropDead(df: DataFrame, key: String, dead: DataFrame): DataFrame =
-    df.join(dead.withColumnRenamed("doc_id", key), Seq(key), "left_anti")
-
-  /** One staged relation as the LIVE view over `deltas`: the plain
-    * per-delta union, minus tombstoned docs, with every rep
-    * reference re-keyed through the resolved rekey map and rows of
-    * fully-dead groups dropped. Copy symmetry is what makes the
-    * rekey a RENAME: the re-elected rep has the identical text,
-    * hence identical hash/shingle set/band keys/intersections — so
-    * the live view equals a rebuild on the surviving corpus
-    * relation-for-relation, and every consumer above this point is
-    * delete-aware for free. With no delete deltas this is exactly
-    * the pre-delete plain union (zero overhead). */
-  private def readFrom(spark: SparkSession, deltas: Seq[String],
-                       sub: String): DataFrame = {
-    val data = havingSub(spark, deltas, sub)
-    require(data.nonEmpty, s"store holds no '$sub' relation")
-    val base = DeltaStore.readRelation(spark, data.map(d => s"$d/$sub"))
-    tombStateOf(spark, deltas) match {
-      case None => base
-      case Some((t, m)) =>
-        // dead = tombstoned AND never re-keyed: the whole group died
-        val dead = t.join(m.select(col("old_rep").as("doc_id")),
-          Seq("doc_id"), "left_anti")
-        sub match {
-          case "members" =>
-            remapCol(base.join(t, Seq("doc_id"), "left_anti"), "rep", m)
-          case "reps" =>
-            dropDead(remapCol(base, "rep", m), "rep", dead)
-          case "bands" | "shingles" =>
-            dropDead(remapCol(base, "doc_id", m), "doc_id", dead)
-          case "cands" =>
-            val r = dropDead(dropDead(
-              remapCol(remapCol(base, "doc_a", m), "doc_b", m),
-              "doc_a", dead), "doc_b", dead)
-            // a rekey renames to a LARGER id (survivors outrank the
-            // deleted min), so the pair order can flip — restore it
-            r.select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-              greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-          case "pairs" =>
-            val r = dropDead(dropDead(
-              remapCol(remapCol(base, "doc_a", m), "doc_b", m),
-              "doc_a", dead), "doc_b", dead)
-            // order flip swaps WHICH side na/nb describe, too
-            r.select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-              greatest(col("doc_a"), col("doc_b")).as("doc_b"),
-              col("inter"),
-              when(col("doc_a") <= col("doc_b"), col("na"))
-                .otherwise(col("nb")).as("na"),
-              when(col("doc_a") <= col("doc_b"), col("nb"))
-                .otherwise(col("na")).as("nb"))
-        }
-    }
-  }
-
-  def members(spark: SparkSession, path: String): DataFrame = read(spark, path, "members")
-  def reps(spark: SparkSession, path: String): DataFrame = read(spark, path, "reps")
-  def pairStats(spark: SparkSession, path: String): DataFrame = read(spark, path, "pairs")
-  def candidates(spark: SparkSession, path: String): DataFrame = read(spark, path, "cands")
-
-  /** Members with their group size — derived, never stored (the
-    * append-only contract): one rep-keyed aggregation + join. */
+  /** Members with their group size (derived, never stored). */
   private def membersWithM(spark: SparkSession, path: String): DataFrame =
-    membersWithMOf(members(spark, path))
-
-  private def membersWithMOf(mem: DataFrame): DataFrame =
-    mem.join(mem.groupBy("rep").agg(count(lit(1)).as("m")), Seq("rep"))
-      .select("doc_id", "rep", "m")
-
-  /** The committed deltas visible AS OF version `maxTag` (tag sorts
-    * ≤ maxTag) — the [[AnnIndex.searchTopKAt]] retention contract:
-    * compaction collapses folded history, so travel reaches only
-    * versions newer than the last compaction. */
-  private def deltasAt(spark: SparkSession, path: String,
-                       maxTag: String): Seq[String] =
-    DeltaStore.visibleAt(spark, path, maxTag) // numeric-tag contract
+    Store.withGroupSize(members(spark, path))
 
   /** Same S-curve sanity gate as [[Dedup.verifiedNearDups]]: the staged
     * banding's candidate recall must cover the requested threshold. */
@@ -673,7 +405,7 @@ object DedupStore {
     * corpus (the incremental contract applied to a delta prefix). */
   def verifiedNearDupsAt(spark: SparkSession, path: String, maxTag: String,
                          threshold: Double = 0.8): DataFrame =
-    verifiedFrom(spark, deltasAt(spark, path, maxTag), threshold)
+    verifiedFrom(spark, DeltaStore.visibleAt(spark, path, maxTag), threshold)
 
   /** (doc_a, doc_b, jaccard, change): SNAPSHOT DIFF of the verified
     * pair relation between two pinned versions — the review queue a
@@ -693,35 +425,27 @@ object DedupStore {
     * replays exactly that. */
   def diffVersions(spark: SparkSession, path: String,
                    tagA: String, tagB: String,
-                   threshold: Double = 0.8): DataFrame = {
-    val a = verifiedFrom(spark, deltasAt(spark, path, tagA), threshold)
-      .cutLineage()
-    val b = verifiedFrom(spark, deltasAt(spark, path, tagB), threshold)
-      .cutLineage()
-    val added = b.join(a.select("doc_a", "doc_b"),
-        Seq("doc_a", "doc_b"), "left_anti")
-      .withColumn("change", lit("added"))
-    val dropped = a.join(b.select("doc_a", "doc_b"),
-        Seq("doc_a", "doc_b"), "left_anti")
-      .withColumn("change", lit("dropped"))
-    added.unionByName(dropped)
-  }
+                   threshold: Double = 0.8): DataFrame =
+    RepGroupStore.pairDiff(
+      verifiedFrom(spark, DeltaStore.visibleAt(spark, path, tagA), threshold),
+      verifiedFrom(spark, DeltaStore.visibleAt(spark, path, tagB), threshold),
+      Seq("doc_a", "doc_b"))
 
   private def verifiedFrom(spark: SparkSession, deltas: Seq[String],
                            threshold: Double): DataFrame = {
     requireThreshold(threshold)
-    val repPairs = readFrom(spark, deltas, "pairs")
+    val repPairs = Store.live(spark, deltas, "pairs")
       .withColumn("j_exact",
         col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .filter(col("j_exact") >= threshold)
       .select(col("doc_a"), col("doc_b"), round(col("j_exact"), 4).as("jaccard"))
-    val mem = membersWithMOf(readFrom(spark, deltas, "members"))
+    val mem = Store.withGroupSize(Store.live(spark, deltas, "members"))
     val ma = mem.select(col("rep").as("doc_a"), col("doc_id").as("a"))
     val mb = mem.select(col("rep").as("doc_b"), col("doc_id").as("b"))
     val cross = repPairs.join(ma, "doc_a").join(mb, "doc_b")
       .select(least(col("a"), col("b")).as("doc_a"),
         greatest(col("a"), col("b")).as("doc_b"), col("jaccard"))
-    val shingleableReps = readFrom(spark, deltas, "reps")
+    val shingleableReps = Store.live(spark, deltas, "reps")
       .filter(col("shingleable")).select("rep")
     val memA = mem.filter(col("m") >= 2).join(shingleableReps, "rep")
       .select(col("rep"), col("doc_id").as("a"))

@@ -67,7 +67,7 @@ object PqIndex {
         .write.mode(SaveMode.Overwrite).parquet(s"$staging/codes")
       Ann.withNorm(embeddings)
         .write.mode(SaveMode.Overwrite).parquet(s"$staging/vectors")
-      writeParams(spark, staging, s"pq,$m,$ksub,$dim")
+      DeltaStore.writeSidecar(spark, staging, "pq.params", s"pq,$m,$ksub,$dim")
     }
   }
 
@@ -91,16 +91,10 @@ object PqIndex {
     require(dim == dimStored,
       s"batch dim $dim != stored dim $dimStored — not the same vector space")
     val deltas = DeltaStore.committedDeltas(spark, path)
-    val (batchEmpty, batchLo, batchHi) = DeltaStore.batchRange(newEmbeddings, "vec_id")
-    if (!batchEmpty) {
-      val fs = DeltaStore.fsOf(spark, path)
-      // tombstone-only deltas carry no codes; a deleted id stays
-      // reserved until compaction purges it (the Bm25Index contract)
-      val candidates = DeltaStore.overlappingDeltas(fs, deltas, batchLo, batchHi)
-        .filter(d => fs.exists(new org.apache.hadoop.fs.Path(s"$d/codes")))
-      DeltaStore.rejectDuplicateIds(spark, candidates,
-        "codes", "vec_id", newEmbeddings, "PQ index")
-    }
+    val br @ (_, batchLo, batchHi) = DeltaStore.batchRange(newEmbeddings, "vec_id")
+    // tombstone-only deltas carry no codes; a deleted id stays
+    // reserved until compaction purges it (the Bm25Index contract)
+    DeltaStore.rejectDuplicateIds(spark, deltas, "codes", "vec_id", newEmbeddings, br, "PQ index")
     val mv = Ann.millisVecs(newEmbeddings)
     val range = if (batchLo <= batchHi) Some((batchLo, batchHi)) else None
     DeltaStore.commit(spark, path, tag, range) { staging =>
@@ -129,61 +123,14 @@ object PqIndex {
     if (DeltaStore.isCommitted(spark, path, tag)) return // replayed batch
     val deltas = DeltaStore.committedDeltas(spark, path)
     require(deltas.nonEmpty, s"no committed deltas under $path")
-    val fs = DeltaStore.fsOf(spark, path)
-    val kind = {
-      val builds = deltas.filter(d =>
-        fs.exists(new org.apache.hadoop.fs.Path(d, "pq.params")))
-      require(builds.size == 1, s"expected exactly one build delta, found ${builds.size}")
-      val in = fs.open(new org.apache.hadoop.fs.Path(builds.head, "pq.params"))
-      (try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-       finally in.close()).split(",")(0)
-    }
+    val kind = buildDelta(spark, deltas, path)._2.split(",")(0)
     require(kind == "pq" || kind == "ivfpq",
       s"tombstone delete supports the ingesting stores (pq/ivfpq); '$kind' is " +
         "a single-delta build — rebuild it without the vectors instead")
     val ids = vecIds.select(col("vec_id")).distinct().cutLineage()
-    // batch-scaled liveness check: presence range-prunes via the
-    // id-range sidecars (the rejectDuplicateIds discipline), the
-    // tombstone side is delete-scaled by nature
-    val (bEmpty, lo, hi) = DeltaStore.batchRange(ids, "vec_id")
-    if (!bEmpty) {
-      val candidates = DeltaStore.overlappingDeltas(fs, deltas, lo, hi)
-        .filter(d => fs.exists(new org.apache.hadoop.fs.Path(s"$d/vectors")))
-      val present =
-        if (candidates.isEmpty) ids.limit(0)
-        else ids.join(DeltaStore.readRelation(spark, candidates.map(d => s"$d/vectors"))
-          .select("vec_id"), Seq("vec_id"), "left_semi")
-      val live = liveSub(spark, deltas, "tombstones") match {
-        case None => present
-        case Some(ts) => present.join(ts.select("vec_id"), Seq("vec_id"), "left_anti")
-      }
-      val nMissing = ids.join(live, Seq("vec_id"), "left_anti").count()
-      require(nMissing == 0,
-        s"delete batch names $nMissing vec_ids that are not live in the store " +
-          "(absent or already tombstoned) — refusing a partially-effective delete")
-    }
+    DeltaStore.requireLive(spark, deltas, ids, "vec_id", "vectors")
     DeltaStore.commit(spark, path, tag, None) { staging =>
       ids.write.mode(SaveMode.Overwrite).parquet(s"$staging/tombstones")
-    }
-  }
-
-  /** Read one sub-relation across the deltas that HAVE it (delete
-    * deltas carry only `tombstones`), tombstone-filtered. */
-  private def liveSub(spark: SparkSession, deltas: Seq[String],
-                      sub: String): Option[DataFrame] = {
-    val fs = DeltaStore.fsOf(spark, deltas.head)
-    def raw(s: String): Option[DataFrame] = {
-      val present = deltas.filter(d =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$d/$s")))
-      if (present.isEmpty) None
-      else Some(DeltaStore.readRelation(spark, present.map(d => s"$d/$s")))
-    }
-    val rel = raw(sub)
-    if (sub == "tombstones") rel
-    else (rel, raw("tombstones")) match {
-      case (Some(r), Some(ts)) =>
-        Some(r.join(ts.select("vec_id"), Seq("vec_id"), "left_anti"))
-      case _ => rel
     }
   }
 
@@ -209,7 +156,7 @@ object PqIndex {
         .write.mode(SaveMode.Overwrite).parquet(s"$staging/codes")
       Ann.withNorm(embeddings)
         .write.mode(SaveMode.Overwrite).parquet(s"$staging/vectors")
-      writeParams(spark, staging, s"ivfpq,$nLists,$m,$ksub,$dim")
+      DeltaStore.writeSidecar(spark, staging, "pq.params", s"ivfpq,$nLists,$m,$ksub,$dim")
     }
   }
 
@@ -236,7 +183,7 @@ object PqIndex {
         .write.mode(SaveMode.Overwrite).parquet(s"$staging/lists")
       Ann.withNorm(embeddings)
         .write.mode(SaveMode.Overwrite).parquet(s"$staging/vectors")
-      writeParams(spark, staging, s"ivf,$nLists,$dim")
+      DeltaStore.writeSidecar(spark, staging, "pq.params", s"ivf,$nLists,$dim")
     }
   }
 
@@ -484,23 +431,19 @@ object PqIndex {
     * from the unique build delta VERBATIM — compaction must never
     * touch what queries were trained against; codes and vectors
     * union across deltas. */
-  def compactDeltas(spark: SparkSession, path: String): Unit = {
-    val fs = DeltaStore.fsOf(spark, path)
+  def compactDeltas(spark: SparkSession, path: String): Unit =
     DeltaStore.compact(spark, path) { (deltas, staging) =>
-      val builds = deltas.filter(d =>
-        fs.exists(new org.apache.hadoop.fs.Path(d, "pq.params")))
-      require(builds.size == 1,
-        s"expected exactly one build delta among ${deltas.size}, found ${builds.size}")
-      val b = builds.head
+      val (b, params) = buildDelta(spark, deltas, path)
       def carryIfPresent(sub: String): Unit =
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$b/$sub")))
-          DeltaStore.readRelation(spark, Seq(s"$b/$sub")).coalesce(1).write.parquet(s"$staging/$sub")
+        DeltaStore.readSub(spark, Seq(b), sub)
+          .foreach(_.coalesce(1).write.parquet(s"$staging/$sub"))
       // PHYSICAL PURGE: every id-carrying relation folds live-only
       // (tombstones are not carried — the compacted store equals one
       // whose deleted vectors were never ingested; purged ids are free
       // for re-ingest again)
       def unionAll(sub: String): Unit =
-        liveSub(spark, deltas, sub).foreach(_.write.parquet(s"$staging/$sub"))
+        DeltaStore.liveSub(spark, deltas, sub, "vec_id")
+          .foreach(_.write.parquet(s"$staging/$sub"))
       // codebooks carry if-present like centers: a flat-IVF build
       // (centers/lists/vectors, no fine quantizer) compacts too.
       // All five staged writes are independent — overlap them
@@ -511,12 +454,8 @@ object PqIndex {
         () => unionAll("codes"),
         () => unionAll("lists"),
         () => unionAll("vectors")))
-      val in = fs.open(new org.apache.hadoop.fs.Path(b, "pq.params"))
-      val params = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                   finally in.close()
-      writeParams(spark, staging, params)
+      DeltaStore.writeSidecar(spark, staging, "pq.params", params)
     }
-  }
 
   // ---- store plumbing ----
 
@@ -549,13 +488,6 @@ object PqIndex {
     DeltaStore.readRelation(spark, Seq(s"$delta/centers")).select("list_id", "center").collect()
       .sortBy(_.getInt(0)).map(_.getSeq[Long](1).toArray)
 
-  private def writeParams(spark: SparkSession, staging: String,
-                          params: String): Unit = {
-    val fs = DeltaStore.fsOf(spark, staging)
-    val out = fs.create(new org.apache.hadoop.fs.Path(staging, "pq.params"), true)
-    try out.write(params.getBytes("UTF-8")) finally out.close()
-  }
-
   /** The BUILD delta — the unique delta carrying the pq.params
     * sidecar and the trained state (build resets the store, so there
     * is exactly one); update deltas carry codes/vectors only. Kind is
@@ -574,6 +506,16 @@ object PqIndex {
     * must fail loudly, never fall back to the live trained state. */
   private def buildDeltaIn(spark: SparkSession, deltas: Seq[String],
                            path: String, expectKind: String): String = {
+    val (d, params) = buildDelta(spark, deltas, path)
+    val kind = params.split(",")(0)
+    require(kind == expectKind, s"store at $path is '$kind', expected '$expectKind'")
+    d
+  }
+
+  /** (build delta, its pq.params) — the unique delta of `deltas`
+    * carrying the sidecar. */
+  private def buildDelta(spark: SparkSession, deltas: Seq[String],
+                         path: String): (String, String) = {
     require(deltas.nonEmpty, s"no committed deltas under $path")
     val fs = DeltaStore.fsOf(spark, path)
     val withParams = deltas.filter(d =>
@@ -585,14 +527,7 @@ object PqIndex {
         "snapshot pinned BELOW the build version: codebooks are trained " +
         "state committed with the build, and a pinned read must serve " +
         "codes and codebooks from the same visible set")
-    val d = withParams.head
-    val pp = new org.apache.hadoop.fs.Path(d, "pq.params")
-    val in = fs.open(pp)
-    val params = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                 finally in.close()
-    val kind = params.split(",")(0)
-    require(kind == expectKind, s"store at $path is '$kind', expected '$expectKind'")
-    d
+    (withParams.head, DeltaStore.readSidecar(fs, withParams.head, "pq.params").get)
   }
 
   /** Load the trained PQ state from the BUILD delta (bounded collects:
@@ -619,11 +554,8 @@ object PqIndex {
     cbRows.foreach(r => codebooks(r.getInt(0))(r.getInt(1)) = r.getSeq[Long](2).toArray)
     val centers: Array[Array[Long]] =
       if (expectKind == "ivfpq") readCentersLong(spark, d) else Array.empty
-    (codebooks, centers,
-      liveSub(spark, deltas, "vectors")
-        .getOrElse(throw new IllegalStateException("store holds no vectors")),
-      liveSub(spark, deltas, "codes")
-        .getOrElse(throw new IllegalStateException("store holds no codes")))
+    val (vectors, codes) = DeltaStore.livePair(spark, deltas, "vec_id", "vectors", "codes")
+    (codebooks, centers, vectors, codes)
   }
 
   private def queryVec(vectors: DataFrame, queryId: Long): Array[Double] =

@@ -53,7 +53,16 @@ import graft.Lineage._
   */
 object SemanticStore {
 
-  import graft.sources.DeltaStore
+  import graft.sources.{DeltaStore, RepGroupStore}
+  import graft.sources.RepGroupStore._
+
+  /** The rep-group protocol over this store's four relations (the
+    * [[DedupStore]] protocol on the embedding side). */
+  private[graft] val Store = RepGroupStore("vec_id", "semantic substrate", Seq(
+    "members" -> Members,
+    "reps" -> Reps,
+    "buckets" -> IdKeyed(Seq("t", "bucket"), Seq("t", "bucket")),
+    "pairs" -> Pair("vec_a", "vec_b")))
 
   /** Build configuration: the engine's wired semantic-dedup defaults
     * ([[Clustering.semanticClusters]] / [[Ann.lshCosinePairs]]). */
@@ -81,33 +90,14 @@ object SemanticStore {
     val spark = newEmb.sparkSession
     if (DeltaStore.isCommitted(spark, path, tag)) return // replayed batch
     val deltas = DeltaStore.committedDeltas(spark, path)
-    val (batchEmpty, batchLo, batchHi) = DeltaStore.batchRange(newEmb, "vec_id")
-    if (deltas.nonEmpty && !batchEmpty) {
-      // RAW members for both checks (a tombstoned id stays USED until
-      // compaction purges it); delete deltas carry no members/ranges
-      val dataDeltas = havingSub(spark, deltas, "members")
-      DeltaStore.rejectDuplicateIds(spark,
-        DeltaStore.overlappingDeltas(DeltaStore.fsOf(spark, path), dataDeltas, batchLo, batchHi),
-        "members", "vec_id", newEmb, "semantic substrate")
-      val fs = DeltaStore.fsOf(spark, path)
-      val ranges = dataDeltas.map(d => DeltaStore.readRange(fs, d))
-      val maxExisting: Option[Long] =
-        if (ranges.forall(_.isDefined)) Some(ranges.flatten.map(_._2).max)
-        else {
-          val r = DeltaStore.readRelation(spark, dataDeltas.map(d => s"$d/members"))
-            .agg(max(col("vec_id"))).collect()(0)
-          if (r.isNullAt(0)) None else Some(r.getLong(0))
-        }
-      maxExisting.foreach(hi => require(batchLo > hi,
-        s"batch vec_ids start at $batchLo but the store already holds ids up to " +
-          s"$hi — the append-only substrate requires monotone ingest; rebuild instead"))
-    }
+    val br @ (_, batchLo, batchHi) = DeltaStore.batchRange(newEmb, "vec_id")
+    Store.admitBatch(spark, path, deltas, newEmb, br)
     val empty = deltas.isEmpty
     // matching/bucketing reads the LIVE view: a fully-deleted value
     // group must match nothing, a rekeyed group hands out its CURRENT
     // rep, dead reps' buckets spawn no candidates
     def existing(sub: String): Option[DataFrame] =
-      if (empty) None else Some(readFrom(spark, deltas, sub))
+      if (empty) None else Some(Store.live(spark, deltas, sub))
 
     // nonzero-vector view with the byte-identity value key; reused by
     // the group match and the new-rep extraction
@@ -192,39 +182,13 @@ object SemanticStore {
     * rep as one (old_rep, new_rep) row. Value identity makes the
     * rekey a pure rename (identical vector ⇒ identical value key,
     * buckets, cosines, selfcos); the serve-side live view
-    * ([[readFrom]]) renames and drops, so every consumer is
-    * delete-aware immediately. O(group) delta; idempotent per `tag`;
-    * every id must be LIVE (fail-loud, never half-applied); deleted
-    * ids stay reserved until [[compactDeltas]] purges them. */
-  def delete(vecIds: DataFrame, path: String, tag: String): Unit = {
-    val spark = vecIds.sparkSession
-    if (DeltaStore.isCommitted(spark, path, tag)) return // replayed batch
-    val deltas = DeltaStore.committedDeltas(spark, path)
-    require(deltas.nonEmpty, s"no committed deltas under $path")
-    val ids = vecIds.select(col("vec_id")).distinct().cutLineage()
-    val mem = readFrom(spark, deltas, "members")
-    val nMissing = ids.join(mem.select("vec_id"), Seq("vec_id"), "left_anti").count()
-    require(nMissing == 0,
-      s"delete batch names $nMissing vec_ids that are not live in the store " +
-        "(absent, zero-norm/null at ingest, or already deleted) — refusing " +
-        "a partially-effective delete")
-    val flagged = mem
-      .join(ids.withColumn("del", lit(true)), Seq("vec_id"), "left")
-      .select(col("vec_id"), col("rep"), coalesce(col("del"), lit(false)).as("del"))
-    val touched = flagged
-      .join(flagged.filter(col("del")).select("rep").distinct(), Seq("rep"), "left_semi")
-    val rekeys = touched.groupBy("rep")
-      .agg(min(when(!col("del"), col("vec_id"))).as("new_rep"),
-        max(when(col("del") && col("vec_id") === col("rep"), 1).otherwise(0)).as("rep_del"))
-      .filter(col("rep_del") === 1 && col("new_rep").isNotNull)
-      .select(col("rep").as("old_rep"), col("new_rep"))
-    DeltaStore.commit(spark, path, tag, None) { staging =>
-      // independent staged writes — overlap them (guide §2.6)
-      graft.Jobs.inParallel(Seq(
-        () => ids.write.mode(SaveMode.Overwrite).parquet(s"$staging/tombstones"),
-        () => rekeys.write.mode(SaveMode.Overwrite).parquet(s"$staging/rekeys")))
-    }
-  }
+    * ([[graft.sources.RepGroupStore.live]]) renames and drops, so
+    * every consumer is delete-aware immediately. O(group) delta;
+    * idempotent per `tag`; every id must be LIVE (fail-loud, never
+    * half-applied); deleted ids stay reserved until [[compactDeltas]]
+    * purges them. */
+  def delete(vecIds: DataFrame, path: String, tag: String): Unit =
+    Store.delete(vecIds, path, tag)
 
   /** Fold all committed deltas into ONE delta — the same small-files
     * maintenance leg as [[DedupStore.compactDeltas]] (crash-atomic
@@ -236,18 +200,7 @@ object SemanticStore {
     * always was. Buckets re-cluster on (t, bucket) — the candidate
     * join's key — to recover locality after many small ingests. */
   def compactDeltas(spark: SparkSession, path: String): Unit =
-    DeltaStore.compact(spark, path) { (deltas, staging) =>
-      def live(sub: String) = readFrom(spark, deltas, sub)
-      // four INDEPENDENT relation rewrites — submitted concurrently
-      // (guide §2.6, the DedupStore.compactDeltas discipline)
-      graft.Jobs.inParallel(Seq(
-        () => live("members").write.parquet(s"$staging/members"),
-        () => live("reps").write.parquet(s"$staging/reps"),
-        () => live("buckets").repartition(col("t"), col("bucket"))
-          .sortWithinPartitions("t", "bucket")
-          .write.parquet(s"$staging/buckets"),
-        () => live("pairs").write.parquet(s"$staging/pairs")))
-    }
+    Store.compact(spark, path)
 
   /** SHARD MERGE — [[DedupStore.mergeStores]] on the embedding side,
     * completing the merge family across all three stateful substrate
@@ -269,34 +222,14 @@ object SemanticStore {
     require(dA.nonEmpty, s"no committed deltas under $pathA")
     val dB = DeltaStore.committedDeltas(spark, pathB)
     require(dB.nonEmpty, s"no committed deltas under $pathB")
-    val memA = readFrom(spark, dA, "members").cutLineage()
-    val memB = readFrom(spark, dB, "members").cutLineage()
-    // two independent guard aggregations — overlapped (guide §2.6);
-    // Thread.join orders the writes before the reads below. Each side
-    // also carries its min/max + uniqueness counts so the merged
-    // store's id-range sidecar and duplicate check derive HERE instead
-    // of a third members-union aggregation barrier (see
-    // DedupStore.mergeStores — same monotone-gate argument).
-    val hilo = new Array[org.apache.spark.sql.Row](2)
-    graft.Jobs.inParallel(Seq(
-      () => hilo(0) = memA.agg(max(col("vec_id")), min(col("vec_id")),
-        count(col("vec_id")), countDistinct(col("vec_id"))).collect()(0),
-      () => hilo(1) = memB.agg(min(col("vec_id")), max(col("vec_id")),
-        count(col("vec_id")), countDistinct(col("vec_id"))).collect()(0)))
-    val (hiA, loB) = (hilo(0), hilo(1))
-    Seq(("A", pathA, hilo(0)), ("B", pathB, hilo(1))).foreach { case (s, p, r) =>
-      require(r.getLong(2) == r.getLong(3),
-        s"shard $s ($p) holds ${r.getLong(2) - r.getLong(3)} duplicated " +
-          "vec_ids — committing the merge would double-count them")
-    }
-    require(!hiA.isNullAt(0) && !loB.isNullAt(0),
-      "shard merge requires two non-empty live stores")
-    require(hiA.getLong(0) < loB.getLong(0),
-      s"every live id in $pathA (max ${hiA.getLong(0)}) must sit below every " +
-        s"live id in $pathB (min ${loB.getLong(0)}) — the sharded form of the " +
-        "monotone-ingest contract; merge shards in id order")
-    val repsA = readFrom(spark, dA, "reps").cutLineage()
-    val repsB = readFrom(spark, dB, "reps").cutLineage()
+    def liveA(sub: String) = Store.live(spark, dA, sub)
+    def liveB(sub: String) = Store.live(spark, dB, sub)
+    val memA = liveA("members").cutLineage()
+    val memB = liveB("members").cutLineage()
+    // the id gate's two aggregations also yield the merged id range
+    val range = Store.mergeRange(memA, memB, pathA, pathB)
+    val repsA = liveA("reps").cutLineage()
+    val repsB = liveB("reps").cutLineage()
     // plain `===` matches update()'s own equality (lines above: its
     // old-rep match and member join both use `===`): vk =
     // md5(to_json(v)) is non-null for every staged rep (update drops
@@ -310,20 +243,17 @@ object SemanticStore {
         col("bk") === col("ak"))
       .select(col("old_rep"), col("new_rep"))
       .cutLineage()
-    val members = memA.unionByName(remapCol(memB, "rep", matched))
+    val memBnew = Store.remap(memB, "rep", matched)
     val repsBnew = repsB
       .join(matched.select(col("old_rep").as("rep")), Seq("rep"), "left_anti")
       .cutLineage()
     val reps = repsA.unionByName(repsBnew)
-    val bucketsA = readFrom(spark, dA, "buckets").cutLineage()
-    val bucketsBnew = readFrom(spark, dB, "buckets")
+    val bucketsA = liveA("buckets").cutLineage()
+    val bucketsBnew = liveB("buckets")
       .join(repsBnew.select(col("rep").as("vec_id")), Seq("vec_id"), "left_semi")
       .cutLineage()
-    val pairsA = readFrom(spark, dA, "pairs")
-    val pairsB2 = remapCol(remapCol(readFrom(spark, dB, "pairs"),
-        "vec_a", matched), "vec_b", matched)
-      .select(least(col("vec_a"), col("vec_b")).as("vec_a"),
-        greatest(col("vec_a"), col("vec_b")).as("vec_b"), col("cos"))
+    val pairsA = liveA("pairs")
+    val pairsB2 = Store.remapPairs(liveB("pairs"), "pairs", matched)
     val cross = bucketsBnew.as("b").join(bucketsA.as("a"),
         col("a.t") === col("b.t") && col("a.bucket") === col("b.bucket"))
       .select(least(col("a.vec_id"), col("b.vec_id")).as("vec_a"),
@@ -347,153 +277,20 @@ object SemanticStore {
       .filter(col("c_exact") >= Threshold)
       .select(col("vec_a"), col("vec_b"), round(col("c_exact"), 4).as("cos"))
     val pairs = pairsA.unionByName(pairsB2).unionByName(statsNew).distinct()
-    // id-range sidecar from the guard aggregations above (min(union) =
-    // min(A), max(union) = max(B) under the monotone gate) — replaces
-    // the members-union batchRange barrier
-    val range = Some((hilo(0).getLong(1), hilo(1).getLong(1)))
-    // FILE-LEVEL COPY-THROUGH when shard A's live view is the plain
-    // union (no delete deltas): A's members/reps/buckets pass through
-    // the merge verbatim (adoption renames B-side rows only), so they
-    // stage as byte copies of A's files + a Spark write of the B-new
-    // rows — see DedupStore.mergeStores for the full rationale and
-    // the clustering note. pairs always rewrite (cross-side distinct).
-    val aPlain = havingSub(spark, dA, "tombstones").isEmpty
-    DeltaStore.reset(spark, dest)
-    DeltaStore.commit(spark, dest, "00000", range) { staging =>
-      // INDEPENDENT staged writes + copies — submitted concurrently
-      // (guide §2.6); shared upstream cuts (matched, repsBnew,
-      // bucketsBnew) materialize once under whichever consumer gets
-      // there first
-      val rewriteAll: Seq[() => Unit] = Seq(
-        () => members.write.mode(SaveMode.Overwrite).parquet(s"$staging/members"),
-        () => reps.write.mode(SaveMode.Overwrite).parquet(s"$staging/reps"),
-        () => bucketsA.unionByName(bucketsBnew)
-          .repartition(col("t"), col("bucket"))
-          .sortWithinPartitions("t", "bucket")
-          .write.mode(SaveMode.Overwrite).parquet(s"$staging/buckets"))
-      val copyThrough: Seq[() => Unit] = Seq(
-        () => {
-          remapCol(memB, "rep", matched)
-            .select(memA.columns.map(col): _*)
-            .write.mode(SaveMode.Overwrite).parquet(s"$staging/members")
-          DeltaStore.copySubFiles(spark, dA, "members", staging, "a")
-        },
-        () => {
-          repsBnew.select(repsA.columns.map(col): _*)
-            .write.mode(SaveMode.Overwrite).parquet(s"$staging/reps")
-          DeltaStore.copySubFiles(spark, dA, "reps", staging, "a")
-        },
-        () => {
-          bucketsBnew.repartition(col("t"), col("bucket"))
-            .sortWithinPartitions("t", "bucket")
-            .write.mode(SaveMode.Overwrite).parquet(s"$staging/buckets")
-          DeltaStore.copySubFiles(spark, dA, "buckets", staging, "a")
-        })
-      graft.Jobs.inParallel(
-        (if (aPlain) copyThrough else rewriteAll) ++ Seq[() => Unit](
-          () => pairs.write.mode(SaveMode.Overwrite).parquet(s"$staging/pairs")))
-    }
+    // members/reps/buckets pass A's rows through the merge verbatim
+    // (adoption renames B-side rows only); pairs always rewrite
+    // (their union dedups across sides)
+    Store.commitMerge(spark, dA, dest, range,
+      carried = Seq(
+        Carried("members", memA, memBnew, memA.unionByName(memBnew)),
+        Carried("reps", repsA, repsBnew, reps),
+        Carried("buckets", bucketsA, bucketsBnew, bucketsA.unionByName(bucketsBnew))),
+      rewritten = Seq("pairs" -> pairs))
   }
 
-  private def read(spark: SparkSession, path: String, sub: String): DataFrame = {
-    val deltas = DeltaStore.committedDeltas(spark, path)
-    require(deltas.nonEmpty, s"no committed deltas under $path")
-    readFrom(spark, deltas, sub)
-  }
-
-  /** The deltas carrying `sub` — delete deltas hold only
-    * `tombstones`/`rekeys`, so every glob filters by existence. */
-  private def havingSub(spark: SparkSession, deltas: Seq[String],
-                        sub: String): Seq[String] = {
-    val fs = DeltaStore.fsOf(spark, deltas.head)
-    deltas.filter(d => fs.exists(new org.apache.hadoop.fs.Path(s"$d/$sub")))
-  }
-
-  /** Delete state across `deltas`: tombstoned vec_ids + the RESOLVED
-    * rep rekey map — the [[DedupStore]] protocol verbatim (chains
-    * resolve in ceil(log2(#delete deltas)) squaring steps). */
-  private def tombStateOf(spark: SparkSession,
-                          deltas: Seq[String]): Option[(DataFrame, DataFrame)] = {
-    val dd = havingSub(spark, deltas, "tombstones")
-    if (dd.isEmpty) None
-    else {
-      val t = DeltaStore.readRelation(spark, dd.map(d => s"$d/tombstones"))
-      var m = DeltaStore.readRelation(spark, dd.map(d => s"$d/rekeys"))
-      val steps = if (dd.size <= 1) 0
-        else 32 - Integer.numberOfLeadingZeros(dd.size - 1) // ceil(log2(n))
-      for (_ <- 0 until steps)
-        m = m.as("a")
-          .join(m.select(col("old_rep").as("o2"), col("new_rep").as("n2")),
-            col("a.new_rep") === col("o2"), "left")
-          .select(col("a.old_rep"),
-            coalesce(col("n2"), col("a.new_rep")).as("new_rep"))
-      Some((t, m))
-    }
-  }
-
-  private def remapCol(df: DataFrame, key: String, m: DataFrame): DataFrame =
-    df.join(m.withColumnRenamed("old_rep", key), Seq(key), "left")
-      .withColumn(key, coalesce(col("new_rep"), col(key)))
-      .drop("new_rep")
-
-  private def dropDead(df: DataFrame, key: String, dead: DataFrame): DataFrame =
-    df.join(dead.withColumnRenamed("vec_id", key), Seq(key), "left_anti")
-
-  /** One staged relation as the LIVE view over `deltas` — the
-    * [[DedupStore.readFrom]] discipline on the embedding side:
-    * tombstoned vectors drop, rep references follow the resolved
-    * rekey map (value identity makes the rename exact — the
-    * re-elected rep holds the byte-identical vector, value key and
-    * selfcos), rows of fully-dead value groups drop. With no delete
-    * deltas this is the plain per-delta union (zero overhead). */
-  private def readFrom(spark: SparkSession, deltas: Seq[String],
-                       sub: String): DataFrame = {
-    val data = havingSub(spark, deltas, sub)
-    require(data.nonEmpty, s"store holds no '$sub' relation")
-    val base = DeltaStore.readRelation(spark, data.map(d => s"$d/$sub"))
-    tombStateOf(spark, deltas) match {
-      case None => base
-      case Some((t, m)) =>
-        val dead = t.join(m.select(col("old_rep").as("vec_id")),
-          Seq("vec_id"), "left_anti")
-        sub match {
-          case "members" =>
-            remapCol(base.join(t, Seq("vec_id"), "left_anti"), "rep", m)
-          case "reps" =>
-            dropDead(remapCol(base, "rep", m), "rep", dead)
-          case "buckets" =>
-            dropDead(remapCol(base, "vec_id", m), "vec_id", dead)
-          case "pairs" =>
-            val r = dropDead(dropDead(
-              remapCol(remapCol(base, "vec_a", m), "vec_b", m),
-              "vec_a", dead), "vec_b", dead)
-            // a rekey renames to a LARGER id — restore the pair order
-            // (cos is symmetric, nothing else to swap)
-            r.select(least(col("vec_a"), col("vec_b")).as("vec_a"),
-              greatest(col("vec_a"), col("vec_b")).as("vec_b"), col("cos"))
-        }
-    }
-  }
-
-  def members(spark: SparkSession, path: String): DataFrame = read(spark, path, "members")
-  def reps(spark: SparkSession, path: String): DataFrame = read(spark, path, "reps")
-  def pairs(spark: SparkSession, path: String): DataFrame = read(spark, path, "pairs")
-
-  /** Members with their value-group size — derived, never stored (the
-    * append-only contract). */
-  private def membersWithM(spark: SparkSession, path: String): DataFrame =
-    membersWithMOf(members(spark, path))
-
-  private def membersWithMOf(mem: DataFrame): DataFrame =
-    mem.join(mem.groupBy("rep").agg(count(lit(1)).as("m")), Seq("rep"))
-      .select("vec_id", "rep", "m")
-
-  /** The committed deltas visible AS OF version `maxTag` (tag sorts
-    * ≤ maxTag); compaction collapses folded history, so travel
-    * reaches only versions newer than the last compaction. */
-  private def deltasAt(spark: SparkSession, path: String,
-                       maxTag: String): Seq[String] =
-    DeltaStore.visibleAt(spark, path, maxTag) // numeric-tag contract
+  def members(spark: SparkSession, path: String): DataFrame = Store.read(spark, path, "members")
+  def reps(spark: SparkSession, path: String): DataFrame = Store.read(spark, path, "reps")
+  def pairs(spark: SparkSession, path: String): DataFrame = Store.read(spark, path, "pairs")
 
   /** [[Ann.lshCosinePairs]] served from the store: rep-level pairs by
     * lookup, then the two exact-copy expansions (cross-group via the
@@ -512,7 +309,7 @@ object SemanticStore {
     * build on the snapshot corpus. */
   def cosinePairsAt(spark: SparkSession, path: String,
                     maxTag: String): DataFrame =
-    cosineFrom(spark, deltasAt(spark, path, maxTag))
+    cosineFrom(spark, DeltaStore.visibleAt(spark, path, maxTag))
 
   /** (vec_a, vec_b, cos, change): SNAPSHOT DIFF of the cosine pair
     * relation between two pinned versions — [[DedupStore
@@ -525,28 +322,22 @@ object SemanticStore {
     * full-corpus pair relation restricted to pairs touching the new
     * id range (the oracle's replay). */
   def diffVersions(spark: SparkSession, path: String,
-                   tagA: String, tagB: String): DataFrame = {
-    val a = cosineFrom(spark, deltasAt(spark, path, tagA)).cutLineage()
-    val b = cosineFrom(spark, deltasAt(spark, path, tagB)).cutLineage()
-    val added = b.join(a.select("vec_a", "vec_b"),
-        Seq("vec_a", "vec_b"), "left_anti")
-      .withColumn("change", lit("added"))
-    val dropped = a.join(b.select("vec_a", "vec_b"),
-        Seq("vec_a", "vec_b"), "left_anti")
-      .withColumn("change", lit("dropped"))
-    added.unionByName(dropped)
-  }
+                   tagA: String, tagB: String): DataFrame =
+    RepGroupStore.pairDiff(
+      cosineFrom(spark, DeltaStore.visibleAt(spark, path, tagA)),
+      cosineFrom(spark, DeltaStore.visibleAt(spark, path, tagB)),
+      Seq("vec_a", "vec_b"))
 
   private def cosineFrom(spark: SparkSession, deltas: Seq[String]): DataFrame = {
-    val repPairs = readFrom(spark, deltas, "pairs")
-    val mem = membersWithMOf(readFrom(spark, deltas, "members"))
+    val repPairs = Store.live(spark, deltas, "pairs")
+    val mem = Store.withGroupSize(Store.live(spark, deltas, "members"))
     val ma = mem.select(col("rep").as("vec_a"), col("vec_id").as("a"))
     val mb = mem.select(col("rep").as("vec_b"), col("vec_id").as("b"))
     val cross = repPairs.join(ma, "vec_a").join(mb, "vec_b")
       .select(least(col("a"), col("b")).as("vec_a"),
         greatest(col("a"), col("b")).as("vec_b"), col("cos"))
     val memA = mem.filter(col("m") >= 2)
-      .join(readFrom(spark, deltas, "reps").select(col("rep"), col("selfcos")), Seq("rep"))
+      .join(Store.live(spark, deltas, "reps").select(col("rep"), col("selfcos")), Seq("rep"))
       .select(col("rep"), col("vec_id").as("a"), col("selfcos"))
     val within = memA.as("x")
       .join(memA.as("y"), col("x.rep") === col("y.rep") && col("x.a") < col("y.a"))
@@ -562,7 +353,7 @@ object SemanticStore {
     val repClusters = Dedup.propagateMinLabels(
       pairs(spark, path).select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")),
       maxIter)
-    membersWithM(spark, path)
+    Store.withGroupSize(members(spark, path))
       .join(repClusters.select(col("doc_id").as("rep"), col("cluster_id")),
         Seq("rep"), "left")
       .filter(col("cluster_id").isNotNull || col("m") > 1)

@@ -4,9 +4,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The delta-directory commit protocol shared by the materialized
-  * search indexes ([[graft.operators.Bm25Index]],
-  * [[graft.operators.AnnIndex]]): a store is a directory of
+/** The delta-directory commit protocol every staged store family
+  * shares ([[graft.operators.Bm25Index]], [[graft.operators.AnnIndex]],
+  * [[graft.operators.PqIndex]], [[graft.operators.DedupStore]],
+  * [[graft.operators.SemanticStore]]): a store is a directory of
   * `delta-<tag>` subdirectories, each written in full under
   * `.staging-<tag>` and made visible with ONE directory rename — the
   * only mutation readers ever observe. A crash before the rename
@@ -18,6 +19,14 @@ import org.apache.spark.sql.functions._
   * duplicate-id checks can skip every delta whose range cannot overlap
   * an incoming batch — batch-scaled maintenance on a long-running
   * store for the common monotone-id ingest pattern.
+  *
+  * This object also holds the TOMBSTONE-ONLY protocols the index
+  * families share: the sub-relation existence filter and reader
+  * ([[havingSub]] / [[readSub]]), the live view ([[liveSub]] /
+  * [[livePair]]), the delete liveness gate ([[requireLive]]) and the
+  * shard-merge disjointness gate ([[requireDisjoint]]). The rep-group
+  * tombstone + rekey protocol of the pair substrates lives beside it
+  * in [[RepGroupStore]].
   */
 object DeltaStore {
 
@@ -82,7 +91,7 @@ object DeltaStore {
       // readers even if the writer crashes before deleting them
       val stale = all
         .filter(d => new Path(d).getName.startsWith("delta-compact-"))
-        .flatMap(d => readLines(fs, new Path(d, "supersedes.list"))).toSet
+        .flatMap(d => readLines(fs, d, "supersedes.list")).toSet
       (all, stale)
     }
   }
@@ -135,16 +144,26 @@ object DeltaStore {
   private def sweepStale(fs: FileSystem, path: String): Unit = {
     val (all, stale) = deltaState(fs, path)
     all.filter(d => stale.contains(new Path(d).getName))
-      .foreach(d => fs.delete(new Path(d), true))
+      .foreach(d => dropDelta(fs, d))
   }
 
-  private def readLines(fs: FileSystem, p: Path): Seq[String] =
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList.filter(_.nonEmpty)
-      finally in.close()
-    }
+  /** Delete a superseded delta dir and every memoized relation over
+    * it — a memo entry outliving its files would pin a `DataFrame`
+    * over deleted paths for the rest of the session. */
+  private def dropDelta(fs: FileSystem, delta: String): Unit = {
+    fs.delete(new Path(delta), true)
+    forgetRelations(fs, delta)
+  }
+
+  /** The memo keys currently held for `spark` — for specs asserting
+    * that no memoized relation outlives the files it names. */
+  private[graft] def memoKeys(spark: SparkSession): Seq[Seq[String]] = {
+    import scala.jdk.CollectionConverters._
+    relCache.keySet.asScala.toSeq.filter(_._1 eq spark).map(_._2)
+  }
+
+  private def readLines(fs: FileSystem, dir: String, name: String): Seq[String] =
+    readSidecar(fs, dir, name).toSeq.flatMap(_.split("\n")).filter(_.nonEmpty)
 
   /** Has `tag` ever been committed to this store? True when its delta
     * dir exists OR when a compaction folded (and deleted) it — every
@@ -160,7 +179,7 @@ object DeltaStore {
       // is a subset of their successor's, and "was committed once" can
       // never become false
       all.filter(d => new Path(d).getName.startsWith("delta-compact-"))
-        .exists(d => readLines(fs, new Path(d, "tags.history")).contains(s"delta-$tag"))
+        .exists(d => readLines(fs, d, "tags.history").contains(s"delta-$tag"))
     }
   }
 
@@ -173,22 +192,30 @@ object DeltaStore {
     forgetRelations(fs, path)
   }
 
-  def writeRange(fs: FileSystem, dir: Path, lo: Long, hi: Long): Unit = {
-    val out = fs.create(new Path(dir, "docid.range"), true)
-    try out.write(s"$lo\n$hi\n".getBytes("UTF-8")) finally out.close()
+  /** Write the small text sidecar `name` (parameters, listings) into
+    * delta or staging dir `dir`. */
+  def writeSidecar(spark: SparkSession, dir: String, name: String, text: String): Unit = {
+    val out = fsOf(spark, dir).create(new Path(dir, name), true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
-  def readRange(fs: FileSystem, delta: String): Option[(Long, Long)] = {
-    val p = new Path(delta, "docid.range")
-    if (!fs.exists(p)) None // pre-range delta: never pruned
+  /** The trimmed text of sidecar `name` in `dir`, None when absent. */
+  def readSidecar(fs: FileSystem, dir: String, name: String): Option[String] = {
+    val p = new Path(dir, name)
+    if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try {
-        val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        Some((lines.head.toLong, lines(1).toLong))
-      } finally in.close()
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim) finally in.close()
     }
   }
+
+  /** A delta's [min, max] id range sidecar; None for a pre-range
+    * delta, which is never pruned. */
+  def readRange(fs: FileSystem, delta: String): Option[(Long, Long)] =
+    readSidecar(fs, delta, "docid.range").map { t =>
+      val Array(lo, hi) = t.split("\n")
+      (lo.toLong, hi.toLong)
+    }
 
   /** One batch-scaled aggregation: (isEmpty, lo, hi) of `idCol`. A
     * non-integral id type (or an all-NULL id column) yields lo > hi —
@@ -239,18 +266,123 @@ object DeltaStore {
 
   /** Reject a batch that re-ingests ids already present in the store
     * (append-only maintenance would double-count them). `sub` is the
-    * per-delta subdirectory holding one row per id (e.g. "doclen"). */
-  def rejectDuplicateIds(spark: SparkSession, candidates: Seq[String],
+    * per-delta subdirectory holding one row per id (e.g. "doclen");
+    * only the deltas carrying it whose id-range sidecar can overlap
+    * the batch range `br` ([[batchRange]]) are read. A tombstoned id
+    * stays rejected until compaction purges its rows: tombstoning
+    * marks the row dead, it does not free the id. */
+  def rejectDuplicateIds(spark: SparkSession, deltas: Seq[String],
                          sub: String, idCol: String, batch: DataFrame,
-                         what: String): Unit =
+                         br: (Boolean, Long, Long), what: String): Unit = {
+    val (empty, lo, hi) = br
+    val candidates =
+      if (empty || deltas.isEmpty) Nil
+      else overlappingDeltas(fsOf(spark, deltas.head), havingSub(spark, deltas, sub), lo, hi)
     if (candidates.nonEmpty) {
-      val existing = spark.read.parquet(candidates.map(d => s"$d/$sub"): _*)
+      val existing = readRelation(spark, candidates.map(d => s"$d/$sub"))
         .select(col(idCol))
       val nDup = batch.select(idCol).join(existing, Seq(idCol), "left_semi").count()
       require(nDup == 0,
         s"update batch re-ingests $nDup existing ${idCol}s; append-only $what " +
           "maintenance would double-count them — upsert or rebuild instead")
     }
+  }
+
+  /** The deltas (from `deltas`) that carry sub-relation `sub` — data
+    * deltas and delete deltas hold different sub-relations, so every
+    * read filters by existence. */
+  def havingSub(spark: SparkSession, deltas: Seq[String], sub: String): Seq[String] =
+    if (deltas.isEmpty) Nil
+    else {
+      val fs = fsOf(spark, deltas.head)
+      deltas.filter(d => fs.exists(new Path(s"$d/$sub")))
+    }
+
+  /** One sub-relation across every delta that has it (None when none
+    * does), through the [[readRelation]] memo. */
+  def readSub(spark: SparkSession, deltas: Seq[String], sub: String): Option[DataFrame] = {
+    val present = havingSub(spark, deltas, sub)
+    if (present.isEmpty) None
+    else Some(readRelation(spark, present.map(d => s"$d/$sub")))
+  }
+
+  /** TOMBSTONE-ONLY LIVE VIEW of one sub-relation: its physical rows
+    * minus every `idCol` named by a delete delta's `tombstones`; with
+    * no delete delta, the plain per-delta union. */
+  def liveSub(spark: SparkSession, deltas: Seq[String], sub: String,
+              idCol: String): Option[DataFrame] =
+    readSub(spark, deltas, sub).map(minusTombstones(spark, deltas, idCol))
+
+  /** The live views of two sub-relations a store cannot serve without
+    * (e.g. postings + doclen) — loud when either is absent. */
+  def livePair(spark: SparkSession, deltas: Seq[String], idCol: String,
+               a: String, b: String): (DataFrame, DataFrame) = {
+    val live = minusTombstones(spark, deltas, idCol)
+    def req(sub: String) = live(readSub(spark, deltas, sub)
+      .getOrElse(throw new IllegalStateException(s"store holds no $sub")))
+    (req(a), req(b))
+  }
+
+  /** Anti-join against the tombstone set (delete-scaled, broadcast-
+    * sized in practice) — identity when no delete delta exists. */
+  private def minusTombstones(spark: SparkSession, deltas: Seq[String],
+                              idCol: String): DataFrame => DataFrame =
+    readSub(spark, deltas, "tombstones").map(_.select(idCol)) match {
+      case None => identity
+      case Some(dead) => _.join(dead, Seq(idCol), "left_anti")
+    }
+
+  /** TOMBSTONE DELETE LIVENESS GATE: every id of `ids` must be LIVE —
+    * present in a data delta's `sub` and not already tombstoned — or
+    * the delete fails loudly instead of half-applying. Stays
+    * BATCH-scaled on a long-running store: the presence side reads
+    * only the deltas whose id-range sidecar can overlap the batch (the
+    * [[rejectDuplicateIds]] discipline); the tombstone side is
+    * delete-scaled by nature. Returns the batch range, which the
+    * caller's delete sidecars may reuse. */
+  def requireLive(spark: SparkSession, deltas: Seq[String], ids: DataFrame,
+                  idCol: String, sub: String): (Boolean, Long, Long) = {
+    val br @ (empty, lo, hi) = batchRange(ids, idCol)
+    if (!empty) {
+      val candidates = overlappingDeltas(fsOf(spark, deltas.head),
+        havingSub(spark, deltas, sub), lo, hi)
+      val present =
+        if (candidates.isEmpty) ids.limit(0)
+        else ids.join(readRelation(spark, candidates.map(d => s"$d/$sub"))
+          .select(idCol), Seq(idCol), "left_semi")
+      val live = minusTombstones(spark, deltas, idCol)(present)
+      val nMissing = ids.join(live, Seq(idCol), "left_anti").count()
+      require(nMissing == 0,
+        s"delete batch names $nMissing ${idCol}s that are not live in the store " +
+          "(absent or already tombstoned) — refusing a partially-effective delete")
+    }
+    br
+  }
+
+  /** SHARD-MERGE DISJOINTNESS GATE over two live id relations:
+    * overlapping ids would double-count (the [[rejectDuplicateIds]]
+    * rule across stores). The two range aggregations run
+    * concurrently; the check is O(1) when both sides carry integral
+    * id ranges that don't overlap (the shard layout by construction),
+    * and only on range overlap does it pay one id semi-join. Returns
+    * the merged id range for the destination's sidecar (None when
+    * either side has none). */
+  def requireDisjoint(a: DataFrame, b: DataFrame, idCol: String): Option[(Long, Long)] = {
+    val br = new Array[(Boolean, Long, Long)](2)
+    graft.Jobs.inParallel(Seq(
+      () => br(0) = batchRange(a, idCol),
+      () => br(1) = batchRange(b, idCol)))
+    val ((eA, loA, hiA), (eB, loB, hiB)) = (br(0), br(1))
+    val rangesDisjoint = loA <= hiA && loB <= hiB && (hiA < loB || hiB < loA)
+    if (!eA && !eB && !rangesDisjoint) {
+      val nShared = a.select(idCol).join(b.select(idCol), idCol).count()
+      require(nShared == 0,
+        s"stores share $nShared live ${idCol}s — shard merge requires " +
+          "disjoint id spaces (re-key one side or delete the duplicates first)")
+    }
+    if (loA <= hiA && loB <= hiB) Some((math.min(loA, loB), math.max(hiA, hiB)))
+    else None
+  }
 
   /** FILE-LEVEL COPY-THROUGH for shard merges (guide §6 — move bytes,
     * don't recompute them): copy every data file of `sub` from the
@@ -308,12 +440,9 @@ object DeltaStore {
     }
     val staging = new Path(s"$path/.staging-$tag")
     stage(staging.toString)
-    range.foreach { case (lo, hi) => writeRange(fs, staging, lo, hi) }
-    def writeList(name: String, lines: Seq[String]): Unit = {
-      val out = fs.create(new Path(staging, name), true)
-      try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-      finally out.close()
-    }
+    def writeList(name: String, lines: Seq[String]): Unit =
+      writeSidecar(spark, staging.toString, name, lines.mkString("", "\n", "\n"))
+    range.foreach { case (lo, hi) => writeList("docid.range", Seq(lo.toString, hi.toString)) }
     if (supersedes.nonEmpty) writeList("supersedes.list", supersedes)
     if (history.nonEmpty) writeList("tags.history", history)
     if (!fs.rename(staging, new Path(s"$path/delta-$tag")))
@@ -351,10 +480,10 @@ object DeltaStore {
     // THEY had already absorbed — keeps isCommitted true for every tag
     // ever ingested, however many compactions later
     val history = (names ++
-      deltas.flatMap(d => readLines(fs, new Path(d, "tags.history")))).distinct
+      deltas.flatMap(d => readLines(fs, d, "tags.history"))).distinct
     commit(spark, path, tag, merged, supersedes = names, history = history) {
       staging => restage(deltas, staging)
     }
-    deltas.foreach(d => fs.delete(new Path(d), true))
+    deltas.foreach(d => dropDelta(fs, d))
   }
 }

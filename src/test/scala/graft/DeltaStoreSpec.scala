@@ -138,6 +138,44 @@ class DeltaStoreSpec extends AnyFunSuite {
     assert(memoIds(paths) == Seq(3L, 4L, 5L))
   }
 
+  /** Memo keys that name `deltas` or a path under them. */
+  private def memoOver(deltas: Seq[String]): Seq[String] = {
+    val fs = DeltaStore.fsOf(spark, deltas.head)
+    val qs = deltas.map(d => fs.makeQualified(new org.apache.hadoop.fs.Path(d)).toString)
+    DeltaStore.memoKeys(spark).flatten
+      .filter(p => qs.exists(q => p == q || p.startsWith(q + "/")))
+  }
+
+  test("compaction and the stale sweep forget the memoized relations over the deltas they delete") {
+    val store = newStore()
+    writeDelta(store, "00000", Seq(1L))
+    writeDelta(store, "00001", Seq(2L))
+    val folded = DeltaStore.committedDeltas(spark, store)
+    assert(memoIds(folded.map(d => s"$d/rows")) == Seq(1L, 2L))
+    assert(memoIds(Seq(s"${folded.head}/rows")).size == 1)
+    assert(memoOver(folded).nonEmpty)
+    DeltaStore.compact(spark, store) { (deltas, staging) =>
+      DeltaStore.readRelation(spark, deltas.map(d => s"$d/rows"))
+        .write.parquet(s"$staging/rows")
+    }
+    assert(memoOver(folded).isEmpty,
+      s"memo keys still name folded deltas: ${memoOver(folded)}")
+    assert(visibleIds(store) == Seq(1L, 2L))
+    // a crashed compaction's inputs are deleted by the next writer's
+    // sweep — which must forget their memo entries too
+    writeDelta(store, "00002", Seq(3L))
+    val inputs = DeltaStore.committedDeltas(spark, store)
+    assert(memoIds(inputs.map(d => s"$d/rows")) == Seq(1L, 2L, 3L))
+    DeltaStore.commit(spark, store, "compact-x", Some((1L, 3L)),
+      supersedes = inputs.map(d => new org.apache.hadoop.fs.Path(d).getName)) { staging =>
+      spark.read.parquet(inputs.map(d => s"$d/rows"): _*).write.parquet(s"$staging/rows")
+    }
+    writeDelta(store, "00003", Seq(4L))
+    assert(memoOver(inputs).isEmpty,
+      s"memo keys still name swept deltas: ${memoOver(inputs)}")
+    assert(visibleIds(store) == Seq(1L, 2L, 3L, 4L))
+  }
+
   test("a batch holding the same id twice is rejected before commit") {
     val store = newStore()
     writeDelta(store, "ok", Seq(1L, 2L))

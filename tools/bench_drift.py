@@ -78,8 +78,16 @@ Ratios are MEDIAN-NORMALIZED before gating, with two guards:
     regression self-normalize away — it fails unless the allowlist
     carries a live "_median" entry explaining the run.
 
+PASS-2 WARNINGS fail the gate. Bench runs every key twice and records
+in the artifact's "warnings" map each key whose second pass errored
+(a key that works once but not twice in one JVM is broken, whatever
+its time). Any entry fails, whether or not the baseline artifact
+carried it too — a grown map is named as such, so a new breakage is
+told apart from a carried one, but neither passes.
+
 Usage: python3 tools/bench_drift.py <new_bench.json> [<baseline.json>]
-Exit 0 = clean (or explained), 1 = unexplained regression/improvement.
+Exit 0 = clean (or explained), 1 = unexplained regression/improvement
+or a pass-2 warning.
 """
 import json
 import os
@@ -151,8 +159,10 @@ def main():
     # FLAP-SUSPECT, or a real regression whose settle re-measure crashes
     # would pass the gate for a round (r16 ADVICE-2).
     has_settle_pass = isinstance(new_data, dict) and "queries_rerun2" in new_data
+    warnings = new_data.get("warnings", {}) if isinstance(new_data, dict) else {}
     base_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(HERE, "bench_baseline.json")
     base_data = load(base_path)
+    base_warnings = base_data.get("warnings", {}) if isinstance(base_data, dict) else {}
     base = queries_of(base_data)
     base_round = base_data.get("_round")
     gated_round = base_round + 1 if base_round is not None else None
@@ -313,11 +323,19 @@ def main():
         print(f"IMPROVED-UNANNOTATED {line}")
     for line in failures:
         print(f"REGRESSED {line}")
+    for key in sorted(warnings):
+        seen = "also in the baseline" if key in base_warnings else "new since the baseline"
+        print(f"PASS2-WARNING {key}: {warnings[key]} [{seen}]")
+    if warnings:
+        grown = len(set(warnings) - set(base_warnings))
+        print(f"== {len(warnings)} pass-2 warnings ({grown} new since the baseline) — "
+              "a key that fails its second pass is broken; fix it ==")
     if failures or improved_bad:
         print(f"== {len(failures)} unexplained >50% regressions, "
               f"{len(improved_bad)} unannotated >50% improvements — add a SURVEY "
               "note + a live tools/bench_allowlist.json entry "
               "{round, note, value}, or fix the plan ==")
+    if failures or improved_bad or warnings:
         return 1
     print(f"== bench drift clean: {len(new)} keys vs baseline {len(base)} ==")
     return 0

@@ -18,12 +18,15 @@ GATE = os.path.join(HERE, "bench_drift.py")
 FILLER = {f"q_filler_{i}": 0.8 for i in range(10)}
 
 
-def run(base_qs, new_qs, reruns, allow=None, reruns2=None):
+def run(base_qs, new_qs, reruns, allow=None, reruns2=None, warnings=None,
+        base_warnings=None):
     with tempfile.TemporaryDirectory() as d:
         basep = os.path.join(d, "base.json")
         newp = os.path.join(d, "new.json")
-        json.dump({"_round": 14, "queries": {**FILLER, **base_qs}},
-                  open(basep, "w"))
+        base = {"_round": 14, "queries": {**FILLER, **base_qs}}
+        if base_warnings is not None:
+            base["warnings"] = base_warnings
+        json.dump(base, open(basep, "w"))
         # reruns2=None models the OLD artifact format (no settle-pass
         # field at all); a dict — even empty — models a Bench that ran
         # the settle pass, where a missing suspect key means its
@@ -32,6 +35,8 @@ def run(base_qs, new_qs, reruns, allow=None, reruns2=None):
                     "queries_rerun": reruns}
         if reruns2 is not None:
             artifact["queries_rerun2"] = reruns2
+        if warnings is not None:
+            artifact["warnings"] = warnings
         json.dump(artifact, open(newp, "w"))
         # the gate reads the allowlist from its own directory; run it
         # against a copy so the repo allowlist is never the fixture
@@ -136,5 +141,28 @@ rc, out = run({"q_wind": 1.0}, {"q_wind": 2.0}, {"q_wind": 2.6},
               reruns2={})
 check("suspect window + errored settle-pass stays CONFIRMED",
       rc == 1 and "settle-pass re-measure ERRORED" in out, out)
+
+# 13. Pass-2 warnings fail the gate even when every time is flat: the
+#     round-18 artifact reported 0 errors while six keys failed their
+#     second pass, and the gate passed it.
+rc, out = run({"q_flat": 1.0}, {"q_flat": 1.0}, {},
+              warnings={"q_flat": "pass2: SparkException: FILE_NOT_EXIST"})
+check("a non-empty pass-2 warnings map fails",
+      rc == 1 and "PASS2-WARNING q_flat" in out
+      and "new since the baseline" in out, out)
+
+# 14. A warnings map larger than the baseline's fails and names the
+#     grown key as new.
+rc, out = run({"q_a": 1.0, "q_b": 1.0}, {"q_a": 1.0, "q_b": 1.0}, {},
+              warnings={"q_a": "pass2: x", "q_b": "pass2: y"},
+              base_warnings={"q_a": "pass2: x"})
+check("a grown pass-2 warnings map fails and names the new key",
+      rc == 1 and "PASS2-WARNING q_b: pass2: y [new since the baseline]" in out
+      and "(1 new since the baseline)" in out, out)
+
+# 15. An empty warnings map gates as before.
+rc, out = run({"q_flat": 1.0}, {"q_flat": 1.0}, {}, warnings={})
+check("an empty pass-2 warnings map passes",
+      rc == 0 and "PASS2-WARNING" not in out, out)
 
 print("all bench_drift scenarios pass")
