@@ -15,31 +15,23 @@ object Bench {
     "q_knn_classify", "q_dedup_embcos", "q_stream_search", "q_seq_pack",
     "q_semantic_drop", "q_dedup_spans")
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // legacy events.ts layouts (TIMESTAMP(NANOS)) read as raw nanos;
-      // newer timestamp[us] layouts normalize in Tables.events (UTC pin)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: JVM/codegen/parquet-footer costs land here, not
-    // in the first timed query, and the one-time derived layouts
-    // (serve index, z-order/bucketed/format-export copies) are staged
-    // so layout queries time the SCAN, not the one-off ETL write;
-    // never let warmup kill the benchmark
+  /** Untimed warmup: JVM/codegen/parquet-footer costs land here, not
+    * in the first timed query, and the one-time derived layouts (serve
+    * index, z-order/bucketed/format-export copies) are staged so layout
+    * queries time the SCAN, not the one-off ETL write. Never lets a
+    * failure kill the run. */
+  private[graft] def warmup(spark: SparkSession, sfDir: String): Unit =
     try {
       spark.range(1000).selectExpr("sum(id)").collect()
       SparkEntry.entry(spark).count()
       SparkEntry.prestage(spark, sfDir)
     } catch { case _: Throwable => () }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = Session.builder().getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    warmup(spark, sfDir)
     // optional args = query-name filter for targeted local timing; the
     // driver passes none and times the full surface
     val keep: String => Boolean =
@@ -159,15 +151,9 @@ object Bench {
     // default locale, which renders 0.603 as "0,603" under e.g. de_DE
     // — invalid JSON for both the file and the printed line
     def sec(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val errJson = errors.map { case (k, v) => s""""$k":${jstr(v)}""" }
+    val errJson = errors.map { case (k, v) => s""""$k":${Verify.jstr(v)}""" }
       .mkString("{", ",", "}")
-    val warnJson = warnings.map { case (k, v) => s""""$k":${jstr(v)}""" }
+    val warnJson = warnings.map { case (k, v) => s""""$k":${Verify.jstr(v)}""" }
       .mkString("{", ",", "}")
     // the complete structured record: every query's seconds, written
     // where the driver (and regression tracking) can always read it.

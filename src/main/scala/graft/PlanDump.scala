@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Dev-only measurement harness for the optimization rounds: for each
@@ -17,16 +16,7 @@ object PlanDump {
     val outDir = args(0)
     val keys = args.drop(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
@@ -45,11 +35,7 @@ object PlanDump {
     })
     new java.io.File(outDir).mkdirs()
     // same untimed warmup as Bench so staged stores exist
-    try {
-      spark.range(1000).selectExpr("sum(id)").collect()
-      SparkEntry.entry(spark).count()
-      SparkEntry.prestage(spark, sfDir)
-    } catch { case _: Throwable => () }
+    Bench.warmup(spark, sfDir)
     keys.foreach { k =>
       SparkEntry.queries.get(k) match {
         case None => println(s"NOKEY $k")

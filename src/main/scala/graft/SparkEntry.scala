@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.Text
 import graft.operators._
 import graft.sources.{Sinks, Tables}
+import graft.sources.DeltaStore.{pathTag, stagedOnce}
 import graft.Lineage._
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
@@ -79,7 +80,7 @@ object SparkEntry {
       // stream's checkpoint is kept across invocations (exactly-once
       // replay — see Streams.deleteStream), so re-minting part files
       // with fresh names each call would replay them as new batches
-      val src = cachedLayout("bm25_sdel_src", dir)(sp =>
+      val src = cachedLayout(s, "bm25_sdel_src", dir)(sp =>
         Tables.documents(s, dir).filter(col("doc_id") % 10 === 3).select("doc_id")
           .repartition(2).write.mode("overwrite").parquet(sp))
       graft.streaming.Streams.deleteStream(s, src, p, maxFilesPerTrigger = Some(1))
@@ -93,7 +94,7 @@ object SparkEntry {
     // then DSv2 read must reproduce the table (the ref's sink side is
     // a connector write, MongoTFSink.java:30-60, not a file dump)
     "q_sink_dsv2" -> ((s, dir) => {
-      val p = sys.props("java.io.tmpdir") + "/graft_dsv2_sink_" + dirTag(dir)
+      val p = sys.props("java.io.tmpdir") + "/graft_dsv2_sink_" + pathTag(dir)
       Tables.documents(s, dir).select("doc_id", "text")
         .write.format("graft-tsv").mode("overwrite").save(p)
       s.read.format("graft-tsv").load(p)
@@ -104,7 +105,7 @@ object SparkEntry {
     // returned relation (doc_id, n_chars) proves the round trip and
     // the oracle recomputes the exact profile length relationally
     "q_perdoc_sink" -> ((s, dir) => {
-      val out = sys.props("java.io.tmpdir") + "/graft_perdoc_" + dirTag(dir)
+      val out = sys.props("java.io.tmpdir") + "/graft_perdoc_" + pathTag(dir)
       // stale files from a prior corpus layout would pollute read-back
       val root = new org.apache.hadoop.fs.Path(out)
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -127,10 +128,10 @@ object SparkEntry {
       // the doc slices are a staged-once read-only source (the
       // q_stream_delete feed convention); the timed region is the
       // per-batch profile-file sink + read-back
-      val staged = cachedLayout("sperdoc_src", dir)(sp =>
+      val staged = cachedLayout(s, "sperdoc_src", dir)(sp =>
         Tables.documents(s, dir).filter(col("doc_id") < 200)
           .repartition(4).write.mode("overwrite").parquet(sp))
-      val out = sys.props("java.io.tmpdir") + "/graft_sperdoc_out_" + dirTag(dir)
+      val out = sys.props("java.io.tmpdir") + "/graft_sperdoc_out_" + pathTag(dir)
       graft.streaming.Streams.perDocStream(s, staged, out, maxFilesPerTrigger = Some(1))
       // pathGlobFilter, never a glob IN the load path: a glob path
       // expands to one root per matched file and the driver validates
@@ -149,7 +150,7 @@ object SparkEntry {
     "q_index_incremental" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val path = freshStoreFrom(s, idxIncBaseFor(s, dir),
-        sys.props("java.io.tmpdir") + "/graft_idx_inc_" + dirTag(dir))
+        sys.props("java.io.tmpdir") + "/graft_idx_inc_" + pathTag(dir))
       Bm25Index.update(docs.filter(col("doc_id") % 5 === 0), path)
       Bm25Index.score(s, path)
     }),
@@ -302,7 +303,7 @@ object SparkEntry {
       // feed = STORED members of the slice (a zero-norm/null vector is
       // never ingested, so an embeddings-table feed would trip the
       // liveness require — the q_semantic_store_delete convention)
-      val src = cachedLayout("sem_sdel_src", dir)(sp =>
+      val src = cachedLayout(s, "sem_sdel_src", dir)(sp =>
         SemanticStore.members(s, p).filter(col("vec_id") % 8 === 1).select("vec_id")
           .repartition(2).write.mode("overwrite").parquet(sp))
       graft.streaming.Streams.semanticDeleteStream(s, src, p, maxFilesPerTrigger = Some(1))
@@ -398,7 +399,7 @@ object SparkEntry {
       // STREAMING INGEST under frozen codebooks + the serve — each run
       // streams into a fresh template copy with a fresh checkpoint
       val path = freshStoreFrom(s, pqStreamBaseFor(s, dir),
-        sys.props("java.io.tmpdir") + "/graft_pq_stream_" + dirTag(dir))
+        sys.props("java.io.tmpdir") + "/graft_pq_stream_" + pathTag(dir))
       val src = pqStreamSrcFor(s, dir)
       graft.streaming.Streams.pqIngestStream(s, src, path, maxFilesPerTrigger = Some(1))
       PqIndex.searchTopK(s, path)
@@ -598,7 +599,7 @@ object SparkEntry {
     // BMStream serving loop) — same rows again (shared oracle)
     "q_stream_search" -> ((s, dir) => {
       import s.implicits._
-      val qdir = sys.props("java.io.tmpdir") + "/graft_stream_q_" + dirTag(dir)
+      val qdir = sys.props("java.io.tmpdir") + "/graft_stream_q_" + pathTag(dir)
       Bm25.DemoQueries.toDF("query_id", "qtext")
         .write.mode("overwrite").parquet(qdir)
       graft.streaming.Streams.searchStream(s, qdir, indexFor(s, dir))
@@ -857,7 +858,7 @@ object SparkEntry {
       // 80% build = prestaged template (file copy); the INGEST + SERVE
       // re-pays in full on the fresh copy every run
       val path = freshStoreFrom(s, annIncBaseFor(s, dir),
-        sys.props("java.io.tmpdir") + "/graft_annidx_inc_" + dirTag(dir))
+        sys.props("java.io.tmpdir") + "/graft_annidx_inc_" + pathTag(dir))
       AnnIndex.update(emb.filter(col("vec_id") % 5 === 0), path, "00001")
       AnnIndex.searchTopK(s, path)
     }),
@@ -1491,7 +1492,7 @@ object SparkEntry {
     // the block-max rung (merge is the measurand, rerun from scratch)
     "q_index_merge" -> ((s, dir) => {
       val shards = bm25ShardsFor(s, dir)
-      val dest = sys.props("java.io.tmpdir") + "/graft_idx_merged_" + dirTag(dir)
+      val dest = sys.props("java.io.tmpdir") + "/graft_idx_merged_" + pathTag(dir)
       Bm25Index.mergeStores(s, s"$shards/a", s"$shards/b", dest)
       Bm25Index.blockMaxTopN(s, dest)
     }),
@@ -1500,7 +1501,7 @@ object SparkEntry {
     // unification + rep-scaled cross bucket join
     "q_semantic_merge" -> ((s, dir) => {
       val shards = semShardsFor(s, dir)
-      val dest = sys.props("java.io.tmpdir") + "/graft_sem_merged_" + dirTag(dir)
+      val dest = sys.props("java.io.tmpdir") + "/graft_sem_merged_" + pathTag(dir)
       SemanticStore.mergeStores(s, s"$shards/a", s"$shards/b", dest)
       SemanticStore.cosinePairs(s, dest)
     }),
@@ -1509,7 +1510,7 @@ object SparkEntry {
     // rep-scaled cross band join + pair-driven verify of new pairs
     "q_dedup_merge" -> ((s, dir) => {
       val shards = dedupShardsFor(s, dir)
-      val dest = sys.props("java.io.tmpdir") + "/graft_dedup_merged_" + dirTag(dir)
+      val dest = sys.props("java.io.tmpdir") + "/graft_dedup_merged_" + pathTag(dir)
       DedupStore.mergeStores(s, s"$shards/a", s"$shards/b", dest)
       DedupStore.verifiedNearDups(s, dest)
     }),
@@ -1518,7 +1519,7 @@ object SparkEntry {
     // the merged store serves the exact full-corpus LSH top-k
     "q_ann_merge" -> ((s, dir) => {
       val shards = annShardsFor(s, dir)
-      val dest = sys.props("java.io.tmpdir") + "/graft_ann_merged_" + dirTag(dir)
+      val dest = sys.props("java.io.tmpdir") + "/graft_ann_merged_" + pathTag(dir)
       AnnIndex.mergeStores(s, s"$shards/a", s"$shards/b", dest)
       AnnIndex.searchTopK(s, dest, queryId = 0L)
     }),
@@ -1543,7 +1544,7 @@ object SparkEntry {
   /** One graft-tsv export of the corpus per sf dir per JVM (the
     * engine's own DataSourceV2 round-trip input). */
   private def tsvDocsFor(s: SparkSession, dir: String): String =
-    cachedLayout("docs_tsv", dir)(p =>
+    cachedLayout(s, "docs_tsv", dir)(p =>
       graft.sources.Sinks.textExport(
         Tables.documents(s, dir).select("doc_id", "text"), p))
 
@@ -1599,12 +1600,49 @@ object SparkEntry {
     ()
   }
 
+  /** The id-PREFIX split of a substrate's input table (documents on
+    * doc_id, embeddings on vec_id) at `num/den` of its max id: the
+    * substrates require monotone ingest, so every two-part substrate
+    * cuts on an id prefix. */
+  private def idSplit(s: SparkSession, dir: String, table: String, num: Long, den: Long,
+                      substrate: String): (DataFrame, DataFrame) = {
+    val id = if (table == "documents") "doc_id" else "vec_id"
+    val df = Tables.load(s, dir, table)
+    val maxRow = df.agg(max(col(id))).collect()(0)
+    require(!maxRow.isNullAt(0), s"$substrate: $table table is empty — no ids to split on")
+    val cut = maxRow.getLong(0) * num / den
+    (df.filter(col(id) <= cut), df.filter(col(id) > cut))
+  }
+
+  /** Two shard stores `a`/`b` under one layout dir, split at half the
+    * max id — contiguous id ranges per shard, the layout a sharded
+    * ingest produces (and the merge's monotone id contract). */
+  private def shardsFor(s: SparkSession, dir: String, prefix: String, table: String,
+                        substrate: String)(build: (DataFrame, String) => Unit): String =
+    cachedLayout(s, prefix, dir) { p =>
+      val (lo, hi) = idSplit(s, dir, table, 1, 2, substrate)
+      build(lo, s"$p/a")
+      build(hi, s"$p/b")
+    }
+
+  /** Two-version store: delta 00000 = the ids up to `num/den` of the
+    * max, delta 00001 = the rest, ingested by `update`. */
+  private def twoVersionFor(s: SparkSession, dir: String, prefix: String, table: String,
+                            num: Long, den: Long, substrate: String)(
+      build: (DataFrame, String) => Unit,
+      update: (DataFrame, String, String) => Unit): String =
+    cachedLayout(s, prefix, dir) { p =>
+      val (lo, hi) = idSplit(s, dir, table, num, den, substrate)
+      build(lo, p)
+      update(hi, p, "00001")
+    }
+
   /** Two-version staged text index for the snapshot-read key: delta
     * 00000 = the 4/5 build, delta 00001 = the 1/5 ingest. Read-only
     * at serve time (q_index_asof pins 00000), so it prestages like
     * every other read-only serve store. */
   private def asofIndexFor(s: SparkSession, dir: String): String =
-    cachedLayout("idx_asof", dir) { p =>
+    cachedLayout(s, "idx_asof", dir) { p =>
       val docs = Tables.documents(s, dir)
       Bm25Index.build(docs.filter(col("doc_id") % 5 =!= 0), p)
       Bm25Index.update(docs.filter(col("doc_id") % 5 === 0), p, "00001")
@@ -1617,14 +1655,8 @@ object SparkEntry {
     * monotone ingest — distinct from the incremental store's 4/5 cut
     * so the two keys pin different snapshots. */
   private def dedupAsofStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("dedup_asof", dir) { p =>
-      val docs = Tables.documents(s, dir)
-      val maxRow = docs.agg(max(col("doc_id"))).collect()(0)
-      require(!maxRow.isNullAt(0), "dedup as-of substrate: documents table is empty")
-      val cut = maxRow.getLong(0) * 3 / 4
-      DedupStore.build(docs.filter(col("doc_id") <= cut), p)
-      DedupStore.update(docs.filter(col("doc_id") > cut), p, "00001")
-    }
+    twoVersionFor(s, dir, "dedup_asof", "documents", 3, 4, "dedup as-of substrate")(
+      DedupStore.build(_, _), DedupStore.update(_, _, _))
 
   /** Two half-corpus SHARD stores for the merge key (id-prefix cut at
     * max/2 — contiguous doc ranges per shard, the layout a sharded
@@ -1632,58 +1664,32 @@ object SparkEntry {
     * MERGE itself is the measurand and runs inside the query into a
     * fresh (non-cached) dest. */
   private def bm25ShardsFor(s: SparkSession, dir: String): String =
-    cachedLayout("idx_shards", dir) { p =>
-      val docs = Tables.documents(s, dir)
-      val maxRow = docs.agg(max(col("doc_id"))).collect()(0)
-      require(!maxRow.isNullAt(0), "shard substrate: documents table is empty")
-      val cut = maxRow.getLong(0) / 2
-      Bm25Index.build(docs.filter(col("doc_id") <= cut), s"$p/a")
-      Bm25Index.build(docs.filter(col("doc_id") > cut), s"$p/b")
-    }
+    shardsFor(s, dir, "idx_shards", "documents", "shard substrate")(Bm25Index.build(_, _))
 
   /** The semantic-substrate twin of [[dedupShardsFor]] (id-prefix cut
     * at max/2 over the embeddings). */
   private def semShardsFor(s: SparkSession, dir: String): String =
-    cachedLayout("sem_shards", dir) { p =>
-      val emb = Tables.embeddings(s, dir)
-      val maxRow = emb.agg(max(col("vec_id"))).collect()(0)
-      require(!maxRow.isNullAt(0), "semantic shard substrate: embeddings table is empty")
-      val cut = maxRow.getLong(0) / 2
-      SemanticStore.build(emb.filter(col("vec_id") <= cut), s"$p/a")
-      SemanticStore.build(emb.filter(col("vec_id") > cut), s"$p/b")
-    }
+    shardsFor(s, dir, "sem_shards", "embeddings", "semantic shard substrate")(
+      SemanticStore.build(_, _))
 
   /** The pair-substrate twin of [[bm25ShardsFor]] (id-prefix cut at
     * max/2 — the shard layout satisfies the merge's monotone id
     * contract by construction). */
   private def dedupShardsFor(s: SparkSession, dir: String): String =
-    cachedLayout("dedup_shards", dir) { p =>
-      val docs = Tables.documents(s, dir)
-      val maxRow = docs.agg(max(col("doc_id"))).collect()(0)
-      require(!maxRow.isNullAt(0), "dedup shard substrate: documents table is empty")
-      val cut = maxRow.getLong(0) / 2
-      DedupStore.build(docs.filter(col("doc_id") <= cut), s"$p/a")
-      DedupStore.build(docs.filter(col("doc_id") > cut), s"$p/b")
-    }
+    shardsFor(s, dir, "dedup_shards", "documents", "dedup shard substrate")(
+      DedupStore.build(_, _))
 
   /** The vector-store twin of [[bm25ShardsFor]] (id-prefix cut at
     * max/2 over the embeddings; same LSH params both sides). */
   private def annShardsFor(s: SparkSession, dir: String): String =
-    cachedLayout("ann_shards", dir) { p =>
-      val emb = Tables.embeddings(s, dir)
-      val maxRow = emb.agg(max(col("vec_id"))).collect()(0)
-      require(!maxRow.isNullAt(0), "ann shard substrate: embeddings table is empty")
-      val cut = maxRow.getLong(0) / 2
-      AnnIndex.build(emb.filter(col("vec_id") <= cut), s"$p/a")
-      AnnIndex.build(emb.filter(col("vec_id") > cut), s"$p/b")
-    }
+    shardsFor(s, dir, "ann_shards", "embeddings", "ann shard substrate")(AnnIndex.build(_, _))
 
   /** Dedicated build+tombstone store for the text-index COMPACTION
     * key (compaction is the measurand, so it runs inside the query;
     * the store must never be shared with q_index_delete, whose pass-2
     * replay pins its own delta history). */
   private def bm25CmpStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("idx_cmp", dir) { p =>
+    cachedLayout(s, "idx_cmp", dir) { p =>
       Bm25Index.build(Tables.documents(s, dir), p)
       Bm25Index.delete(
         Tables.documents(s, dir).filter(col("doc_id") % 10 === 6).select("doc_id"),
@@ -1694,7 +1700,7 @@ object SparkEntry {
     * pinned as 00000, 1/5 ingest as 00001) — read-only at serve time,
     * so it prestages. */
   private def annTtStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("annidx_tt", dir) { p =>
+    cachedLayout(s, "annidx_tt", dir) { p =>
       val emb = Tables.embeddings(s, dir)
       AnnIndex.build(emb.filter(col("vec_id") % 5 =!= 0), p)
       AnnIndex.update(emb.filter(col("vec_id") % 5 === 0), p, "00001")
@@ -1705,13 +1711,13 @@ object SparkEntry {
     * expansion at serve time buys back the recall. Read-only, so it
     * prestages like every serve store. */
   private def annMpStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("annidx_mp", dir)(p =>
+    cachedLayout(s, "annidx_mp", dir)(p =>
       AnnIndex.build(Tables.embeddings(s, dir), p,
         numTables = 4, bitsPerTable = 4))
 
   /** The vector-store twin of [[bm25CmpStoreFor]]. */
   private def annCmpStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("annidx_cmp", dir) { p =>
+    cachedLayout(s, "annidx_cmp", dir) { p =>
       AnnIndex.build(Tables.embeddings(s, dir), p)
       AnnIndex.delete(
         Tables.embeddings(s, dir).filter(col("vec_id") % 9 === 2).select("vec_id"),
@@ -1720,14 +1726,8 @@ object SparkEntry {
 
   /** Two-version semantic substrate for its snapshot-read key. */
   private def semAsofStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("sem_asof", dir) { p =>
-      val e = Tables.embeddings(s, dir)
-      val maxRow = e.agg(max(col("vec_id"))).collect()(0)
-      require(!maxRow.isNullAt(0), "semantic as-of substrate: embeddings table is empty")
-      val cut = maxRow.getLong(0) * 3 / 4
-      SemanticStore.build(e.filter(col("vec_id") <= cut), p)
-      SemanticStore.update(e.filter(col("vec_id") > cut), p, "00001")
-    }
+    twoVersionFor(s, dir, "sem_asof", "embeddings", 3, 4, "semantic as-of substrate")(
+      SemanticStore.build(_, _), SemanticStore.update(_, _, _))
 
   /** One file-per-document binary staging per sf dir per JVM — the
     * ingest-boundary fixture for the `binaryFile` source (media
@@ -1735,19 +1735,8 @@ object SparkEntry {
     * the executors; on a cluster the target must be shared storage,
     * exactly like any ingest landing zone. */
   private def binaryDocsFor(s: SparkSession, dir: String): String =
-    cachedLayout("docs_bin", dir) { p =>
-      // clear any stale staging first (Spark's overwrite mode does
-      // this for the other layouts): a doc REMOVED by a testdata
-      // regen would otherwise linger as an orphan .bin and poison the
-      // read-back row count. Null-safe: listFiles() returns null for
-      // a non-directory or unlistable path — delete and rebuild
-      // rather than NPE mid-staging
-      val root = new java.io.File(p)
-      if (root.isFile) root.delete()
-      if (root.exists())
-        Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-          .foreach(f => { f.delete(); () })
-      root.mkdirs()
+    cachedLayout(s, "docs_bin", dir) { p =>
+      new java.io.File(p).mkdirs()
       Tables.documents(s, dir).filter(col("text").isNotNull)
         .select(col("doc_id"), col("text").cast("binary").as("payload"))
         .repartition(8)
@@ -1767,7 +1756,7 @@ object SparkEntry {
     * from the compacted columnar store ([[graft.sources.Sinks
     * .compact]] machinery, like the docs_compact layout). */
   private def compactedBinaryFor(s: SparkSession, dir: String): String =
-    cachedLayout("bin_compact", dir) { p =>
+    cachedLayout(s, "bin_compact", dir) { p =>
       s.read.format("binaryFile").option("pathGlobFilter", "*.bin")
         .load(binaryDocsFor(s, dir))
         .select(
@@ -1781,42 +1770,22 @@ object SparkEntry {
 
   /** One z-ordered copy of lineitem per sf dir per JVM. */
   private def zorderedLineitemFor(s: SparkSession, dir: String): String =
-    cachedLayout("li_zorder", dir)(p =>
+    cachedLayout(s, "li_zorder", dir)(p =>
       graft.sources.Zorder.writeZordered(Tables.lineitem(s, dir), p,
         Seq("l_extendedprice", "l_quantity")))
 
   /** One lang-partitioned copy of the corpus per sf dir per JVM. */
   private def partitionedDocsFor(s: SparkSession, dir: String): String =
-    cachedLayout("docs_bylang", dir)(p =>
+    cachedLayout(s, "docs_bylang", dir)(p =>
       graft.sources.Sinks.writePartitioned(Tables.documents(s, dir), p, "lang"))
 
   /** Build-once-per-(prefix, sf-dir)-per-JVM derived layouts (staging
-    * index, partitioned/z-ordered copies): the shared cache mechanics
-    * live here so tmpdir/sanitization/once-semantics have ONE source. */
-  private val layoutCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def cachedLayout(prefix: String, dir: String)(build: String => Unit): String = {
-    val key = s"$prefix|$dir"
-    val hit = layoutCache.get(key)
-    if (hit != null) return hit
-    // NOT computeIfAbsent: build functions may call cachedLayout
-    // REENTRANTLY (compactedBinaryFor stages binaryDocsFor first), and
-    // a nested computeIfAbsent on one ConcurrentHashMap is illegal —
-    // it throws "Recursive update" the moment the inner insert lands
-    // on a resizing bin (latent until the entry count grew past the
-    // default table size). A JVM monitor is reentrant for the owning
-    // thread; concurrent first-callers serialize their builds, which
-    // is the old computeIfAbsent behavior anyway.
-    layoutCache.synchronized {
-      val again = layoutCache.get(key)
-      if (again != null) again
-      else {
-        val path = sys.props("java.io.tmpdir") + s"/graft_${prefix}_" + dirTag(dir)
-        build(path)
-        layoutCache.put(key, path)
-        path
-      }
-    }
-  }
+    * index, partitioned/z-ordered copies, store templates) under
+    * `<tmpdir>/graft_<prefix>_<pathTag(dir)>`, through the one staging
+    * memo ([[graft.sources.DeltaStore.stagedOnce]]). */
+  private def cachedLayout(s: SparkSession, prefix: String, dir: String)
+                          (build: String => Unit): String =
+    stagedOnce(s, sys.props("java.io.tmpdir") + s"/graft_${prefix}_" + pathTag(dir))(build)
 
   /** Fresh MUTABLE store at `runPath`, copied file-for-file from a
     * prestaged PRISTINE template. The maintenance keys that ingest
@@ -1843,51 +1812,42 @@ object SparkEntry {
     runPath
   }
 
-  /** Collision-free directory/table tag for an sf dir: md5 of the RAW
-    * string (same rationale as Streams.pathTag — the lossy
-    * `replaceAll("[^a-zA-Z0-9]", "_")` form mapped distinct dirs like
-    * `sf0.1`/`sf0_1` to one path, letting one run reset or clobber
-    * another's derived store). */
-  private def dirTag(raw: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(raw.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   /** One staged index per sf dir per JVM: q_index_batch_search and
     * q_stream_search serve from the same store; the first caller
     * builds it. (q_index_incremental keeps its own store — its
     * build/update split IS the thing it tests.) */
   private def indexFor(s: SparkSession, dir: String): String =
-    cachedLayout("idx_serve", dir)(p => Bm25Index.build(Tables.documents(s, dir), p))
+    cachedLayout(s, "idx_serve", dir)(p => Bm25Index.build(Tables.documents(s, dir), p))
 
   /** A separate staged index for the tombstone-delete key: q_index_delete
     * MUTATES its store (a delete delta), so it must never share
     * `indexFor`'s serve index with the read-only keys. */
   private def bm25DelStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("idx_del", dir)(p => Bm25Index.build(Tables.documents(s, dir), p))
+    cachedLayout(s, "idx_del", dir)(p => Bm25Index.build(Tables.documents(s, dir), p))
 
   /** Dedicated ANN store for the tombstone-delete key (same
     * never-share-a-mutated-store rule as [[bm25DelStoreFor]]). */
   private def annDelStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("annidx_del", dir)(p => AnnIndex.build(Tables.embeddings(s, dir), p))
+    cachedLayout(s, "annidx_del", dir)(p => AnnIndex.build(Tables.embeddings(s, dir), p))
 
   /** Dedicated PQ store for the tombstone-delete key. */
   private def pqDelStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("pqidx_del", dir)(p => PqIndex.build(Tables.embeddings(s, dir), p))
+    cachedLayout(s, "pqidx_del", dir)(p => PqIndex.build(Tables.embeddings(s, dir), p))
 
   /** Dedicated BASE index for the streaming-delete key (the stream
     * mutates it; its tombstone batch tags are deterministic, so
     * re-invocations replay as no-ops on the cached store). */
   private def bm25StreamDelStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("idx_sdel", dir)(p => Bm25Index.build(Tables.documents(s, dir), p))
+    cachedLayout(s, "idx_sdel", dir)(p => Bm25Index.build(Tables.documents(s, dir), p))
 
   /** Dedicated pair substrate for the dedup delete key (it mutates —
     * never share a mutated store with the read-only keys). */
   private def dedupDelStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("dedup_del", dir)(p => DedupStore.build(Tables.documents(s, dir), p))
+    cachedLayout(s, "dedup_del", dir)(p => DedupStore.build(Tables.documents(s, dir), p))
 
   /** Dedicated semantic substrate for its delete key. */
   private def semDelStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("sem_del", dir)(p => SemanticStore.build(Tables.embeddings(s, dir), p))
+    cachedLayout(s, "sem_del", dir)(p => SemanticStore.build(Tables.embeddings(s, dir), p))
 
   /** The customer→supplier purchase edge relation staged once per
     * JVM — q_hits' graph-extraction ETL (lineitem⋈orders + distinct),
@@ -1895,7 +1855,7 @@ object SparkEntry {
     * the mutual-reinforcement ITERATION is the measurand, the
     * derived-layout build is one-off. */
   private def hitsEdgesFor(s: SparkSession, dir: String): String =
-    cachedLayout("hits_edges", dir) { p =>
+    cachedLayout(s, "hits_edges", dir) { p =>
       val li = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey").as("s"))
       val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey").as("c"))
       li.join(o, col("l_orderkey") === col("o_orderkey")).select("c", "s")
@@ -1908,7 +1868,7 @@ object SparkEntry {
     * the one-off build, encoding is the measurand; `q_unigram_train`
     * keeps timing the training itself). */
   private def unigramVocabFor(s: SparkSession, dir: String): String =
-    cachedLayout("ug_vocab", dir)(p =>
+    cachedLayout(s, "ug_vocab", dir)(p =>
       Unigram.trainedVocabDf(Tables.documents(s, dir))
         .write.mode("overwrite").parquet(p))
 
@@ -1917,19 +1877,19 @@ object SparkEntry {
     * replay as no-ops on the cached store — the
     * [[bm25StreamDelStoreFor]] convention). */
   private def semStreamDelStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("sem_sdel", dir)(p => SemanticStore.build(Tables.embeddings(s, dir), p))
+    cachedLayout(s, "sem_sdel", dir)(p => SemanticStore.build(Tables.embeddings(s, dir), p))
 
   /** One staged near-dup pair substrate per sf dir per JVM: the six
     * dedup-decision keys (verified/clusters/keep/drop/containment/
     * contained-drop) all serve from it — a production dedup pipeline
     * derives signatures + candidates + verify intersections once. */
   private def dedupStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("dedup_store", dir)(p => DedupStore.build(Tables.documents(s, dir), p))
+    cachedLayout(s, "dedup_store", dir)(p => DedupStore.build(Tables.documents(s, dir), p))
 
   /** One staged semantic (embedding) pair substrate per sf dir per JVM:
     * the SemDeDup decision keys serve from it. */
   private def semanticStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("sem_store", dir)(p => SemanticStore.build(Tables.embeddings(s, dir), p))
+    cachedLayout(s, "sem_store", dir)(p => SemanticStore.build(Tables.embeddings(s, dir), p))
 
   /** Shared 80/20 incremental-construction substrates: the
     * build-on-80%-then-ingest-20% store each maintenance key exercises
@@ -1944,35 +1904,14 @@ object SparkEntry {
     * (Round10Spec / Round12Spec). Fixed update tags keep replays
     * no-ops. */
   private def dedupIncStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("dedup_inc_shared", dir) { p =>
-      val docs = Tables.documents(s, dir)
-      val maxRow = docs.agg(max(col("doc_id"))).collect()(0)
-      require(!maxRow.isNullAt(0),
-        "dedup incremental substrate: documents table is empty — no ids to split on")
-      val cut = maxRow.getLong(0) * 4 / 5
-      DedupStore.build(docs.filter(col("doc_id") <= cut), p)
-      DedupStore.update(docs.filter(col("doc_id") > cut), p, "00001")
-    }
+    twoVersionFor(s, dir, "dedup_inc_shared", "documents", 4, 5,
+        "dedup incremental substrate")(DedupStore.build(_, _), DedupStore.update(_, _, _))
   private def semIncStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("sem_inc_shared", dir) { p =>
-      val emb = Tables.embeddings(s, dir)
-      val maxRow = emb.agg(max(col("vec_id"))).collect()(0)
-      require(!maxRow.isNullAt(0),
-        "semantic incremental substrate: embeddings table is empty — no ids to split on")
-      val cut = maxRow.getLong(0) * 4 / 5
-      SemanticStore.build(emb.filter(col("vec_id") <= cut), p)
-      SemanticStore.update(emb.filter(col("vec_id") > cut), p, "00001")
-    }
+    twoVersionFor(s, dir, "sem_inc_shared", "embeddings", 4, 5,
+        "semantic incremental substrate")(SemanticStore.build(_, _), SemanticStore.update(_, _, _))
   private def pqIncStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("pq_inc_shared", dir) { p =>
-      val emb = Tables.embeddings(s, dir)
-      val maxRow = emb.agg(max(col("vec_id"))).collect()(0)
-      require(!maxRow.isNullAt(0),
-        "PQ incremental substrate: embeddings table is empty — no ids to split on")
-      val cut = maxRow.getLong(0) * 4 / 5
-      PqIndex.build(emb.filter(col("vec_id") <= cut), p)
-      PqIndex.update(emb.filter(col("vec_id") > cut), p, "00001")
-    }
+    twoVersionFor(s, dir, "pq_inc_shared", "embeddings", 4, 5,
+        "PQ incremental substrate")(PqIndex.build(_, _), PqIndex.update(_, _, _))
 
   /** PRISTINE pre-ingest templates for the maintenance keys that
     * mutate a store inside the timed run (copied fresh per run via
@@ -1980,29 +1919,20 @@ object SparkEntry {
     * LSH stores and the 80% PQ build (codebook training) feeding the
     * streaming ingest, plus that stream's staged-once tail slices. */
   private def idxIncBaseFor(s: SparkSession, dir: String): String =
-    cachedLayout("idx_inc_base", dir) { p =>
+    cachedLayout(s, "idx_inc_base", dir) { p =>
       Bm25Index.build(Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0), p)
     }
   private def annIncBaseFor(s: SparkSession, dir: String): String =
-    cachedLayout("annidx_inc_base", dir) { p =>
+    cachedLayout(s, "annidx_inc_base", dir) { p =>
       AnnIndex.build(Tables.embeddings(s, dir).filter(col("vec_id") % 5 =!= 0), p)
     }
-  private def pqStreamCut(s: SparkSession, dir: String): Long = {
-    val maxRow = Tables.embeddings(s, dir).agg(max(col("vec_id"))).collect()(0)
-    require(!maxRow.isNullAt(0),
-      "q_stream_pq: embeddings table is empty — no ids to split on")
-    maxRow.getLong(0) * 4 / 5
-  }
   private def pqStreamBaseFor(s: SparkSession, dir: String): String =
-    cachedLayout("pq_stream_base", dir) { p =>
-      PqIndex.build(
-        Tables.embeddings(s, dir).filter(col("vec_id") <= pqStreamCut(s, dir)), p)
-    }
+    cachedLayout(s, "pq_stream_base", dir)(p =>
+      PqIndex.build(idSplit(s, dir, "embeddings", 4, 5, "q_stream_pq")._1, p))
   private def pqStreamSrcFor(s: SparkSession, dir: String): String =
-    cachedLayout("pq_stream_src", dir) { p =>
-      Tables.embeddings(s, dir).filter(col("vec_id") > pqStreamCut(s, dir))
-        .repartition(2).write.mode("overwrite").parquet(p)
-    }
+    cachedLayout(s, "pq_stream_src", dir)(p =>
+      idSplit(s, dir, "embeddings", 4, 5, "q_stream_pq")._2
+        .repartition(2).write.mode("overwrite").parquet(p))
 
   /** Two-version READ-ONLY PQ substrate for the snapshot keys
     * (q_pq_asof / q_pq_diff). Same 4/5|1/5 content as
@@ -2012,24 +1942,17 @@ object SparkEntry {
     * rule as [[dedupAsofStoreFor]] / [[semAsofStoreFor]] /
     * [[asofIndexFor]] / [[annTtStoreFor]]. */
   private def pqAsofStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("pq_asof", dir) { p =>
-      val emb = Tables.embeddings(s, dir)
-      val maxRow = emb.agg(max(col("vec_id"))).collect()(0)
-      require(!maxRow.isNullAt(0),
-        "PQ as-of substrate: embeddings table is empty — no ids to split on")
-      val cut = maxRow.getLong(0) * 4 / 5
-      PqIndex.build(emb.filter(col("vec_id") <= cut), p)
-      PqIndex.update(emb.filter(col("vec_id") > cut), p, "00001")
-    }
+    twoVersionFor(s, dir, "pq_asof", "embeddings", 4, 5, "PQ as-of substrate")(
+      PqIndex.build(_, _), PqIndex.update(_, _, _))
 
   /** Staged PQ / IVF+PQ stores (codebook training is the offline
     * build; q_ann_pq / q_ann_ivfpq bench the serving path). */
   private def pqIndexFor(s: SparkSession, dir: String): String =
-    cachedLayout("pq_idx", dir)(p => PqIndex.build(Tables.embeddings(s, dir), p))
+    cachedLayout(s, "pq_idx", dir)(p => PqIndex.build(Tables.embeddings(s, dir), p))
   private def ivfPqIndexFor(s: SparkSession, dir: String): String =
-    cachedLayout("ivfpq_idx", dir)(p => PqIndex.buildIvf(Tables.embeddings(s, dir), p))
+    cachedLayout(s, "ivfpq_idx", dir)(p => PqIndex.buildIvf(Tables.embeddings(s, dir), p))
   private def ivfIndexFor(s: SparkSession, dir: String): String =
-    cachedLayout("ivf_idx", dir)(p => PqIndex.buildIvfFlat(Tables.embeddings(s, dir), p))
+    cachedLayout(s, "ivf_idx", dir)(p => PqIndex.buildIvfFlat(Tables.embeddings(s, dir), p))
 
   /** Lineitem+orders bucketed on the join key (8 buckets, sorted,
     * one file per bucket via the pre-repartition) — the co-located
@@ -2052,7 +1975,7 @@ object SparkEntry {
     }
   private def bucketedFor(s: SparkSession, dir: String): (String, String) =
     bucketedLock.synchronized {
-      val tag = dirTag(dir)
+      val tag = pathTag(dir)
       val (liName, oName) = (s"graft_bkt_lineitem_$tag", s"graft_bkt_orders_$tag")
       if (!bucketedTableReady(s, liName) || !bucketedTableReady(s, oName)) {
         graft.sources.Bucketed.writeBucketed(
@@ -2067,17 +1990,17 @@ object SparkEntry {
 
   /** One header-CSV copy of the corpus per sf dir per JVM. */
   private def csvDocsFor(s: SparkSession, dir: String): String =
-    cachedLayout("docs_csv", dir)(p =>
+    cachedLayout(s, "docs_csv", dir)(p =>
       Tables.documents(s, dir).write.option("header", "true").mode("overwrite").csv(p))
 
   /** One JSON-lines copy of the corpus per sf dir per JVM. */
   private def jsonlDocsFor(s: SparkSession, dir: String): String =
-    cachedLayout("docs_jsonl", dir)(p =>
+    cachedLayout(s, "docs_jsonl", dir)(p =>
       Tables.documents(s, dir).write.mode("overwrite").json(p))
 
   /** One ORC copy of the corpus per sf dir per JVM. */
   private def orcDocsFor(s: SparkSession, dir: String): String =
-    cachedLayout("docs_orc", dir)(p =>
+    cachedLayout(s, "docs_orc", dir)(p =>
       Tables.documents(s, dir).write.mode("overwrite").orc(p))
 
   /** Staged market-basket substrate: the distinct (order, part) pair
@@ -2086,7 +2009,7 @@ object SparkEntry {
     * (pair mining, association rules) is arithmetic over stored exact
     * counts instead of re-running the order-keyed self-join. */
   private def basketStoreFor(s: SparkSession, dir: String): String =
-    cachedLayout("basket_sub", dir) { p =>
+    cachedLayout(s, "basket_sub", dir) { p =>
       val items = Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_partkey")).distinct().cutLineage()
       items.groupBy("l_partkey").agg(count(lit(1)).as("n"))
@@ -2106,7 +2029,7 @@ object SparkEntry {
     * post-migration — the schema-drift fixture every long-lived lake
     * accumulates (columns added mid-crawl). */
   private def evolvedDocsFor(s: SparkSession, dir: String): String =
-    cachedLayout("docs_evolved", dir) { p =>
+    cachedLayout(s, "docs_evolved", dir) { p =>
       val d = Tables.documents(s, dir)
       d.filter(col("doc_id") % 2 === 0).select("doc_id", "text", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$p/v=1")
@@ -2118,7 +2041,7 @@ object SparkEntry {
   /** A deliberately fragmented (48-file) copy of the corpus, compacted
     * back through [[graft.sources.Sinks.compact]]. */
   private def compactedDocsFor(s: SparkSession, dir: String): String =
-    cachedLayout("docs_compact", dir) { p =>
+    cachedLayout(s, "docs_compact", dir) { p =>
       Tables.documents(s, dir).repartition(48).write.mode("overwrite").parquet(p)
       graft.sources.Sinks.compact(s, p)
     }

@@ -26,18 +26,24 @@ import org.apache.spark.sql.functions._
   * [[livePair]]), the delete liveness gate ([[requireLive]]) and the
   * shard-merge disjointness gate ([[requireDisjoint]]). The rep-group
   * tombstone + rekey protocol of the pair substrates lives beside it
-  * in [[RepGroupStore]].
+  * in [[RepGroupStore]]. The engine's one relation memo
+  * ([[readRelation]]) and one build-once staging memo ([[stagedOnce]])
+  * live here too: staging clears its path through [[reset]], so no
+  * memoized relation outlives the files it names.
   */
 object DeltaStore {
 
   def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Per-(session, path-set) LAZY-RELATION memo for committed delta
-    * sub-relations — the [[graft.sources.Tables]] catalog discipline
-    * applied to the stores: `spark.read.parquet` re-lists and re-reads
-    * parquet footers on every call (~65 ms at bench SF), paid by every
-    * serve on every invocation. A COMMITTED delta dir is immutable by
+  /** The one per-(session, path-set) LAZY-RELATION memo, for committed
+    * delta sub-relations and the testdata tables
+    * ([[graft.sources.Tables.load]]) alike — the catalog role:
+    * `spark.read.parquet` re-lists and re-reads parquet footers on
+    * every call (~65 ms at bench SF), paid by every serve and nearly
+    * every timed key on every invocation. Testdata dirs are generator
+    * outputs never reset by an engine JVM, so the invalidation below
+    * never fires for them. A COMMITTED delta dir is immutable by
     * the rename-commit protocol (writers stage under `.staging-*` and
     * rename once; sweeps only delete dirs that are already invisible),
     * but a delta PATH is not: [[reset]] deletes the store and a rebuild
@@ -190,6 +196,54 @@ object DeltaStore {
     val fs = fsOf(spark, path)
     fs.delete(new Path(path), true)
     forgetRelations(fs, path)
+  }
+
+  /** Collision-free directory tag for a raw identifier (an sf dir, a
+    * stream key's parameters): the lossy `replaceAll("[^a-zA-Z0-9]", "_")`
+    * form mapped distinct dirs like `sf0.1`/`sf0_1` to one path, letting
+    * one run reset or clobber another's staging — an md5 of the RAW
+    * string cannot collide that way. */
+  private[graft] def pathTag(raw: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(raw.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  /** Build-once (per JVM) READ-ONLY staged layout under `path`: derived
+    * copies of the testdata tables, prestaged serve stores and store
+    * templates, stream keys' source slices and fitted artifacts. These
+    * are one-off ETL / trained-artifact construction, not the
+    * measurand; every later call returns `path` without rebuilding.
+    * Stream keys re-drain the SAME staged source files with a fresh
+    * checkpoint, which re-forms identical micro-batches
+    * (maxFilesPerTrigger=1 + pinned mtime order), so what each query
+    * COMPUTES is unchanged.
+    * First touch in a JVM [[reset]]s the path before building, so a
+    * stale dir from an earlier run (or a doc a testdata regen removed)
+    * never leaks into the staging, and no memoized relation outlives
+    * the files it named.
+    *
+    * TESTDATA-IMMUTABLE-PER-JVM INVARIANT (ADVICE r17): the memo key
+    * is the staging PATH (a hash of the sf dir), not source content.
+    * Regenerating testdata under the same dir while a JVM stays alive
+    * would serve every staged artifact stale; the driver/bench
+    * lifecycle never does this (testdata is generated before any JVM
+    * starts), and a new JVM always rebuilds via the first-touch reset. */
+  private val staged = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private[graft] def stagedOnce(spark: SparkSession, path: String)
+                               (build: String => Unit): String = {
+    // a plain monitor, not computeIfAbsent: build closures may stage
+    // nested layouts REENTRANTLY (a compacted copy stages its landing
+    // zone first), and a nested computeIfAbsent on one ConcurrentHashMap
+    // throws "Recursive update" once the inner insert lands on a
+    // resizing bin. A JVM monitor is reentrant for the owning thread;
+    // concurrent first-callers serialize their builds.
+    if (!staged.contains(path)) staged.synchronized {
+      if (!staged.contains(path)) {
+        reset(spark, path)
+        build(path)
+        staged.add(path)
+      }
+    }
+    path
   }
 
   /** Write the small text sidecar `name` (parameters, listings) into

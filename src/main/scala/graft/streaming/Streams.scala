@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.Bm25
+import graft.sources.DeltaStore.{pathTag, stagedOnce}
 import graft.Lineage._
 
 /** Structured Streaming re-expression of the reference's streaming
@@ -39,62 +40,11 @@ object Streams {
     ()
   }
 
-  /** Collision-free directory tag for a raw identifier: the lossy
-    * `replaceAll("[^a-zA-Z0-9]", "_")` form mapped distinct pairs like
-    * `idx.v1`/`idx_v1` to one tempdir, letting one serving run delete
-    * another's sink — an md5 of the RAW string cannot collide that
-    * way. */
-  private def pathTag(raw: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(raw.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   /** Serializes the shuffle-partition pin below: two concurrent
     * drains could otherwise interleave set/restore and leave the
     * session pinned at 8 (the restore would capture the OTHER call's
     * pin as "previous"). */
   private val drainLock = new Object
-
-  /** Build-once (per JVM) READ-ONLY staged layout under `path` — the
-    * streaming twin of SparkEntry.cachedLayout, for the stream keys'
-    * SOURCE slices and pre-drain corpus artifacts (probe indexes,
-    * fitted centroids, mixture plans). These are one-off ETL /
-    * trained-artifact construction, not the measurand (the scaladocs
-    * above each stream already declare them "persisted once" /
-    * "a fitted artifact" / "the staged store, not a recompute"); the
-    * q_stream_delete feed established the staged-once convention in
-    * r15. Re-invocations re-drain the SAME files with a fresh
-    * checkpoint, which re-forms identical micro-batches
-    * (maxFilesPerTrigger=1 + pinned mtime order), so what each query
-    * COMPUTES is unchanged — only the repeated per-run staging leaves
-    * the timed region. First touch in a JVM deletes any stale dir
-    * from an earlier run before rebuilding (a regenerated testdata
-    * layout can never leak through a same-named stale staging).
-    *
-    * TESTDATA-IMMUTABLE-PER-JVM INVARIANT (ADVICE r17): the cache key
-    * is the staging PATH (a hash of the sf dir), not source content —
-    * the same contract as SparkEntry.cachedLayout. Regenerating
-    * testdata under the same dir while a JVM stays alive would serve
-    * every staged artifact stale; the driver/bench lifecycle never
-    * does this (testdata is generated before any JVM starts), and a
-    * new JVM always rebuilds via the first-touch delete. */
-  private val stageCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def stagedOnce(spark: SparkSession, path: String)
-                               (build: String => Unit): String = {
-    val hit = stageCache.get(path)
-    if (hit != null) return hit
-    // plain monitor, not computeIfAbsent: build closures may stage
-    // nested layouts (the SparkEntry.cachedLayout lesson)
-    stageCache.synchronized {
-      val again = stageCache.get(path)
-      if (again != null) again
-      else {
-        deleteRecursive(spark, path)
-        build(path)
-        stageCache.put(path, path)
-        path
-      }
-    }
-  }
 
   /** Run `query` (a streaming DataFrame) to a memory sink until the
     * source is drained; return the sink contents as a batch frame.

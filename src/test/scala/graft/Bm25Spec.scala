@@ -7,14 +7,8 @@ import graft.operators.Bm25
 import graft.sources.Tables
 
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new graft.functions.GraftExtensions)
-    .master("local[4]")
+  lazy val spark: SparkSession = Session.builder(4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
     .getOrCreate()
   val sf = "/root/testdata/sf0.001"

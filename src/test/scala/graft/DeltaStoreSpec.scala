@@ -146,6 +146,26 @@ class DeltaStoreSpec extends AnyFunSuite {
       .filter(p => qs.exists(q => p == q || p.startsWith(q + "/")))
   }
 
+  test("stagedOnce clears stale files and memoized relations on first touch, then builds once") {
+    val path = newStore()
+    writeDelta(path, "00000", Seq(1L))
+    val stale = DeltaStore.committedDeltas(spark, path)
+    assert(memoIds(stale.map(d => s"$d/rows")) == Seq(1L))
+    assert(memoOver(stale).nonEmpty)
+    var builds = 0
+    def stage(): String = DeltaStore.stagedOnce(spark, path) { p =>
+      builds += 1
+      Seq(7L).toDF("id").write.parquet(s"$p/fresh")
+    }
+    assert(stage() == path)
+    val fs = DeltaStore.fsOf(spark, path)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(stale.head)), "stale file survived first touch")
+    assert(memoOver(stale).isEmpty, "a memoized relation outlived the files it named")
+    assert(stage() == path)
+    assert(builds == 1)
+    assert(spark.read.parquet(s"$path/fresh").collect().map(_.getLong(0)).toSeq == Seq(7L))
+  }
+
   test("compaction and the stale sweep forget the memoized relations over the deltas they delete") {
     val store = newStore()
     writeDelta(store, "00000", Seq(1L))

@@ -62,7 +62,7 @@ class Round17OptSpec extends AnyFunSuite {
     assert(cut.agg(sum("x")).head.getLong(0) === 500500L)
   }
 
-  // ---- staged-once stream sources (Streams.stagedOnce) ----
+  // ---- staged-once stream sources (DeltaStore.stagedOnce) ----
 
   /** Two invocations of a staged-slice stream key drain the SAME
     * staged files with fresh checkpoints and must return identical
