@@ -368,7 +368,12 @@ object Bm25Index {
 
   def searchTopN(spark: SparkSession, path: String,
                  queryTerms: Seq[String] = Bm25.QueryTerms, n: Int = 10): DataFrame =
-    score(spark, path, queryTerms).orderBy(col("score").desc, col("doc_id").asc).limit(n)
+    topK(score(spark, path, queryTerms), n)
+
+  /** The top `k` of (doc_id, score) rows: score desc, doc_id asc — the
+    * tie-break every top-k serve shares. */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.orderBy(col("score").desc, col("doc_id").asc).limit(k)
 
   /** [[SearchExtras.maxScoreTopN]] served from the STAGED index —
     * upper-bound pruning where it belongs at 100 TB: ON the stored
@@ -392,40 +397,6 @@ object Bm25Index {
       postings.filter(col("term").isin(queryTerms: _*)), dl, k)
   }
 
-  /** BLOCK-MAX MaxScore: the θ cut prunes postings I/O, not just join
-    * width. [[maxScoreTopN]] bounds per TERM, so a common term's whole
-    * posting list is still read to compute its per-doc bounds; this
-    * route gates doc_id-range BLOCKS from the build-time `blockmax`
-    * sidecar BEFORE any posting row is read:
-    *
-    *   1. per-(term, block) upper bound u = okapiTerm(max_tf, df_live,
-    *      min_dl, avgdl, n_docs) — sound because okapiTerm is
-    *      increasing in tf and decreasing in dl; df_live reconstructs
-    *      EXACTLY from sidecars (per-term physical row counts minus
-    *      the delete deltas' deaddf counts), never from a row scan;
-    *   2. blocks are shared doc_id ranges, so Σ_terms u(t, b) bounds
-    *      every document in block b (a doc's whole query-term mass
-    *      lives in its own block) — the per-block sum is the gate;
-    *   3. θ seeds from the top blocks by that sum (accumulated until
-    *      the sidecar row counts guarantee ≥ k docs): ONLY those
-    *      blocks' rows are read and scored exactly — self-contained,
-    *      because blocks are doc ranges;
-    *   4. surviving blocks (Σu ≥ θ − 1e-4, the shared rounding slack;
-    *      a block holding any true top-k doc provably survives) merge
-    *      into contiguous doc_id ranges pushed as a LITERAL scan
-    *      predicate — parquet row-group pruning on the (term, doc_id)-
-    *      sorted postings does the I/O skip. Above [[MaxSurvivorRanges]]
-    *      the predicate is dropped (graceful degradation to the
-    *      maxScore-shaped unpruned scan — correct, just unpruned).
-    *
-    * Rows equal [[searchTopN]] exactly (admissible prune, identical
-    * okapiTerm arithmetic/rounding/tie-breaks — shared oracle with
-    * q_search_topn). Driver syncs are bounded: ≤ 64 seed-block rows,
-    * one θ scalar, ≤ MaxSurvivorRanges+1 survivor ids. Requires full
-    * sidecar coverage (every update delta carries blockmax, every
-    * delete delta deaddf) and fails loudly otherwise — compact or
-    * rebuild a store that predates the sidecars. Tombstones only ever
-    * RAISE the bounds (max over a superset), never break them. */
   /** Sidecar-coverage gate shared by the block-max serves: the
     * committed deltas split into update/delete legs, each leg
     * carrying its sidecar (blockmax / deaddf) — fails loudly
@@ -500,6 +471,19 @@ object Bm25Index {
       case (acc, b) => (b, b + 1) :: acc
     }
 
+  /** True when the update deltas' id-range sidecars put every doc in
+    * ONE [[BlockWidth]] block, so a block-max serve has no block to
+    * skip. Sidecar reads only (no Spark job), stopping as soon as the
+    * union spans two blocks; false when any update delta has no range
+    * sidecar. Ids are non-negative here: a delta carries `blockmax`
+    * only when they are. */
+  private def oneBlock(spark: SparkSession, updDeltas: Seq[String]): Boolean = {
+    def span(r: (Long, Long)) = r._2 / BlockWidth - r._1 / BlockWidth
+    updDeltas.nonEmpty &&
+      DeltaStore.rangeUnion(DeltaStore.fsOf(spark, updDeltas.head), updDeltas,
+        span(_) > 0).exists(span(_) == 0)
+  }
+
   /** A short OR-of-doc_id-ranges LITERAL predicate over the merged
     * blocks — it reaches the parquet scan, and row-group stats on the
     * sorted doc_id do the skip. */
@@ -509,6 +493,50 @@ object Bm25Index {
         col("doc_id") < lit(hi * BlockWidth)
     }.reduce(_ || _)
 
+  /** BLOCK-MAX MaxScore: the θ cut prunes postings I/O, not just join
+    * width. [[maxScoreTopN]] bounds per TERM, so a common term's whole
+    * posting list is still read to compute its per-doc bounds; this
+    * route gates doc_id-range BLOCKS from the build-time `blockmax`
+    * sidecar BEFORE any posting row is read:
+    *
+    *   0. route: when the update deltas' `docid.range` sidecars put
+    *      every doc in ONE block, no block can be skipped, so the serve
+    *      is the exact single plan ([[searchTopN]]'s, over the same
+    *      deltas) — decided from the sidecars alone, no Spark job;
+    *   1. per-(term, block) upper bound u = okapiTerm(max_tf, df_live,
+    *      min_dl, avgdl, n_docs) — sound because okapiTerm is
+    *      increasing in tf and decreasing in dl; df_live reconstructs
+    *      EXACTLY from sidecars (per-term physical row counts minus
+    *      the delete deltas' deaddf counts), never from a row scan;
+    *   2. blocks are shared doc_id ranges, so Σ_terms u(t, b) bounds
+    *      every document in block b (a doc's whole query-term mass
+    *      lives in its own block) — the per-block sum is the gate;
+    *   3. θ seeds from the top blocks by that sum (accumulated until
+    *      the sidecar row counts guarantee ≥ k docs): ONLY those
+    *      blocks' rows are read and scored exactly — self-contained,
+    *      because blocks are doc ranges. When the collected top blocks
+    *      are ALL the blocks and every one is a seed, the seed pass
+    *      could skip nothing: the exact pass runs unpruned instead;
+    *   4. surviving blocks (Σu ≥ θ − 1e-4, the shared rounding slack;
+    *      a block holding any true top-k doc provably survives) merge
+    *      into contiguous doc_id ranges pushed as a LITERAL scan
+    *      predicate — parquet row-group pruning on the (term, doc_id)-
+    *      sorted postings does the I/O skip. When the collected top
+    *      blocks are all the blocks, the survivors filter on the
+    *      driver from those rows, with no further job. Above
+    *      [[MaxSurvivorRanges]] the predicate is dropped (graceful
+    *      degradation to the maxScore-shaped unpruned scan — correct,
+    *      just unpruned).
+    *
+    * Rows equal [[searchTopN]] exactly (admissible prune, identical
+    * okapiTerm arithmetic/rounding/tie-breaks — shared oracle with
+    * q_search_topn). Driver syncs are bounded: ≤ 64 seed-block rows,
+    * one θ scalar, ≤ MaxSurvivorRanges+1 survivor ids. Requires full
+    * sidecar coverage (every update delta carries blockmax, every
+    * delete delta deaddf) and fails loudly otherwise, before the
+    * route — compact or rebuild a store that predates the sidecars.
+    * Tombstones only ever RAISE the bounds (max over a superset),
+    * never break them. */
   def blockMaxTopN(spark: SparkSession, path: String,
                    queryTerms: Seq[String] = Bm25.QueryTerms,
                    k: Int = 10): DataFrame = {
@@ -535,6 +563,7 @@ object Bm25Index {
   private def blockMaxServe(spark: SparkSession, deltas: Seq[String],
                             updDeltas: Seq[String], delDeltas: Seq[String],
                             queryTerms: Seq[String], k: Int): DataFrame = {
+    if (oneBlock(spark, updDeltas)) return topK(scoreDeltas(spark, deltas, queryTerms), k)
     val (postings, dlLive) = DeltaStore.livePair(spark, deltas, "doc_id", "postings", "doclen")
     val (blocks, dfLive0) = blockBounds(spark, updDeltas, delDeltas, queryTerms)
     // the θ protocol consumes dfLive / the corpus stats / the block
@@ -580,17 +609,20 @@ object Bm25Index {
     // distinct docs, so max_t n_rows lower-bounds the block's doc
     // count — tombstones can overcount, and the -inf fallback below
     // keeps an under-seeded θ sound)
+    val topCap = 64
     val top = blockSum
-      .orderBy(col("usum").desc, col("block_id").asc).limit(64)
+      .orderBy(col("usum").desc, col("block_id").asc).limit(topCap)
       .select("block_id", "usum", "docs_lb").collect()
+    // fewer rows than the cap: `top` holds every block with a query term
+    val allBlocks = top.length < topCap
     val seedIds = scala.collection.mutable.ArrayBuffer.empty[Long]
     var seen = 0L
     for (r <- top if seen < k) { seedIds += r.getLong(0); seen += r.getLong(2) }
     val candidates: Option[Seq[Long]] =
       if (seedIds.isEmpty) None // query terms absent: nothing to prune
+      else if (allBlocks && seedIds.size == top.length) None // every block is a seed
       else {
-        val seedAgg = exactIn(Some(seedIds.toSeq))
-          .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+        val seedAgg = topK(exactIn(Some(seedIds.toSeq)), k)
           .agg(count(lit(1)).as("n"), min("score").as("kth")).head
         if (seedAgg.getLong(0) < k) None // under-seeded θ: no prune
         else {
@@ -598,18 +630,21 @@ object Bm25Index {
           // bounded survivor sync: collect at most collectCap+1 block
           // ids; hitting the cap (or exceeding MaxSurvivorRanges after
           // merging adjacent blocks — a contiguous run collapses to
-          // one clause) degrades to the unpruned scan
+          // one clause) degrades to the unpruned scan. When `top` holds
+          // every block, its rows already carry each bound sum
           val collectCap = MaxSurvivorRanges * 64
-          val surv = blockSum.filter(col("usum") >= lit(theta - 1e-4))
-            .select("block_id").limit(collectCap + 1)
-            .collect().map(_.getLong(0)).toSeq
+          val surv =
+            if (allBlocks)
+              top.filter(_.getDouble(1) >= theta - 1e-4).map(_.getLong(0)).toSeq
+            else blockSum.filter(col("usum") >= lit(theta - 1e-4))
+              .select("block_id").limit(collectCap + 1)
+              .collect().map(_.getLong(0)).toSeq
           if (surv.size > collectCap ||
             mergedRanges(surv).size > MaxSurvivorRanges) None
           else Some(surv)
         }
       }
-    exactIn(candidates)
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+    topK(exactIn(candidates), k)
   }
 
   /** (query_id, doc_id, score, rk): BM25 top-k for a TABLE of queries
@@ -675,14 +710,18 @@ object Bm25Index {
     * contract already broadcasts the query table; above the cap it
     * serves unpruned), the seed-union ids, one θ relation
     * (query-table-sized, broadcast), the survivor-union ids — each
-    * capped, every cap degrading to the unpruned scan. At the gate SF
-    * the extra jobs dominate; at 100 TB the skipped postings
-    * row-groups are the point (the reference serves its query loop
-    * one Mongo lookup at a time — file:line cited on [[batchSearch]]). */
+    * capped, every cap degrading to the unpruned scan. A store whose
+    * ids all sit in one block skips the protocol (step 0 of
+    * [[blockMaxTopN]]) and serves [[batchSearch]]'s plan, so the gate
+    * SF's one-block stores pay none of its jobs; on a multi-block
+    * store the skipped postings row-groups are the point (the
+    * reference serves its query loop one Mongo lookup at a time —
+    * file:line cited on [[batchSearch]]). */
   def blockMaxBatchSearch(spark: SparkSession, path: String,
                           queries: DataFrame, k: Int = 10): DataFrame = {
     val (deltas, updDeltas, delDeltas) = blockmaxDeltas(spark, path)
     val (postings, dlLive) = DeltaStore.livePair(spark, deltas, "doc_id", "postings", "doclen")
+    if (oneBlock(spark, updDeltas)) return Bm25.batchScoreFrom(postings, dlLive, queries, k)
     val qterms = Bm25.queryTermsOf(queries)
     val termCap = 4096
     val terms = qterms.select("term").distinct().limit(termCap + 1)

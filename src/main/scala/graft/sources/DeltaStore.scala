@@ -271,6 +271,26 @@ object DeltaStore {
       (lo.toLong, hi.toLong)
     }
 
+  /** The union of the deltas' id-range sidecars, read in order; None
+    * when a delta read has none (its span is unknown). Reading stops
+    * as soon as `enough` holds for the union so far, which is then
+    * returned as it stands. */
+  def rangeUnion(fs: FileSystem, deltas: Seq[String],
+                 enough: ((Long, Long)) => Boolean = _ => false): Option[(Long, Long)] = {
+    @annotation.tailrec
+    def go(rest: List[String], acc: Option[(Long, Long)]): Option[(Long, Long)] =
+      rest match {
+        case Nil => acc
+        case d :: tl => readRange(fs, d) match {
+          case None => None
+          case Some((lo, hi)) =>
+            val u = acc.fold((lo, hi)) { case (a, b) => (math.min(a, lo), math.max(b, hi)) }
+            if (enough(u)) Some(u) else go(tl, Some(u))
+        }
+      }
+    go(deltas.toList, None)
+  }
+
   /** One batch-scaled aggregation: (isEmpty, lo, hi) of `idCol`. A
     * non-integral id type (or an all-NULL id column) yields lo > hi —
     * the "no range" marker, which disables pruning but never the
@@ -523,12 +543,7 @@ object DeltaStore {
     val deltas = committedDeltas(spark, path)
     if (deltas.size <= 1) return
     val tag = "compact-" + java.util.UUID.randomUUID().toString
-    val ranges = deltas.map(d => readRange(fs, d))
-    val merged =
-      if (ranges.forall(_.isDefined)) {
-        val rs = ranges.flatten
-        Some((rs.map(_._1).min, rs.map(_._2).max))
-      } else None
+    val merged = rangeUnion(fs, deltas)
     val names = deltas.map(d => new Path(d).getName)
     // cumulative tag history: the folded deltas' names plus everything
     // THEY had already absorbed — keeps isCommitted true for every tag

@@ -7,13 +7,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * re-commit of `delta-00000`), and a fresh template copy followed by
   * an ingest or a stream drain (a re-commit of `delta-00001` /
   * `delta-batch-N`). The second run must read the files it wrote, not
-  * the first run's, and return the same rows. */
+  * the first run's, and return the same rows. The block-max serve keys
+  * run here too: their route is chosen from the store's id-range
+  * sidecars on every call, and a rerun must take it to the same rows. */
 class RerunSpec extends AnyFunSuite {
   import SparkTestSession._
 
   private val rerunKeys = Seq(
     "q_index_merge", "q_dedup_merge", "q_semantic_merge", "q_ann_merge",
-    "q_ann_index_incremental", "q_stream_pq")
+    "q_ann_index_incremental", "q_stream_pq",
+    "q_index_blockmax", "q_index_asof_blockmax", "q_index_batch_search")
 
   private def rows(key: String): Map[String, Int] =
     SparkEntry.queries(key)(spark, sf).collect().toSeq
