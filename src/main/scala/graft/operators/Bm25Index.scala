@@ -514,19 +514,14 @@ object Bm25Index {
     *   3. θ seeds from the top blocks by that sum (accumulated until
     *      the sidecar row counts guarantee ≥ k docs): ONLY those
     *      blocks' rows are read and scored exactly — self-contained,
-    *      because blocks are doc ranges. When the collected top blocks
-    *      are ALL the blocks and every one is a seed, the seed pass
-    *      could skip nothing: the exact pass runs unpruned instead;
+    *      because blocks are doc ranges;
     *   4. surviving blocks (Σu ≥ θ − 1e-4, the shared rounding slack;
     *      a block holding any true top-k doc provably survives) merge
     *      into contiguous doc_id ranges pushed as a LITERAL scan
     *      predicate — parquet row-group pruning on the (term, doc_id)-
-    *      sorted postings does the I/O skip. When the collected top
-    *      blocks are all the blocks, the survivors filter on the
-    *      driver from those rows, with no further job. Above
-    *      [[MaxSurvivorRanges]] the predicate is dropped (graceful
-    *      degradation to the maxScore-shaped unpruned scan — correct,
-    *      just unpruned).
+    *      sorted postings does the I/O skip. Above [[MaxSurvivorRanges]]
+    *      the predicate is dropped (graceful degradation to the
+    *      maxScore-shaped unpruned scan — correct, just unpruned).
     *
     * Rows equal [[searchTopN]] exactly (admissible prune, identical
     * okapiTerm arithmetic/rounding/tie-breaks — shared oracle with
@@ -609,18 +604,14 @@ object Bm25Index {
     // distinct docs, so max_t n_rows lower-bounds the block's doc
     // count — tombstones can overcount, and the -inf fallback below
     // keeps an under-seeded θ sound)
-    val topCap = 64
     val top = blockSum
-      .orderBy(col("usum").desc, col("block_id").asc).limit(topCap)
+      .orderBy(col("usum").desc, col("block_id").asc).limit(64)
       .select("block_id", "usum", "docs_lb").collect()
-    // fewer rows than the cap: `top` holds every block with a query term
-    val allBlocks = top.length < topCap
     val seedIds = scala.collection.mutable.ArrayBuffer.empty[Long]
     var seen = 0L
     for (r <- top if seen < k) { seedIds += r.getLong(0); seen += r.getLong(2) }
     val candidates: Option[Seq[Long]] =
       if (seedIds.isEmpty) None // query terms absent: nothing to prune
-      else if (allBlocks && seedIds.size == top.length) None // every block is a seed
       else {
         val seedAgg = topK(exactIn(Some(seedIds.toSeq)), k)
           .agg(count(lit(1)).as("n"), min("score").as("kth")).head
@@ -630,15 +621,11 @@ object Bm25Index {
           // bounded survivor sync: collect at most collectCap+1 block
           // ids; hitting the cap (or exceeding MaxSurvivorRanges after
           // merging adjacent blocks — a contiguous run collapses to
-          // one clause) degrades to the unpruned scan. When `top` holds
-          // every block, its rows already carry each bound sum
+          // one clause) degrades to the unpruned scan
           val collectCap = MaxSurvivorRanges * 64
-          val surv =
-            if (allBlocks)
-              top.filter(_.getDouble(1) >= theta - 1e-4).map(_.getLong(0)).toSeq
-            else blockSum.filter(col("usum") >= lit(theta - 1e-4))
-              .select("block_id").limit(collectCap + 1)
-              .collect().map(_.getLong(0)).toSeq
+          val surv = blockSum.filter(col("usum") >= lit(theta - 1e-4))
+            .select("block_id").limit(collectCap + 1)
+            .collect().map(_.getLong(0)).toSeq
           if (surv.size > collectCap ||
             mergedRanges(surv).size > MaxSurvivorRanges) None
           else Some(surv)

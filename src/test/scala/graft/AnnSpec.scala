@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Ann
 import graft.sources.Tables
 
-class AnnSpec extends AnyFunSuite with HangGuard {
+class AnnSpec extends AnyFunSuite {
   import SparkTestSession._
 
   lazy val emb = Tables.embeddings(spark, sf)

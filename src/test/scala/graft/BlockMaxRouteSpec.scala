@@ -11,10 +11,9 @@ import graft.sources.Tables
 /** The block-max serve's route: the θ protocol runs only when it could
   * skip a block. A store whose ids all sit in one 1,024-id block serves
   * the exact single plan (no doc_id range literal, no more Spark jobs
-  * than `searchTopN`); a multi-block store whose collected blocks are
-  * all seeds serves the unpruned exact pass; a multi-block store with
-  * more blocks than the seed collect holds still runs the survivor
-  * collect. Every case compares rows with the corpus-derived
+  * than `searchTopN`). Multi-block stores keep the protocol; its plan
+  * shape is pinned by the `Round15Spec` / `Round16Spec` block-max
+  * tests. Every case compares rows with the corpus-derived
   * `Bm25.searchTopN` / `Bm25.batchSearch` on the same live corpus. */
 class BlockMaxRouteSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -49,34 +48,41 @@ class BlockMaxRouteSpec extends AnyFunSuite {
   }
 
   /** Spark jobs started by `run` (DataFrame construction included):
-    * the jobs seen between two marker jobs. A listener sees job starts
-    * in submission order, so once the end marker arrives every job of
-    * `run` has been seen. */
+    * the jobs of a job group set on this thread for `run` alone, so a
+    * job some other thread submits meanwhile is not counted. Threads
+    * `run` starts inherit the group. A listener sees job starts in
+    * submission order, so once the group's end-marker job arrives
+    * every job of `run` has been seen. */
   private def jobsOf(run: => Unit): Int = {
     val sc = spark.sparkContext
+    val group = "route-spec-" + java.util.UUID.randomUUID()
     val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group))
+          seen.put(props.flatMap(p => Option(p.getProperty("spark.job.description")))
+            .getOrElse(""))
+      }
     }
     sc.addSparkListener(listener)
+    sc.setJobGroup(group, "route-spec-run")
     try {
-      marker("route-spec-start")
       run
-      marker("route-spec-end")
-      val order = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (!order.lastOption.contains("route-spec-end")) {
+      sc.setJobDescription("route-spec-end")
+      sc.parallelize(Seq(1), 1).count()
+      var jobs = 0
+      var done = false
+      while (!done) {
         val d = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
         assert(d != null, "the end marker job never reached the listener")
-        order += d
+        if (d == "route-spec-end") done = true else jobs += 1
       }
-      order.size - order.indexOf("route-spec-start") - 2
-    } finally sc.removeSparkListener(listener)
+      jobs
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("one-block store: exact single plan, no range literal, no more jobs than searchTopN") {
@@ -128,36 +134,6 @@ class BlockMaxRouteSpec extends AnyFunSuite {
     val served = Bm25Index.blockMaxBatchSearch(spark, p, queries)
     assert(brows(served) === brows(Bm25.batchSearch(docs, queries)))
     assert(!hasRangeLiteral(served))
-  }
-
-  test("multi-block store whose blocks are all seeds serves the unpruned exact pass") {
-    // 4 sparse blocks (0, 2, 4, 6) of 3 query-term docs each: fewer than
-    // k per block, so the seed loop takes every block and the seed pass
-    // could skip nothing
-    val ids = Seq(0L, 2L, 4L, 6L).flatMap(b => (0L until 3L).map(b * Bm25Index.BlockWidth + 7 * _))
-    val docs = docsAt(ids)
-    val p = tmp("bmr5")
-    Bm25Index.build(docs, p)
-    val served = Bm25Index.blockMaxTopN(spark, p, terms)
-    assert(rows(served) === rows(Bm25.searchTopN(docs, terms)))
-    assert(!hasRangeLiteral(served), "every block is a seed: nothing to gate")
-  }
-
-  test("multi-block store with more blocks than the seed collect keeps the survivor collect") {
-    // block 0 holds 12 strong docs; 70 later blocks one weak doc each, so
-    // the 64-row seed collect is truncated and survivors come from a job
-    import spark.implicits._
-    val filler = (1 to 40).map(i => s"filler$i word$i").mkString(" ")
-    val strong = (0L until 12L).map(i => (i, s"spark spark spark query query join fast extra$i"))
-    val weak = (1L to 70L).map(b => (b * Bm25Index.BlockWidth + 3, s"fast $filler"))
-    val docs = (strong ++ weak).toDF("doc_id", "text")
-    val p = tmp("bmr6")
-    Bm25Index.build(docs, p)
-    val served = Bm25Index.blockMaxTopN(spark, p, terms)
-    assert(rows(served) === rows(Bm25.searchTopN(docs, terms)))
-    val plan = served.queryExecution.executedPlan.toString
-    assert(plan.contains("LessThan(doc_id,1024)"),
-      s"expected the block-0 range pushed into the postings scan; plan:\n$plan")
   }
 
   test("one-block store without the blockmax sidecar still fails the coverage check") {

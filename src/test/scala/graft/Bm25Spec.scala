@@ -14,7 +14,7 @@ object SparkTestSession {
   val sf = "/root/testdata/sf0.001"
 }
 
-class Bm25Spec extends AnyFunSuite with HangGuard {
+class Bm25Spec extends AnyFunSuite {
   import SparkTestSession._
 
   lazy val docs = Tables.documents(spark, sf)

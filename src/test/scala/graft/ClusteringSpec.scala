@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Ann, Clustering, Dedup}
 import graft.sources.Tables
 
-class ClusteringSpec extends AnyFunSuite with HangGuard {
+class ClusteringSpec extends AnyFunSuite {
   import SparkTestSession._
   import spark.implicits._
 

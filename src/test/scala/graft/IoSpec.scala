@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Bm25, Bm25Index}
 import graft.sources.{Corpus, Sinks, Tables, Zorder}
 
-class IoSpec extends AnyFunSuite with HangGuard {
+class IoSpec extends AnyFunSuite {
   import SparkTestSession._
 
   private def tmpDir(prefix: String): String =

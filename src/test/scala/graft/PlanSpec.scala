@@ -13,7 +13,7 @@ import graft.sources.Tables
   * corpus passes. These fail if a refactor silently regresses the
   * physical plan even when results stay correct.
   */
-class PlanSpec extends AnyFunSuite with HangGuard {
+class PlanSpec extends AnyFunSuite {
   import SparkTestSession._
 
   private def planString(df: DataFrame): String = {

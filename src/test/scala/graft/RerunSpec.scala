@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the first run's, and return the same rows. The block-max serve keys
   * run here too: their route is chosen from the store's id-range
   * sidecars on every call, and a rerun must take it to the same rows. */
-class RerunSpec extends AnyFunSuite with HangGuard {
+class RerunSpec extends AnyFunSuite {
   import SparkTestSession._
 
   private val rerunKeys = Seq(

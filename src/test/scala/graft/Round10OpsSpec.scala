@@ -11,7 +11,7 @@ import graft.sources.Tables
   * and the staged dedup threshold curve. Properties here are the
   * algorithmic guarantees the oracles can't see (dominance, density,
   * monotonicity); value parity is the DuckDB crosscheck's job. */
-class Round10OpsSpec extends AnyFunSuite with HangGuard {
+class Round10OpsSpec extends AnyFunSuite {
   import SparkTestSession._
 
   lazy val docs = Tables.documents(spark, sf)

@@ -12,7 +12,7 @@ import graft.sources.Tables
   * average, lexical richness. Planted-topology and closed-form cases
   * prove the semantics the corpus oracles can't isolate (empty review
   * queues, multi-source min-hop, window gaps, independence nulls). */
-class Round11bSpec extends AnyFunSuite with HangGuard {
+class Round11bSpec extends AnyFunSuite {
   import SparkTestSession._
 
   // ---- Jaccard link prediction ----

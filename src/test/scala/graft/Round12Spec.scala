@@ -11,7 +11,7 @@ import graft.sources.Tables
   * components) and bridge edges (wedge join was O(m³) per m-copy
   * clique). Planted copy-clique corpora prove the closed-form
   * multiplicity arithmetic; gate-corpus equality pins staged == live. */
-class Round12Spec extends AnyFunSuite with HangGuard {
+class Round12Spec extends AnyFunSuite {
   import SparkTestSession._
 
   /** A corpus that exercises every copy-symmetry class: a 3-copy

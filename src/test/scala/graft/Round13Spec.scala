@@ -17,7 +17,7 @@ import graft.sources.Tables
   * class into two subclasses that stay internally uniform). Planted
   * corpora exercise every subclass shape; gate-corpus equality pins
   * staged == live end-to-end. */
-class Round13Spec extends AnyFunSuite with HangGuard {
+class Round13Spec extends AnyFunSuite {
   import SparkTestSession._
 
   /** Copy-symmetry worst-case shapes with seeds (%7 == 0) landing both

@@ -9,7 +9,7 @@ import graft.sources.Tables
 /** Round-14 batch 2: the SQ8 scalar-quantization rung (int8 cosine
   * serve + distortion dashboard), semantic (embedding-space) eval-set
   * decontamination, and bipartite HITS. */
-class Round14bSpec extends AnyFunSuite with HangGuard {
+class Round14bSpec extends AnyFunSuite {
   import SparkTestSession._
 
   lazy val emb = Tables.embeddings(spark, sf)

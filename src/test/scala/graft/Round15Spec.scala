@@ -15,7 +15,7 @@ import graft.operators.{Bm25, Bm25Index}
   * exact, so serving equals a rebuild on the surviving corpus;
   * (4) compaction regenerates the `blockmax` sidecar from live rows;
   * (5) a store without sidecar coverage fails loudly. */
-class Round15Spec extends AnyFunSuite with HangGuard {
+class Round15Spec extends AnyFunSuite {
   import SparkTestSession._
 
   private def tmp(prefix: String): String =

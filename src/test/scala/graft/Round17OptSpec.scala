@@ -10,7 +10,7 @@ import graft.sources.Tables
   * (lazy lineage cuts, staged-once stream sources/artifacts, pristine
   * store templates copied per run) each get a spec pinning the
   * equivalence the optimization relies on — see OPTIMIZATION_r17.md. */
-class Round17OptSpec extends AnyFunSuite with HangGuard {
+class Round17OptSpec extends AnyFunSuite {
   import SparkTestSession._
 
   // ---- lazy lineage cuts (Lineage.cut eager=false default) ----

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * key gets a planted exact case plus a real-corpus parity fold; the
   * multiprobe × merge interaction the r16 verdict named untested is
   * pinned here. */
-class Round17Spec extends AnyFunSuite with HangGuard {
+class Round17Spec extends AnyFunSuite {
   import SparkTestSession._
 
   // ---- q_wordpiece_encode ----

@@ -8,7 +8,7 @@ import graft.sources.Tables
 
 /** Round-4 operators: index serving, bloom semi-join, CMS heavy
   * hitters, vector analytics, OLAP additions. */
-class Round4Spec extends AnyFunSuite with HangGuard {
+class Round4Spec extends AnyFunSuite {
   import SparkTestSession._
 
   lazy val docs = Tables.documents(spark, sf)

@@ -9,7 +9,7 @@ import graft.sources.Tables
 /** Round-5 operators: keyword extraction, LM scoring, entropy,
   * quantization, streaming upsert convergence. (TPC-H shapes and the
   * source round-trips are oracle-gated; plan shapes in PlanSpec.) */
-class Round5Spec extends AnyFunSuite with HangGuard {
+class Round5Spec extends AnyFunSuite {
   import SparkTestSession._
 
   lazy val docs = Tables.documents(spark, sf)

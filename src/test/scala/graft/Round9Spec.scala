@@ -12,7 +12,7 @@ import graft.sources.Tables
   * the exactness gate; these specs pin the semantic invariants the
   * hash can't express.
   */
-class Round9Spec extends AnyFunSuite with HangGuard {
+class Round9Spec extends AnyFunSuite {
   import SparkTestSession._
 
   lazy val docs = Tables.documents(spark, sf)

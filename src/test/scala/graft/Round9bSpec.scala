@@ -12,7 +12,7 @@ import graft.sources.Tables
   * range search. The DuckDB oracle is the exactness gate; these pin
   * the invariants the hash can't express.
   */
-class Round9bSpec extends AnyFunSuite with HangGuard {
+class Round9bSpec extends AnyFunSuite {
   import SparkTestSession._
 
   lazy val docs = Tables.documents(spark, sf)

@@ -12,7 +12,7 @@ import graft.sources.Tables
   * the exactness gate; these pin the invariants the hash can't
   * express.
   */
-class Round9cSpec extends AnyFunSuite with HangGuard {
+class Round9cSpec extends AnyFunSuite {
   import SparkTestSession._
 
   lazy val docs = Tables.documents(spark, sf)

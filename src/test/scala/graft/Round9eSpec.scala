@@ -11,7 +11,7 @@ import graft.sources.Tables
   * oracle pins exactness; these pin the statistical semantics (brute
   * replays, robustness, noise bounds) the hash can't express.
   */
-class Round9eSpec extends AnyFunSuite with HangGuard {
+class Round9eSpec extends AnyFunSuite {
   import SparkTestSession._
 
   lazy val docs = Tables.documents(spark, sf)

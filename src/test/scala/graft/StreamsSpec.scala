@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.Streams
 
-class StreamsSpec extends AnyFunSuite with HangGuard {
+class StreamsSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("windowed word count over the event stream matches the batch plan") {

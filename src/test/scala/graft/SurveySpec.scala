@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * — this spec makes the third break a red test instead of a judge
   * finding.
   */
-class SurveySpec extends AnyFunSuite with HangGuard {
+class SurveySpec extends AnyFunSuite {
 
   private lazy val survey: String = {
     val p = java.nio.file.Paths.get("SURVEY.md")
