@@ -585,14 +585,12 @@ object SparkEntry {
     "q_phrase" -> ((s, dir) => Positional.phraseSearch(Tables.documents(s, dir))),
     "q_bm25f" -> ((s, dir) => Positional.bm25fScore(Tables.documents(s, dir))),
     "q_prf_search" -> ((s, dir) => Positional.expandedSearch(Tables.documents(s, dir))),
-    // query TABLE served from the staged index, BLOCK-MAX GATED since
-    // r16 (per-query θ over the shared doc-range blocks, survivor
-    // ranges unioned into one literal scan predicate — r15 verdict
-    // task 5) — same rows as the corpus-derived q_search_batch
-    // (shared oracle; the prune is admissible)
+    // query TABLE served from the staged index: one exact plan over
+    // the term-pruned postings — same rows as the corpus-derived
+    // q_search_batch (shared oracle)
     "q_index_batch_search" -> ((s, dir) => {
       import s.implicits._
-      Bm25Index.blockMaxBatchSearch(s, indexFor(s, dir),
+      Bm25Index.batchSearch(s, indexFor(s, dir),
         Bm25.DemoQueries.toDF("query_id", "qtext"))
     }),
     // query STREAM served from the staged index (the reference's
@@ -802,12 +800,11 @@ object SparkEntry {
     // doclen joins only the θ-cut survivors; rows equal q_search_topn
     "q_index_maxscore" -> ((s, dir) =>
       Bm25Index.maxScoreTopN(s, indexFor(s, dir))),
-    // BLOCK-MAX MaxScore: the θ cut prunes doc_id-range BLOCKS from
-    // the build-time blockmax sidecar BEFORE any posting row is read
-    // (row-group skips on the (term, doc_id)-sorted postings), not
-    // just the doclen join width; rows equal q_search_topn exactly
+    // the staged index's exact top-k: one scoring plan plus order +
+    // limit, rows equal q_search_topn exactly (the key keeps its
+    // block-max name so its oracle and bench history stay keyed)
     "q_index_blockmax" -> ((s, dir) =>
-      Bm25Index.blockMaxTopN(s, indexFor(s, dir))),
+      Bm25Index.searchTopN(s, indexFor(s, dir))),
     "q_snippets" -> ((s, dir) => SearchExtras.snippets(Tables.documents(s, dir))),
     "q_autocomplete" -> ((s, dir) => SearchExtras.autocomplete(Tables.documents(s, dir))),
     "q_search_ndcg" -> ((s, dir) => SearchExtras.searchNdcg(Tables.documents(s, dir))),
@@ -1426,12 +1423,11 @@ object SparkEntry {
     // store's q_index_timetravel)
     "q_index_asof" -> ((s, dir) =>
       Bm25Index.scoreAt(s, asofIndexFor(s, dir), maxTag = "00000")),
-    // the block-max rung of the time-travel contract (r16): top-k
-    // served from the PINNED delta subset with sidecar coverage
-    // asserted on that subset — rows equal a rebuild on the pinned
-    // corpus (admissible prune; the same staged two-version store)
+    // the top-k rung of the time-travel contract: the exact top-k of
+    // the PINNED delta subset — rows equal a rebuild on the pinned
+    // corpus (the same staged two-version store)
     "q_index_asof_blockmax" -> ((s, dir) =>
-      Bm25Index.blockMaxTopNAt(s, asofIndexFor(s, dir), maxTag = "00000")),
+      Bm25Index.searchTopNAt(s, asofIndexFor(s, dir), maxTag = "00000")),
     // snapshot DIFF between the two pinned versions: the top terms by
     // df shift — what the 00001 ingest changed, read before promotion
     "q_index_diff" -> ((s, dir) =>
@@ -1485,16 +1481,15 @@ object SparkEntry {
       AnnIndex.searchTopK(s, p, queryId = 1L)
     }),
     // SHARD MERGE on the text index: two half-corpus stores (id-prefix
-    // shards, built shared-nothing) fold into one fresh store — the
-    // block-max sidecars merge WITHOUT rescanning postings (doc-range
-    // blocks share one universe: counts sum, bounds max/min) — then
-    // the merged store serves the exact full-corpus top-10 through
-    // the block-max rung (merge is the measurand, rerun from scratch)
+    // shards, built shared-nothing) fold into one fresh store — doclen
+    // files copy through, postings re-cluster on term — then the
+    // merged store serves the exact full-corpus top-10 (merge is the
+    // measurand, rerun from scratch)
     "q_index_merge" -> ((s, dir) => {
       val shards = bm25ShardsFor(s, dir)
       val dest = sys.props("java.io.tmpdir") + "/graft_idx_merged_" + pathTag(dir)
       Bm25Index.mergeStores(s, s"$shards/a", s"$shards/b", dest)
-      Bm25Index.blockMaxTopN(s, dest)
+      Bm25Index.searchTopN(s, dest)
     }),
     // the semantic-substrate merge: cross-shard cosine pairs from
     // staged rep vectors (no re-embedding-scan), value-key
@@ -3527,7 +3522,7 @@ object SparkEntry {
     // staged-index MaxScore serves the same exact top-k (shared oracle)
     "q_index_maxscore" ->
       s"WITH $bm25Cte SELECT doc_id, score FROM scored ORDER BY score DESC, doc_id ASC LIMIT 10",
-    // block-max pruning is admissible too → same exact top-k oracle
+    // the staged exact top-k → same exact top-k oracle
     "q_index_blockmax" ->
       s"WITH $bm25Cte SELECT doc_id, score FROM scored ORDER BY score DESC, doc_id ASC LIMIT 10",
     // a merged store serves identically to a full-corpus rebuild
@@ -8310,8 +8305,7 @@ object SparkEntry {
          |ORDER BY cos DESC, vec_id ASC LIMIT 10""".stripMargin,
     // snapshot read: scores equal a rebuild on the pinned 4/5 corpus
     "q_index_asof" -> bm25RestrictedOracle("doc_id % 5 <> 0"),
-    // pinned BLOCK-MAX top-k: the admissible prune changes no row, so
-    // the oracle is the pinned rebuild's exact top-k
+    // pinned top-k: the oracle is the pinned rebuild's exact top-k
     "q_index_asof_blockmax" ->
       s"""${bm25RestrictedOracle("doc_id % 5 <> 0")}
          |ORDER BY score DESC, doc_id ASC LIMIT 10""".stripMargin,

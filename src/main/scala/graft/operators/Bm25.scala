@@ -298,7 +298,7 @@ object Bm25 {
 
   /** (query_id, term): the distinct tokenized terms of a query table —
     * the one tokenization every batch-serving route shares. */
-  private[operators] def queryTermsOf(queries: DataFrame): DataFrame =
+  private def queryTermsOf(queries: DataFrame): DataFrame =
     queries
       .select(col("query_id"), explode(Text.rawTokens(col("qtext"))).as("term"))
       .filter(Text.keepToken(col("term")))
@@ -307,27 +307,16 @@ object Bm25 {
   /** The shared query-table scoring stage over ANY (doc_id, term, tf)
     * + (doc_id, dl) pair — the corpus-derived form above and the
     * staged-index form ([[Bm25Index.batchSearch]], streaming serving)
-    * both end here, so the scoring contract lives in one place.
-    * `dfOverride` (term, df) substitutes an externally reconstructed
-    * live document frequency for the per-term window count — the
-    * block-max batch serve scans RANGE-PRUNED postings, whose window
-    * count would undercount df; the sidecar reconstruction it passes
-    * is spec-pinned equal to the unpruned count, so scores are
-    * bit-identical either way. */
+    * both end here, so the scoring contract lives in one place. */
   private[operators] def batchScoreFrom(tf: DataFrame, dl: DataFrame,
-                                        queries: DataFrame, k: Int,
-                                        dfOverride: Option[DataFrame] = None): DataFrame = {
+                                        queries: DataFrame, k: Int): DataFrame = {
     val qterms = queryTermsOf(queries)
     val allQTerms = qterms.select("term").distinct()
     val tfq = tf.join(broadcast(allQTerms), "term")
     val stats = dl.agg(count(col("doc_id")).as("n_docs"),
       avg(col("dl")).cast("double").as("avgdl"))
-    val withDf = dfOverride match {
-      case None =>
-        tfq.withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
-      case Some(d) => tfq.join(broadcast(d), "term")
-    }
-    val scored = withDf
+    val scored = tfq
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
       .join(dl, "doc_id")
       .crossJoin(broadcast(stats))
       .join(broadcast(qterms), "term")

@@ -30,55 +30,19 @@ import graft.Lineage._
   * corpus stats aggregated from doclen (doc-cardinality) at query
   * time. Delta dirs accumulate per batch; [[compactDeltas]] folds
   * them back into one (single-writer maintenance window).
+  *
+  * Every serve is EXACT Okapi BM25 over the live view: [[searchTopN]]
+  * (and its pinned form [[searchTopNAt]]) is one scoring plan plus
+  * order + limit, [[batchSearch]] the shared query-table plan. A
+  * block-max θ protocol (per-block bound sidecars, seed / θ /
+  * survivor passes) lived here until it was measured to cost more
+  * than it skipped on every workload; git history keeps it at
+  * 26b3732 for a layout whose blocks can be pruned.
   */
 object Bm25Index {
 
   import graft.sources.DeltaStore
 
-  /** Width (in doc_id units) of a block-max block. Blocks are FIXED
-    * doc_id RANGES — `block_id = doc_id div BlockWidth` — shared by
-    * every term, NOT per-term posting-list segments: a document's
-    * entire query-term mass then lives inside its own block, so a
-    * per-block sum of per-term bounds upper-bounds every document in
-    * the block and an exact re-score of one block is self-contained.
-    * (A per-term segmentation — classic BMW — needs document-at-a-time
-    * list traversal to align blocks across terms; doc-range blocks
-    * buy the same block-level pruning in one set-based plan.) */
-  val BlockWidth = 1024L
-
-  /** Cap on the number of merged doc_id RANGES pushed as a literal
-    * scan predicate by [[blockMaxTopN]]; beyond it the serve degrades
-    * gracefully to the unpruned (MaxScore-equivalent) scan rather
-    * than building a pathological OR-tree. */
-  val MaxSurvivorRanges = 256
-
-  /** Write the `blockmax` sidecar for a staged (postings, doclen)
-    * pair: per (term, block) row count, max tf and min doclen — the
-    * three numbers a sound per-block Okapi upper bound needs
-    * (okapiTerm is increasing in tf and decreasing in dl, so
-    * okapiTerm(max_tf, df, min_dl, …) dominates every row). Skipped —
-    * never wrong, just absent — when doc_id is non-integral or
-    * negative (doc-range blocks need a non-negative integral key);
-    * [[blockMaxTopN]] fails loudly on a store without full sidecar
-    * coverage. */
-  private def writeBlockmax(spark: SparkSession, staging: String): Unit = {
-    val postings = spark.read.parquet(s"$staging/postings")
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val integral = postings.schema("doc_id").dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    if (!integral) return
-    val minId = postings.agg(min(col("doc_id")).cast("long")).head
-    if (!minId.isNullAt(0) && minId.getLong(0) >= 0L) {
-      postings.join(spark.read.parquet(s"$staging/doclen"), "doc_id")
-        .groupBy(col("term"),
-          expr(s"doc_id div ${BlockWidth}L").as("block_id"))
-        .agg(count(lit(1)).as("n_rows"), max("tf").as("max_tf"),
-          min("dl").as("min_dl"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$staging/blockmax")
-    }
-  }
   /** Full (re)build: reset the store and ingest the corpus as the
     * first delta. */
   def build(docs: DataFrame, path: String): Unit = {
@@ -120,10 +84,6 @@ object Bm25Index {
       spark.read.parquet(s"$staging/postings")
         .groupBy("doc_id").agg(sum("tf").as("dl"))
         .write.mode(SaveMode.Overwrite).parquet(s"$staging/doclen")
-      // block-max sidecar: batch-scaled aggregation over the rows just
-      // staged — build-time cost, so [[blockMaxTopN]] can gate blocks
-      // before reading posting rows
-      writeBlockmax(spark, staging)
     }
   }
 
@@ -148,39 +108,9 @@ object Bm25Index {
     val deltas = DeltaStore.committedDeltas(spark, path)
     require(deltas.nonEmpty, s"no committed deltas under $path")
     val ids = docIds.select(col("doc_id")).distinct().cutLineage()
-    val (bEmpty, lo, hi) = DeltaStore.requireLive(spark, deltas, ids, "doc_id", "doclen")
+    DeltaStore.requireLive(spark, deltas, ids, "doc_id", "doclen")
     DeltaStore.commit(spark, path, tag, None) { staging =>
-      // deaddf sidecar: per-term counts of the postings rows this
-      // delete tombstones, so block-max serving can reconstruct the
-      // LIVE df per term from sidecars alone (physical row counts
-      // minus dead rows) without scanning posting rows. Delta-scaled:
-      // the deleted docs' rows live only in the id-range-overlapping
-      // update deltas (same range-pruning discipline as the liveness
-      // check above); each physical row is counted at most once
-      // across delete deltas because a delete requires its ids LIVE
-      // and a tombstoned id stays reserved until compaction.
-      val candPost =
-        if (bEmpty) Seq.empty
-        else DeltaStore.overlappingDeltas(DeltaStore.fsOf(spark, path),
-          DeltaStore.havingSub(spark, deltas, "postings"), lo, hi)
-      val dead =
-        if (candPost.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("term",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("n_dead",
-                org.apache.spark.sql.types.LongType))))
-        else DeltaStore.readRelation(spark, candPost.map(d => s"$d/postings"))
-          .join(ids, Seq("doc_id"), "left_semi")
-          .groupBy("term").agg(count(lit(1)).as("n_dead"))
-      // the tombstone write and the deaddf aggregation are
-      // independent — overlap them (guide §2.6)
-      graft.Jobs.inParallel(Seq(
-        () => ids.write.mode(SaveMode.Overwrite).parquet(s"$staging/tombstones"),
-        () => dead.coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(s"$staging/deaddf")))
+      ids.write.mode(SaveMode.Overwrite).parquet(s"$staging/tombstones")
     }
   }
 
@@ -202,17 +132,12 @@ object Bm25Index {
       val (postings, doclen) =
         DeltaStore.livePair(spark, deltas, "doc_id", "postings", "doclen")
       // postings and doclen rewrites are independent — overlap them
-      // (guide §2.6); the block-max sidecar READS the staged pair, so
-      // it stays sequenced after both
+      // (guide §2.6)
       graft.Jobs.inParallel(Seq(
         () => postings
           .repartition(col("term")).sortWithinPartitions("term", "doc_id")
           .write.parquet(s"$staging/postings"),
         () => doclen.write.parquet(s"$staging/doclen")))
-      // the folded delta's block-max sidecar re-derives from the LIVE
-      // rows just staged (purged rows drop out of the bounds, the
-      // deaddf history folds away with the tombstones)
-      writeBlockmax(spark, staging)
     }
 
   /** SHARD MERGE — fold two independently built stores over DISJOINT
@@ -229,17 +154,8 @@ object Bm25Index {
     * id ranges that don't overlap (the shard layout by construction);
     * only on range overlap does it pay one doc-cardinality semi-join.
     *
-    * The block-max sidecar MERGES WITHOUT RESCANNING when it can:
-    * blocks are fixed doc-ranges shared by every store (same
-    * [[BlockWidth]] universe), so per-(term, block) row counts SUM,
-    * tf bounds MAX and dl bounds MIN — exact, byte-equal to a
-    * re-derivation, because each side's sidecar already describes its
-    * own live rows and the doc sets are disjoint. Any tombstone on
-    * either side (whose dead rows the sidecars still count) or a
-    * coverage gap falls back to re-deriving the sidecar from the
-    * live rows being staged anyway — never silently unsound. Corpus
-    * stats (n_docs, avgdl, df) re-derive at query time like every
-    * serve, so no stored stat needs reconciling. Requires a
+    * Corpus stats (n_docs, avgdl, df) re-derive at query time like
+    * every serve, so no stored stat needs reconciling. Requires a
     * single-writer window on `dest` (fresh store; the sources are
     * only read). */
   def mergeStores(spark: SparkSession, pathA: String, pathB: String,
@@ -255,10 +171,7 @@ object Bm25Index {
     // live on different filesystems
     val sides = Seq(dA, dB)
     val noTombstones = sides.forall(DeltaStore.havingSub(spark, _, "tombstones").isEmpty)
-    val updSides = sides.map(DeltaStore.havingSub(spark, _, "postings"))
-    val upd = updSides.flatten
-    val sidecarsExact = noTombstones &&
-      updSides.forall(u => DeltaStore.havingSub(spark, u, "blockmax") == u)
+    val upd = sides.flatMap(DeltaStore.havingSub(spark, _, "postings"))
     DeltaStore.reset(spark, dest)
     DeltaStore.commit(spark, dest, "00000", range) { staging =>
       val writePostings = () => pa.union(pb)
@@ -275,22 +188,8 @@ object Bm25Index {
         if (noTombstones)
           DeltaStore.copySubFiles(spark, upd, "doclen", staging, "s")
         else la.union(lb).write.mode(SaveMode.Overwrite).parquet(s"$staging/doclen")
-      if (sidecarsExact)
-        // the sidecar arithmetic reads the SOURCE stores' sidecars, so
-        // all three staged writes are independent — overlap them
-        // (guide §2.6)
-        graft.Jobs.inParallel(Seq(writePostings, writeDoclen,
-          () => DeltaStore.readRelation(spark, upd.map(d => s"$d/blockmax"))
-            .groupBy("term", "block_id")
-            .agg(sum("n_rows").as("n_rows"), max("max_tf").as("max_tf"),
-              min("min_dl").as("min_dl"))
-            .write.mode(SaveMode.Overwrite).parquet(s"$staging/blockmax")))
-      else {
-        // fallback re-derivation READS the staged pair — sequence it
-        // after the (overlapped) postings/doclen writes
-        graft.Jobs.inParallel(Seq(writePostings, writeDoclen))
-        writeBlockmax(spark, staging)
-      }
+      // the two staged writes are independent — overlap them (guide §2.6)
+      graft.Jobs.inParallel(Seq(writePostings, writeDoclen))
     }
   }
 
@@ -366,9 +265,24 @@ object Bm25Index {
     scored.groupBy("doc_id").agg(round(sum("c"), 4).as("score"))
   }
 
+  /** The exact top `n` of [[score]]: one scoring plan plus order +
+    * limit. */
   def searchTopN(spark: SparkSession, path: String,
                  queryTerms: Seq[String] = Bm25.QueryTerms, n: Int = 10): DataFrame =
     topK(score(spark, path, queryTerms), n)
+
+  /** The exact top `n` of [[scoreAt]]: the store pinned at version
+    * `maxTag`, so rows equal a [[Bm25.searchTopN]] rebuild on the
+    * pinned corpus. */
+  def searchTopNAt(spark: SparkSession, path: String, maxTag: String,
+                   queryTerms: Seq[String] = Bm25.QueryTerms, n: Int = 10): DataFrame =
+    topK(scoreAt(spark, path, maxTag, queryTerms), n)
+
+  /** [[searchTopN]] under its former block-max name, kept only because
+    * the benchmark's `query` op (perfbench) calls it by this name. */
+  def blockMaxTopN(spark: SparkSession, path: String,
+                   queryTerms: Seq[String] = Bm25.QueryTerms, k: Int = 10): DataFrame =
+    searchTopN(spark, path, queryTerms, k)
 
   /** The top `k` of (doc_id, score) rows: score desc, doc_id asc — the
     * tie-break every top-k serve shares. */
@@ -395,243 +309,6 @@ object Bm25Index {
     val (postings, dl) = DeltaStore.livePair(spark, deltas, "doc_id", "postings", "doclen")
     SearchExtras.maxScoreFrom(
       postings.filter(col("term").isin(queryTerms: _*)), dl, k)
-  }
-
-  /** Sidecar-coverage gate shared by the block-max serves: the
-    * committed deltas split into update/delete legs, each leg
-    * carrying its sidecar (blockmax / deaddf) — fails loudly
-    * otherwise. */
-  private def blockmaxDeltas(spark: SparkSession,
-                             path: String): (Seq[String], Seq[String], Seq[String]) = {
-    val deltas = DeltaStore.committedDeltas(spark, path)
-    require(deltas.nonEmpty, s"no committed deltas under $path")
-    val (upd, del) = requireSidecars(spark, path, deltas)
-    (deltas, upd, del)
-  }
-
-  /** The coverage assertion itself, over an EXPLICIT delta subset —
-    * shared by the live serves (all committed deltas) and the pinned
-    * snapshot serve (the `visibleAt` subset), so a snapshot at a
-    * pre-sidecar version fails as loudly as a live read would (r15
-    * verdict task 6), never silently diverging. */
-  private def requireSidecars(spark: SparkSession, path: String,
-                              deltas: Seq[String]): (Seq[String], Seq[String]) = {
-    val updDeltas = DeltaStore.havingSub(spark, deltas, "postings")
-    val delDeltas = DeltaStore.havingSub(spark, deltas, "tombstones")
-    val missingBm = updDeltas.diff(DeltaStore.havingSub(spark, updDeltas, "blockmax"))
-    val missingDd = delDeltas.diff(DeltaStore.havingSub(spark, delDeltas, "deaddf"))
-    require(missingBm.isEmpty && missingDd.isEmpty,
-      s"store $path lacks full block-max sidecar coverage " +
-        s"(${missingBm.size} update deltas without blockmax, " +
-        s"${missingDd.size} delete deltas without deaddf). Either the " +
-        "store predates the sidecars — compact or rebuild to serve " +
-        "block-max — or its doc_id column is non-integral or holds " +
-        "negative ids, in which case doc-range blocks are undefined and " +
-        "the sidecar is never written (compaction will NOT help; serve " +
-        "via indexMaxScore/searchTopN instead)")
-    (updDeltas, delDeltas)
-  }
-
-  /** (blocks, dfLive) for `terms`: combined per-(term, block) bounds
-    * across deltas (physical row counts sum, tf maxes, dl mins — all
-    * term-pruned at the sidecar scan; the sidecar is
-    * (terms x blocks)-sized, postings-free), plus the live per-term
-    * df reconstructed from sidecars alone (blockmax sums minus
-    * delete-delta deaddf) — provably equal to the live per-term
-    * posting row count, so block-restricted scans still score with
-    * GLOBAL stats. */
-  private def blockBounds(spark: SparkSession, updDeltas: Seq[String],
-                          delDeltas: Seq[String],
-                          terms: Seq[String]): (DataFrame, DataFrame) = {
-    val blocks = DeltaStore.readRelation(spark, updDeltas.map(d => s"$d/blockmax"))
-      .filter(col("term").isin(terms: _*))
-      .groupBy("term", "block_id")
-      .agg(sum("n_rows").as("n_rows"), max("max_tf").as("max_tf"),
-        min("min_dl").as("min_dl"))
-    val dfLive = {
-      val phys = blocks.groupBy("term").agg(sum("n_rows").as("df_phys"))
-      if (delDeltas.isEmpty)
-        phys.select(col("term"), col("df_phys").as("df"))
-      else {
-        val dd = DeltaStore.readRelation(spark, delDeltas.map(d => s"$d/deaddf"))
-          .filter(col("term").isin(terms: _*))
-          .groupBy("term").agg(sum("n_dead").as("n_dead"))
-        phys.join(dd, Seq("term"), "left")
-          .select(col("term"),
-            (col("df_phys") - coalesce(col("n_dead"), lit(0L))).as("df"))
-      }
-    }
-    (blocks, dfLive)
-  }
-
-  /** Merge sorted block ids into contiguous [lo, hi) block ranges. */
-  private def mergedRanges(ids: Seq[Long]): List[(Long, Long)] =
-    ids.sorted.foldLeft(List.empty[(Long, Long)]) {
-      case ((lo, hi) :: tl, b) if b == hi => (lo, b + 1) :: tl
-      case (acc, b) => (b, b + 1) :: acc
-    }
-
-  /** True when the update deltas' id-range sidecars put every doc in
-    * ONE [[BlockWidth]] block, so a block-max serve has no block to
-    * skip. Sidecar reads only (no Spark job), stopping as soon as the
-    * union spans two blocks; false when any update delta has no range
-    * sidecar. Ids are non-negative here: a delta carries `blockmax`
-    * only when they are. */
-  private def oneBlock(spark: SparkSession, updDeltas: Seq[String]): Boolean = {
-    def span(r: (Long, Long)) = r._2 / BlockWidth - r._1 / BlockWidth
-    updDeltas.nonEmpty &&
-      DeltaStore.rangeUnion(DeltaStore.fsOf(spark, updDeltas.head), updDeltas,
-        span(_) > 0).exists(span(_) == 0)
-  }
-
-  /** A short OR-of-doc_id-ranges LITERAL predicate over the merged
-    * blocks — it reaches the parquet scan, and row-group stats on the
-    * sorted doc_id do the skip. */
-  private def rangePredicate(ids: Seq[Long]): org.apache.spark.sql.Column =
-    mergedRanges(ids).map { case (lo, hi) =>
-      col("doc_id") >= lit(lo * BlockWidth) &&
-        col("doc_id") < lit(hi * BlockWidth)
-    }.reduce(_ || _)
-
-  /** BLOCK-MAX MaxScore: the θ cut prunes postings I/O, not just join
-    * width. [[maxScoreTopN]] bounds per TERM, so a common term's whole
-    * posting list is still read to compute its per-doc bounds; this
-    * route gates doc_id-range BLOCKS from the build-time `blockmax`
-    * sidecar BEFORE any posting row is read:
-    *
-    *   0. route: when the update deltas' `docid.range` sidecars put
-    *      every doc in ONE block, no block can be skipped, so the serve
-    *      is the exact single plan ([[searchTopN]]'s, over the same
-    *      deltas) — decided from the sidecars alone, no Spark job;
-    *   1. per-(term, block) upper bound u = okapiTerm(max_tf, df_live,
-    *      min_dl, avgdl, n_docs) — sound because okapiTerm is
-    *      increasing in tf and decreasing in dl; df_live reconstructs
-    *      EXACTLY from sidecars (per-term physical row counts minus
-    *      the delete deltas' deaddf counts), never from a row scan;
-    *   2. blocks are shared doc_id ranges, so Σ_terms u(t, b) bounds
-    *      every document in block b (a doc's whole query-term mass
-    *      lives in its own block) — the per-block sum is the gate;
-    *   3. θ seeds from the top blocks by that sum (accumulated until
-    *      the sidecar row counts guarantee ≥ k docs): ONLY those
-    *      blocks' rows are read and scored exactly — self-contained,
-    *      because blocks are doc ranges;
-    *   4. surviving blocks (Σu ≥ θ − 1e-4, the shared rounding slack;
-    *      a block holding any true top-k doc provably survives) merge
-    *      into contiguous doc_id ranges pushed as a LITERAL scan
-    *      predicate — parquet row-group pruning on the (term, doc_id)-
-    *      sorted postings does the I/O skip. Above [[MaxSurvivorRanges]]
-    *      the predicate is dropped (graceful degradation to the
-    *      maxScore-shaped unpruned scan — correct, just unpruned).
-    *
-    * Rows equal [[searchTopN]] exactly (admissible prune, identical
-    * okapiTerm arithmetic/rounding/tie-breaks — shared oracle with
-    * q_search_topn). Driver syncs are bounded: ≤ 64 seed-block rows,
-    * one θ scalar, ≤ MaxSurvivorRanges+1 survivor ids. Requires full
-    * sidecar coverage (every update delta carries blockmax, every
-    * delete delta deaddf) and fails loudly otherwise, before the
-    * route — compact or rebuild a store that predates the sidecars.
-    * Tombstones only ever RAISE the bounds (max over a superset),
-    * never break them. */
-  def blockMaxTopN(spark: SparkSession, path: String,
-                   queryTerms: Seq[String] = Bm25.QueryTerms,
-                   k: Int = 10): DataFrame = {
-    val (deltas, updDeltas, delDeltas) = blockmaxDeltas(spark, path)
-    blockMaxServe(spark, deltas, updDeltas, delDeltas, queryTerms, k)
-  }
-
-  /** [[blockMaxTopN]] pinned at a store version — the [[scoreAt]]
-    * time-travel contract on the block-max rung. Resolves the
-    * `visibleAt` delta subset (numeric-only tags, update-only stores)
-    * and asserts SIDECAR COVERAGE ON THAT SUBSET: a snapshot pinned
-    * at a pre-sidecar version fails loudly exactly like the live
-    * serve (r15 verdict task 6), instead of silently serving
-    * unbounded blocks. Rows equal a [[Bm25.searchTopN]] rebuild on
-    * the pinned corpus (spec-pinned). */
-  def blockMaxTopNAt(spark: SparkSession, path: String, maxTag: String,
-                     queryTerms: Seq[String] = Bm25.QueryTerms,
-                     k: Int = 10): DataFrame = {
-    val deltas = DeltaStore.visibleAt(spark, path, maxTag)
-    val (updDeltas, delDeltas) = requireSidecars(spark, path, deltas)
-    blockMaxServe(spark, deltas, updDeltas, delDeltas, queryTerms, k)
-  }
-
-  private def blockMaxServe(spark: SparkSession, deltas: Seq[String],
-                            updDeltas: Seq[String], delDeltas: Seq[String],
-                            queryTerms: Seq[String], k: Int): DataFrame = {
-    if (oneBlock(spark, updDeltas)) return topK(scoreDeltas(spark, deltas, queryTerms), k)
-    val (postings, dlLive) = DeltaStore.livePair(spark, deltas, "doc_id", "postings", "doclen")
-    val (blocks, dfLive0) = blockBounds(spark, updDeltas, delDeltas, queryTerms)
-    // the θ protocol consumes dfLive / the corpus stats / the block
-    // bound-sums in SEVERAL jobs (seed collect, seed exact pass, final
-    // exact pass) — cut the query-terms-sized and 1-row relations once
-    // so each later job reads blocks instead of re-running the sidecar
-    // aggregation and the doclen scan (guide §1.2: don't recompute
-    // what you already have; all three are ≤ |query terms| rows)
-    val dfLive = dfLive0.cutLineage()
-    val stats = dlLive.agg(count(col("doc_id")).as("n_docs"),
-      avg(col("dl")).cast("double").as("avgdl")).cutLineage()
-    val blockSum = blocks.join(broadcast(dfLive), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("block_id"), col("n_rows"),
-        Bm25.okapiTerm(col("max_tf"), col("df"), col("min_dl"),
-          col("avgdl"), col("n_docs")).as("u"))
-      .groupBy("block_id")
-      .agg(sum("u").as("usum"), max("n_rows").as("docs_lb"))
-      .cutLineage()
-    // exact Okapi scoring of a doc_id-range-restricted candidate set;
-    // df comes from the sidecar reconstruction (provably equal to the
-    // live per-term row count), so a block-restricted scan still
-    // scores with GLOBAL stats
-    def exactIn(blockIds: Option[Seq[Long]]): DataFrame = {
-      val pruned = blockIds match {
-        case None => postings.filter(col("term").isin(queryTerms: _*))
-        case Some(ids) if ids.isEmpty => postings.filter(lit(false))
-        case Some(ids) =>
-          postings.filter(col("term").isin(queryTerms: _*) &&
-            rangePredicate(ids))
-      }
-      pruned
-        .join(broadcast(dfLive), "term")
-        .join(dlLive, "doc_id")
-        .crossJoin(broadcast(stats))
-        .select(col("doc_id"),
-          Bm25.okapiTerm(col("tf"), col("df"), col("dl"),
-            col("avgdl"), col("n_docs")).as("c"))
-        .groupBy("doc_id").agg(round(sum("c"), 4).as("score"))
-    }
-    // θ seeding: top blocks by bound-sum until the sidecar row counts
-    // guarantee >= k docs (n_rows for ONE term is exactly that many
-    // distinct docs, so max_t n_rows lower-bounds the block's doc
-    // count — tombstones can overcount, and the -inf fallback below
-    // keeps an under-seeded θ sound)
-    val top = blockSum
-      .orderBy(col("usum").desc, col("block_id").asc).limit(64)
-      .select("block_id", "usum", "docs_lb").collect()
-    val seedIds = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var seen = 0L
-    for (r <- top if seen < k) { seedIds += r.getLong(0); seen += r.getLong(2) }
-    val candidates: Option[Seq[Long]] =
-      if (seedIds.isEmpty) None // query terms absent: nothing to prune
-      else {
-        val seedAgg = topK(exactIn(Some(seedIds.toSeq)), k)
-          .agg(count(lit(1)).as("n"), min("score").as("kth")).head
-        if (seedAgg.getLong(0) < k) None // under-seeded θ: no prune
-        else {
-          val theta = seedAgg.getDouble(1)
-          // bounded survivor sync: collect at most collectCap+1 block
-          // ids; hitting the cap (or exceeding MaxSurvivorRanges after
-          // merging adjacent blocks — a contiguous run collapses to
-          // one clause) degrades to the unpruned scan
-          val collectCap = MaxSurvivorRanges * 64
-          val surv = blockSum.filter(col("usum") >= lit(theta - 1e-4))
-            .select("block_id").limit(collectCap + 1)
-            .collect().map(_.getLong(0)).toSeq
-          if (surv.size > collectCap ||
-            mergedRanges(surv).size > MaxSurvivorRanges) None
-          else Some(surv)
-        }
-      }
-    topK(exactIn(candidates), k)
   }
 
   /** (query_id, doc_id, score, rk): BM25 top-k for a TABLE of queries
@@ -668,112 +345,4 @@ object Bm25Index {
   def batchSearchFrom(tfDl: (DataFrame, DataFrame),
                       queries: DataFrame, k: Int = 10): DataFrame =
     Bm25.batchScoreFrom(tfDl._1, tfDl._2, queries, k)
-
-  /** [[batchSearch]] with block-max gating (r15 verdict task 5 — the
-    * shelved rung that made the serving ladder inconsistent: the
-    * single-query path had [[blockMaxTopN]] while the batch path
-    * scanned term-pruned but block-UNGATED postings). Per-QUERY θ over
-    * the SHARED doc-range blocks, survivor ranges UNIONED into one
-    * literal predicate:
-    *
-    *  1. per-(query, block) sound bound sums from the (term x block)
-    *     sidecar joined to the tokenized query terms — one
-    *     DISTRIBUTED relation, no per-query driver loop;
-    *  2. per-query θ seeding as a WINDOW (blocks by bound-sum desc,
-    *     cumulative sidecar row counts until ≥ k — exactly
-    *     [[blockMaxTopN]]'s driver loop, made distributed), seed
-    *     ranges unioned across queries for ONE exact pass whose
-    *     per-query k-th score is θ_q (any scored superset only raises
-    *     θ_q toward the true k-th, so the prune stays admissible);
-    *  3. survivors per query = blocks with bound-sum ≥ θ_q − ε;
-    *     under-seeded queries (< k docs reachable from seeds) keep
-    *     ALL their blocks — per-query graceful degradation;
-    *  4. the survivor UNION becomes the merged-range literal on the
-    *     final exact scan, scored with the sidecar-reconstructed df
-    *     (spec-pinned equal to the live count), so rows equal
-    *     [[batchSearch]] exactly — shared oracle with q_search_batch.
-    *
-    * Driver syncs bounded: the distinct query-term list (the batch
-    * contract already broadcasts the query table; above the cap it
-    * serves unpruned), the seed-union ids, one θ relation
-    * (query-table-sized, broadcast), the survivor-union ids — each
-    * capped, every cap degrading to the unpruned scan. A store whose
-    * ids all sit in one block skips the protocol (step 0 of
-    * [[blockMaxTopN]]) and serves [[batchSearch]]'s plan, so the gate
-    * SF's one-block stores pay none of its jobs; on a multi-block
-    * store the skipped postings row-groups are the point (the
-    * reference serves its query loop one Mongo lookup at a time —
-    * file:line cited on [[batchSearch]]). */
-  def blockMaxBatchSearch(spark: SparkSession, path: String,
-                          queries: DataFrame, k: Int = 10): DataFrame = {
-    val (deltas, updDeltas, delDeltas) = blockmaxDeltas(spark, path)
-    val (postings, dlLive) = DeltaStore.livePair(spark, deltas, "doc_id", "postings", "doclen")
-    if (oneBlock(spark, updDeltas)) return Bm25.batchScoreFrom(postings, dlLive, queries, k)
-    val qterms = Bm25.queryTermsOf(queries)
-    val termCap = 4096
-    val terms = qterms.select("term").distinct().limit(termCap + 1)
-      .collect().map(_.getString(0)).toSeq
-    if (terms.isEmpty || terms.size > termCap)
-      return Bm25.batchScoreFrom(postings, dlLive, queries, k)
-    val (blocks, dfLive0) = blockBounds(spark, updDeltas, delDeltas, terms)
-    // cut the small protocol relations once (≤ |terms| rows / 1 row /
-    // (queries × blocks) rows): the θ protocol re-reads each of them
-    // in several jobs — seed collect, seed exact pass, survivor
-    // filter, final exact pass — and without the cut every job re-runs
-    // the sidecar aggregation and the doclen scan from parquet
-    val dfLive = dfLive0.cutLineage()
-    val stats = dlLive.agg(count(col("doc_id")).as("n_docs"),
-      avg(col("dl")).cast("double").as("avgdl")).cutLineage()
-    // per-(query, block) bound sums + per-block doc-count lower bound
-    val qb = blocks.join(broadcast(dfLive), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("term"), col("block_id"), col("n_rows"),
-        Bm25.okapiTerm(col("max_tf"), col("df"), col("min_dl"),
-          col("avgdl"), col("n_docs")).as("u"))
-      .join(broadcast(qterms), "term")
-      .groupBy(col("query_id"), col("block_id"))
-      .agg(sum("u").as("usum"), max("n_rows").as("docs_lb"))
-      .cutLineage()
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("usum").desc, col("block_id").asc)
-    val seeds = qb
-      .withColumn("rk", row_number().over(wq))
-      .withColumn("cum_prev", coalesce(
-        sum("docs_lb").over(wq.rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .filter(col("rk") <= 64 && col("cum_prev") < k)
-    val collectCap = MaxSurvivorRanges * 64
-    val seedIds = seeds.select("block_id").distinct()
-      .limit(collectCap + 1).collect().map(_.getLong(0)).toSeq
-    def exactBatch(blockIds: Option[Seq[Long]]): DataFrame = {
-      val base = postings.filter(col("term").isin(terms: _*))
-      val pruned = blockIds match {
-        case None => base
-        case Some(ids) => base.filter(rangePredicate(ids))
-      }
-      Bm25.batchScoreFrom(pruned, dlLive, queries, k, Some(dfLive))
-    }
-    val candidates: Option[Seq[Long]] =
-      if (seedIds.isEmpty) None // query terms absent: nothing to prune
-      else if (seedIds.size > collectCap ||
-        mergedRanges(seedIds).size > MaxSurvivorRanges) None
-      else {
-        // θ_q = the k-th best score among the seed-union docs for q;
-        // a query with fewer than k scored docs stays unpruned (its
-        // theta is NULL after the left join below)
-        val thetas = exactBatch(Some(seedIds))
-          .groupBy("query_id")
-          .agg(count(lit(1)).as("n"), min("score").as("theta"))
-          .filter(col("n") === k)
-          .select("query_id", "theta")
-        val surv = qb.join(broadcast(thetas), Seq("query_id"), "left")
-          .filter(col("theta").isNull || col("usum") >= col("theta") - 1e-4)
-          .select("block_id").distinct()
-          .limit(collectCap + 1).collect().map(_.getLong(0)).toSeq
-        if (surv.size > collectCap ||
-          mergedRanges(surv).size > MaxSurvivorRanges) None
-        else Some(surv)
-      }
-    exactBatch(candidates)
-  }
 }

@@ -271,25 +271,12 @@ object DeltaStore {
       (lo.toLong, hi.toLong)
     }
 
-  /** The union of the deltas' id-range sidecars, read in order; None
-    * when a delta read has none (its span is unknown). Reading stops
-    * as soon as `enough` holds for the union so far, which is then
-    * returned as it stands. */
-  def rangeUnion(fs: FileSystem, deltas: Seq[String],
-                 enough: ((Long, Long)) => Boolean = _ => false): Option[(Long, Long)] = {
-    @annotation.tailrec
-    def go(rest: List[String], acc: Option[(Long, Long)]): Option[(Long, Long)] =
-      rest match {
-        case Nil => acc
-        case d :: tl => readRange(fs, d) match {
-          case None => None
-          case Some((lo, hi)) =>
-            val u = acc.fold((lo, hi)) { case (a, b) => (math.min(a, lo), math.max(b, hi)) }
-            if (enough(u)) Some(u) else go(tl, Some(u))
-        }
-      }
-    go(deltas.toList, None)
-  }
+  /** The union of the deltas' id-range sidecars; None when a delta
+    * has none (its span is unknown) or `deltas` is empty. */
+  def rangeUnion(fs: FileSystem, deltas: Seq[String]): Option[(Long, Long)] =
+    deltas.map(readRange(fs, _)).reduceOption { (a, b) =>
+      for ((aLo, aHi) <- a; (bLo, bHi) <- b) yield (math.min(aLo, bLo), math.max(aHi, bHi))
+    }.flatten
 
   /** One batch-scaled aggregation: (isEmpty, lo, hi) of `idCol`. A
     * non-integral id type (or an all-NULL id column) yields lo > hi —
@@ -412,11 +399,10 @@ object DeltaStore {
     * BATCH-scaled on a long-running store: the presence side reads
     * only the deltas whose id-range sidecar can overlap the batch (the
     * [[rejectDuplicateIds]] discipline); the tombstone side is
-    * delete-scaled by nature. Returns the batch range, which the
-    * caller's delete sidecars may reuse. */
+    * delete-scaled by nature. */
   def requireLive(spark: SparkSession, deltas: Seq[String], ids: DataFrame,
-                  idCol: String, sub: String): (Boolean, Long, Long) = {
-    val br @ (empty, lo, hi) = batchRange(ids, idCol)
+                  idCol: String, sub: String): Unit = {
+    val (empty, lo, hi) = batchRange(ids, idCol)
     if (!empty) {
       val candidates = overlappingDeltas(fsOf(spark, deltas.head),
         havingSub(spark, deltas, sub), lo, hi)
@@ -430,7 +416,6 @@ object DeltaStore {
         s"delete batch names $nMissing ${idCol}s that are not live in the store " +
           "(absent or already tombstoned) — refusing a partially-effective delete")
     }
-    br
   }
 
   /** SHARD-MERGE DISJOINTNESS GATE over two live id relations:
@@ -530,10 +515,13 @@ object DeltaStore {
     * readers see ONLY the compacted delta — the subsequent input
     * deletion is pure housekeeping and a crash anywhere in between
     * never double-counts (stale dirs are invisible and swept by the
-    * next writer). Merged id range = union of the input ranges; if
-    * ANY input predates range sidecars its span is unknown → omitted
-    * (never-pruned) rather than wrong. Requires the store's
-    * single-writer maintenance window. */
+    * next writer). Merged id range = union of the data inputs'
+    * ranges; tombstone-only (delete) inputs carry no range and are
+    * left out of the union, since their ids are a subset of live ids
+    * the data inputs already span. If ANY data input predates range
+    * sidecars its span is unknown → omitted (never-pruned) rather
+    * than wrong. Requires the store's single-writer maintenance
+    * window. */
   def compact(spark: SparkSession, path: String)
              (restage: (Seq[String], String) => Unit): Unit = {
     val fs = fsOf(spark, path)
@@ -543,7 +531,7 @@ object DeltaStore {
     val deltas = committedDeltas(spark, path)
     if (deltas.size <= 1) return
     val tag = "compact-" + java.util.UUID.randomUUID().toString
-    val merged = rangeUnion(fs, deltas)
+    val merged = rangeUnion(fs, deltas.diff(havingSub(spark, deltas, "tombstones")))
     val names = deltas.map(d => new Path(d).getName)
     // cumulative tag history: the folded deltas' names plus everything
     // THEY had already absorbed — keeps isCommitted true for every tag

@@ -74,6 +74,19 @@ class DeltaStoreSpec extends AnyFunSuite {
       .contains((10L, 30L)))
   }
 
+  test("a compaction with a delete delta among its inputs keeps the update deltas' id range") {
+    import graft.operators.Bm25Index
+    val store = newStore()
+    val docs = (0L until 20L).map(i => (i, s"alpha beta w$i")).toDF("doc_id", "text")
+    Bm25Index.build(docs.filter($"doc_id" < 10), store)
+    Bm25Index.update(docs.filter($"doc_id" >= 10), store, "00001")
+    // a delete delta commits with no range of its own
+    Bm25Index.delete(Seq(3L, 12L).toDF("doc_id"), store, "del-01")
+    Bm25Index.compactDeltas(spark, store)
+    val Seq(folded) = DeltaStore.committedDeltas(spark, store)
+    assert(DeltaStore.readRange(DeltaStore.fsOf(spark, store), folded).contains((0L, 19L)))
+  }
+
   test("a tag folded away by compaction still reads as committed (streaming replay after compact)") {
     val store = newStore()
     writeDelta(store, "batch-00000", Seq(1L))

@@ -5,27 +5,19 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Bm25, Bm25Index}
+import graft.sources.Tables
 
-/** Round-15: block-max MaxScore on the staged postings — the θ cut
-  * prunes doc_id-range BLOCKS (I/O), not just the doclen join width.
-  * Contracts under test: (1) admissible prune — rows equal the
-  * corpus-derived exact top-k; (2) the block gate is a LITERAL
-  * doc_id-range predicate pushed into the postings scan; (3) the
-  * delete leg's `deaddf` sidecar keeps the sidecar-reconstructed df
-  * exact, so serving equals a rebuild on the surviving corpus;
-  * (4) compaction regenerates the `blockmax` sidecar from live rows;
-  * (5) a store without sidecar coverage fails loudly. */
-class Round15Spec extends AnyFunSuite {
+/** Round-15, and the staged BM25 serves: every serve from the staged
+  * index — single top-k, pinned top-k and query-table batch — returns
+  * the rows of the corpus-derived `Bm25.searchTopN` /
+  * `Bm25.batchSearch` on the same live corpus, across update deltas,
+  * tombstone deletes, compaction and pinned snapshots. */
+class Round15Spec extends AnyFunSuite with SuiteTempDir {
   import SparkTestSession._
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/s"
-
-  /** Planted corpus spanning 4 blocks (width 1024): ids 0-11 (block 0)
-    * are short, query-term-dense docs — the true top-k lives here and
-    * seeds a high θ; ids 1030/2050/3080 hold ONE weak query term in a
-    * long filler doc, one per later block, so blocks 1-3 carry a tiny
-    * per-block bound sum and must be pruned by the θ cut. */
+  /** Planted corpus spanning 4 doc-id blocks of 1,024 ids: ids 0-11
+    * are short, query-term-dense docs where the true top-k lives; ids
+    * 1030/2050/3080 hold ONE weak query term in a long filler doc. */
   private def plantedDocs = {
     import spark.implicits._
     val filler = (1 to 40).map(i => s"filler$i word$i").mkString(" ")
@@ -38,97 +30,126 @@ class Round15Spec extends AnyFunSuite {
     (strong ++ weak).toDF("doc_id", "text")
   }
 
+  /** Query-term docs at the given ids, each a little different so
+    * scores spread and ties stay rare. */
+  private def docsAt(ids: Seq[Long]): DataFrame = {
+    import spark.implicits._
+    ids.map { id =>
+      val n = (id % 5).toInt + 1
+      (id, (Seq.fill(n)("spark") ++ Seq("query", "join") ++
+        Seq.fill((id % 3).toInt + 1)("fast") ++ Seq(s"word$id", "filler")).mkString(" "))
+    }.toDF("doc_id", "text")
+  }
+
+  private val terms = Seq("spark", "query", "join", "fast")
+
   private def rows(df: DataFrame): Seq[(Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
-  test("blockmax: rows equal the exact corpus top-k; block ranges reach the scan as pushed literals") {
-    val p = tmp("r15a")
-    Bm25Index.build(plantedDocs, p)
-    val served = Bm25Index.blockMaxTopN(spark, p)
-    assert(rows(served) === rows(Bm25.searchTopN(plantedDocs)))
-    // the survivor gate is a doc_id range literal ON the scan: block 0
-    // survives (its range end 1024 appears as a pushed bound) and the
-    // weak blocks 1-3 are pruned BEFORE any posting row is read (no
-    // pushed bound reaches their ranges)
-    val plan = served.queryExecution.executedPlan.toString
-    assert(plan.contains("LessThan(doc_id,1024)"),
-      s"expected the block-0 range pushed into the postings scan; plan:\n$plan")
-    assert(!plan.contains("LessThan(doc_id,4096)") &&
-      !plan.contains("GreaterThanOrEqual(doc_id,3072)"),
-      "weak block 3 should be pruned from the scan predicate")
-  }
+  private def brows(df: DataFrame): Set[(Int, Long, Double, Int)] =
+    df.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
 
-  test("blockmax sidecar holds sound per-block bounds and exact row counts") {
-    val p = tmp("r15b")
-    Bm25Index.build(plantedDocs, p)
-    val bm = spark.read.parquet(s"$p/delta-00000/blockmax")
-    // exact physical df per term: 12 strong docs for 'spark', 12+3 for 'fast'
-    val byTerm = bm.groupBy("term").agg(sum("n_rows").as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(byTerm("spark") === 12L && byTerm("fast") === 15L)
-    // block 0's 'spark' bound carries max_tf=4 and the block-min doclen
-    val b0 = bm.filter(col("term") === "spark" && col("block_id") === 0).head
-    assert(b0.getAs[Long]("max_tf") === 4L)
-  }
-
-  test("blockmax combines across UPDATE deltas: sums/maxes/mins merge exactly; serving stays equal") {
+  private def queries(qs: (Int, String)*): DataFrame = {
     import spark.implicits._
-    val p = tmp("r15u")
+    qs.toDF("query_id", "qtext")
+  }
+
+  test("staged top-k: rows equal the exact corpus top-k on the planted and the sf corpus") {
+    val p = tmp("planted")
+    Bm25Index.build(plantedDocs, p)
+    assert(rows(Bm25Index.searchTopN(spark, p)) === rows(Bm25.searchTopN(plantedDocs)))
+    // the benchmark's name for the same serve
+    assert(rows(Bm25Index.blockMaxTopN(spark, p)) === rows(Bm25.searchTopN(plantedDocs)))
+    val docs = Tables.documents(spark, sf)
+    val q = tmp("sf")
+    Bm25Index.build(docs, q)
+    assert(rows(Bm25Index.searchTopN(spark, q)) === rows(Bm25.searchTopN(docs)))
+  }
+
+  test("staged top-k across update deltas equals the exact corpus top-k") {
     // split the planted corpus id-monotonically (the store's ingest
-    // contract): block-0 strong docs arrive in two batches, so the
-    // (term, block) bounds must COMBINE (n_rows sums, max_tf maxes,
-    // min_dl mins) across deltas for df and the gate to stay exact
+    // contract): block-0 strong docs arrive in two batches
+    val p = tmp("upd")
     Bm25Index.build(plantedDocs.filter(col("doc_id") < 8), p)
     Bm25Index.update(plantedDocs.filter(col("doc_id") >= 8), p, "00001")
-    assert(rows(Bm25Index.blockMaxTopN(spark, p)) ===
-      rows(Bm25.searchTopN(plantedDocs)))
-    val bm = spark.read.parquet(s"$p/delta-00000/blockmax", s"$p/delta-00001/blockmax")
-    val spark0 = bm.filter(col("term") === "spark")
-      .agg(sum("n_rows"), max("max_tf")).head
-    assert(spark0.getLong(0) === 12L && spark0.getLong(1) === 4L)
+    assert(rows(Bm25Index.searchTopN(spark, p)) === rows(Bm25.searchTopN(plantedDocs)))
   }
 
-  test("delete leg: deaddf keeps sidecar df exact — serving equals rebuild on survivors") {
-    val p = tmp("r15c")
+  test("staged top-k after a tombstone delete equals a rebuild on the survivors") {
+    val p = tmp("del")
     Bm25Index.build(plantedDocs, p)
     Bm25Index.delete(plantedDocs.filter(col("doc_id") < 2).select("doc_id"), p, "del-01")
-    // the delete delta carries the per-term dead-row counts
-    val dd = spark.read.parquet(s"$p/delta-del-01/deaddf").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(dd("spark") === 2L && dd("fast") === 2L)
-    val survivors = plantedDocs.filter(col("doc_id") >= 2)
-    assert(rows(Bm25Index.blockMaxTopN(spark, p)) ===
-      rows(Bm25.searchTopN(survivors)))
+    assert(rows(Bm25Index.searchTopN(spark, p)) ===
+      rows(Bm25.searchTopN(plantedDocs.filter(col("doc_id") >= 2))))
+    // an update delta and a delete whose ids span both deltas
+    val docs = docsAt((0L until 40L) ++ (600L until 640L))
+    val q = tmp("upddel")
+    Bm25Index.build(docs.filter(col("doc_id") < 600), q)
+    Bm25Index.update(docs.filter(col("doc_id") >= 600), q, "00001")
+    val dead = docs.filter(col("doc_id") % 7 === 0).select("doc_id")
+    Bm25Index.delete(dead, q, "del-01")
+    val live = docs.join(dead, Seq("doc_id"), "left_anti")
+    assert(rows(Bm25Index.searchTopN(spark, q, terms)) === rows(Bm25.searchTopN(live, terms)))
   }
 
-  test("compact regenerates blockmax from live rows and folds deaddf away") {
-    val p = tmp("r15d")
+  test("staged top-k after compaction equals a rebuild on the survivors") {
+    val p = tmp("cmp")
     Bm25Index.build(plantedDocs, p)
     Bm25Index.delete(plantedDocs.filter(col("doc_id") < 2).select("doc_id"), p, "del-01")
     Bm25Index.compactDeltas(spark, p)
     val folded = new java.io.File(p).listFiles.map(_.getName)
       .filter(_.startsWith("delta-"))
     assert(folded.length === 1)
-    val d = s"$p/${folded.head}"
-    assert(new java.io.File(s"$d/blockmax").exists)
-    assert(!new java.io.File(s"$d/deaddf").exists)
-    // purged rows dropped out of the counts: 10 live 'spark' docs
-    val bm = spark.read.parquet(s"$d/blockmax")
-    assert(bm.filter(col("term") === "spark").agg(sum("n_rows")).head.getLong(0) === 10L)
-    assert(rows(Bm25Index.blockMaxTopN(spark, p)) ===
+    assert(rows(Bm25Index.searchTopN(spark, p)) ===
       rows(Bm25.searchTopN(plantedDocs.filter(col("doc_id") >= 2))))
   }
 
-  test("store without sidecar coverage fails loudly") {
-    val p = tmp("r15e")
+  test("pinned top-k: snapshot rows equal a rebuild on the pinned corpus") {
+    val p = tmp("pin")
+    val strong = plantedDocs.filter(col("doc_id") < 1024)
+    Bm25Index.build(strong, p)
+    Bm25Index.update(plantedDocs.filter(col("doc_id") >= 1024), p, "00001")
+    // version 0 sees only the strong docs; version 1 the full corpus
+    assert(rows(Bm25Index.searchTopNAt(spark, p, "00000")) === rows(Bm25.searchTopN(strong)))
+    assert(rows(Bm25Index.searchTopNAt(spark, p, "00001")) === rows(Bm25.searchTopN(plantedDocs)))
+    val docs = Tables.documents(spark, sf)
+    val q = tmp("pinsf")
+    val v0 = docs.filter(col("doc_id") % 5 =!= 0)
+    Bm25Index.build(v0, q)
+    Bm25Index.update(docs.filter(col("doc_id") % 5 === 0), q, "00001")
+    assert(rows(Bm25Index.searchTopNAt(spark, q, "00000")) === rows(Bm25.searchTopN(v0)))
+    assert(rows(Bm25Index.searchTopNAt(spark, q, "00001")) === rows(Bm25.searchTopN(docs)))
+  }
+
+  test("staged batch search: rows equal the corpus batch search on the planted and the sf corpus") {
+    val p = tmp("batch")
     Bm25Index.build(plantedDocs, p)
-    // simulate a store that predates the sidecars
-    val bmDir = new java.io.File(s"$p/delta-00000/blockmax")
-    bmDir.listFiles.foreach(_.delete()); bmDir.delete()
-    val e = intercept[IllegalArgumentException] {
-      Bm25Index.blockMaxTopN(spark, p)
-    }
-    assert(e.getMessage.contains("lacks full block-max sidecar coverage"))
+    val qs = queries(1 -> "spark query join fast")
+    assert(brows(Bm25Index.batchSearch(spark, p, qs)) === brows(Bm25.batchSearch(plantedDocs, qs)))
+    val docs = Tables.documents(spark, sf)
+    val q = tmp("batchsf")
+    Bm25Index.build(docs, q)
+    val demo = queries(Bm25.DemoQueries: _*)
+    assert(brows(Bm25Index.batchSearch(spark, q, demo)) === brows(Bm25.batchSearch(docs, demo)))
+  }
+
+  test("staged batch search: a query matching fewer than k docs serves exactly its matches") {
+    val p = tmp("batchfew")
+    Bm25Index.build(plantedDocs, p)
+    // query 2's terms live only in the 3 weak docs, beside a full query 1
+    val qs = queries(1 -> "spark query join fast", 2 -> "filler5 word9")
+    val served = brows(Bm25Index.batchSearch(spark, p, qs))
+    assert(served === brows(Bm25.batchSearch(plantedDocs, qs)))
+    assert(served.count(_._1 == 2) === 3)
+  }
+
+  test("staged batch search after a tombstone delete equals the corpus batch search on survivors") {
+    val p = tmp("batchdel")
+    Bm25Index.build(plantedDocs, p)
+    Bm25Index.delete(plantedDocs.filter(col("doc_id") < 2).select("doc_id"), p, "del-01")
+    val qs = queries(1 -> "spark query join fast", 2 -> "fast")
+    assert(brows(Bm25Index.batchSearch(spark, p, qs)) ===
+      brows(Bm25.batchSearch(plantedDocs.filter(col("doc_id") >= 2), qs)))
   }
 
   test("hits: all three barrier rungs serve bit-identical rows") {
@@ -274,6 +295,6 @@ class Round15Spec extends AnyFunSuite {
   test("query terms absent from the corpus serve an empty result") {
     val p = tmp("r15f")
     Bm25Index.build(plantedDocs, p)
-    assert(Bm25Index.blockMaxTopN(spark, p, Seq("zzzabsent")).isEmpty)
+    assert(Bm25Index.searchTopN(spark, p, Seq("zzzabsent")).isEmpty)
   }
 }

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pin the SPARK-side relations the restructured replay mirrors, so
   * any future driver divergence localizes to one CTE family instead
   * of "somewhere in 40 CTEs". */
-class Round16Spec extends AnyFunSuite {
+class Round16Spec extends AnyFunSuite with SuiteTempDir {
   import SparkTestSession._
 
   /** The judge's "paranoid spec": the trainer's EXPOSED vocabulary
@@ -52,99 +52,6 @@ class Round16Spec extends AnyFunSuite {
     val seeded = Unigram.seedPieces(heavy, 16)
     val ex = intercept[IllegalArgumentException] { Unigram.mStep(seeded) }
     assert(ex.getMessage.contains("Long.MaxValue/Grid"))
-  }
-
-  // ---- block-max gating for the staged BATCH search (r15 task 5) ----
-
-  /** Planted corpus spanning 4 doc-range blocks (width 1024), the
-    * Round15Spec shape: ids 0-11 (block 0) short and query-term-dense
-    * — the true top-k lives there and seeds a high per-query θ; ids
-    * 1030/2050/3080 hold ONE weak query term in a long filler doc,
-    * one per later block, so blocks 1-3 carry a tiny bound sum and
-    * must be pruned by the per-query θ cut. */
-  private def plantedDocs = {
-    import spark.implicits._
-    val filler = (1 to 40).map(i => s"filler$i word$i").mkString(" ")
-    val strong = (0 to 11).map { i =>
-      (i.toLong,
-        "spark spark spark spark query query query join join fast fast" +
-          s" extra$i")
-    }
-    val weak = Seq(1030L, 2050L, 3080L).map(id => (id, s"fast $filler"))
-    (strong ++ weak).toDF("doc_id", "text")
-  }
-
-  private def qdf(qs: (Int, String)*) = {
-    import spark.implicits._
-    qs.toDF("query_id", "qtext")
-  }
-
-  private def brows(df: org.apache.spark.sql.DataFrame): Set[(Int, Long, Double, Int)] =
-    df.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-
-  test("batch blockmax: rows equal the corpus batch search; union block ranges reach the scan as pushed literals") {
-    import graft.operators.{Bm25, Bm25Index}
-    val p = java.nio.file.Files.createTempDirectory("r16bb").toString + "/s"
-    Bm25Index.build(plantedDocs, p)
-    val queries = qdf(1 -> "spark query join fast")
-    val served = Bm25Index.blockMaxBatchSearch(spark, p, queries)
-    assert(brows(served) === brows(Bm25.batchSearch(plantedDocs, queries)))
-    // block 0 survives (its range end 1024 is a pushed bound); the
-    // weak blocks 1-3 are pruned BEFORE any posting row is read
-    val plan = served.queryExecution.executedPlan.toString
-    assert(plan.contains("LessThan(doc_id,1024)"),
-      s"expected the block-0 range pushed into the postings scan; plan:\n$plan")
-    assert(!plan.contains("GreaterThanOrEqual(doc_id,3072)"),
-      "weak block 3 should be pruned from the batch scan predicate")
-  }
-
-  test("batch blockmax: an under-seeded query degrades per-query (keeps ALL its blocks), others still prune") {
-    import graft.operators.{Bm25, Bm25Index}
-    val p = java.nio.file.Files.createTempDirectory("r16bu").toString + "/s"
-    Bm25Index.build(plantedDocs, p)
-    // query 2's only term lives in the 3 weak docs (< k reachable), so
-    // it cannot seed a θ — its blocks all survive and its rows must
-    // still be exact; query 1 prunes independently
-    val queries = qdf(1 -> "spark query join fast", 2 -> "filler5 word9")
-    assert(brows(Bm25Index.blockMaxBatchSearch(spark, p, queries)) ===
-      brows(Bm25.batchSearch(plantedDocs, queries)))
-  }
-
-  test("batch blockmax: delete leg's deaddf keeps the batch df reconstruction exact") {
-    import graft.operators.{Bm25, Bm25Index}
-    import org.apache.spark.sql.functions.col
-    val p = java.nio.file.Files.createTempDirectory("r16bd").toString + "/s"
-    Bm25Index.build(plantedDocs, p)
-    Bm25Index.delete(plantedDocs.filter(col("doc_id") < 2).select("doc_id"), p, "del-01")
-    val queries = qdf(1 -> "spark query join fast", 2 -> "fast")
-    assert(brows(Bm25Index.blockMaxBatchSearch(spark, p, queries)) ===
-      brows(Bm25.batchSearch(plantedDocs.filter(col("doc_id") >= 2), queries)))
-  }
-
-  test("pinned blockmax serve: snapshot rows equal a rebuild on the pinned corpus; pre-sidecar snapshot fails loudly") {
-    import graft.operators.{Bm25, Bm25Index}
-    import org.apache.spark.sql.functions.col
-    val p = java.nio.file.Files.createTempDirectory("r16pa").toString + "/s"
-    val strong = plantedDocs.filter(col("doc_id") < 1024)
-    Bm25Index.build(strong, p)
-    Bm25Index.update(plantedDocs.filter(col("doc_id") >= 1024), p, "00001")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // version 0 sees only the strong block; version 1 the full corpus
-    assert(rows(Bm25Index.blockMaxTopNAt(spark, p, "00000")) ===
-      rows(Bm25.searchTopN(strong)))
-    assert(rows(Bm25Index.blockMaxTopNAt(spark, p, "00001")) ===
-      rows(Bm25.searchTopN(plantedDocs)))
-    // a snapshot whose pinned subset lacks the sidecar fails loudly —
-    // the same coverage contract as the live serve (r15 task 6)
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rmTree)); f.delete(); ()
-    }
-    rmTree(new java.io.File(s"$p/delta-00000/blockmax"))
-    val ex = intercept[IllegalArgumentException] {
-      Bm25Index.blockMaxTopNAt(spark, p, "00000")
-    }
-    assert(ex.getMessage.contains("lacks full block-max sidecar coverage"))
   }
 
   test("mann-whitney: hand-computed U on disjoint ranks; midrank ties give the null U") {
@@ -239,7 +146,7 @@ class Round16Spec extends AnyFunSuite {
     import spark.implicits._
     import graft.operators.Bm25Index
     import graft.sources.DeltaStore
-    val p = java.nio.file.Files.createTempDirectory("r16tt").toString + "/s"
+    val p = tmp("r16tt")
     val mk = (id: Long) => Seq((id, "alpha beta gamma delta")).toDF("doc_id", "text")
     DeltaStore.reset(spark, p)
     Bm25Index.update(mk(1L), p, "9")
@@ -269,7 +176,7 @@ class Round16Spec extends AnyFunSuite {
     import graft.operators.DedupStore
     import org.apache.spark.sql.functions.{col, max}
     val docs = graft.sources.Tables.documents(spark, sf)
-    val tmp = java.nio.file.Files.createTempDirectory("r16dmrg").toString
+    val tmp = tmpDir("r16dmrg")
     val cut = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
     DedupStore.build(docs.filter(col("doc_id") <= cut), s"$tmp/a")
     DedupStore.build(docs.filter(col("doc_id") > cut), s"$tmp/b")
@@ -368,7 +275,7 @@ class Round16Spec extends AnyFunSuite {
   test("index snapshot diff: planted ingest and delete deltas; self-diff empty") {
     import spark.implicits._
     import graft.operators.Bm25Index
-    val p = java.nio.file.Files.createTempDirectory("r16diff").toString + "/s"
+    val p = tmp("r16diff")
     Bm25Index.build(Seq((1L, "alpha beta"), (2L, "alpha gamma"))
       .toDF("doc_id", "text"), p)
     Bm25Index.update(Seq((3L, "alpha delta")).toDF("doc_id", "text"), p, "00001")
@@ -418,9 +325,9 @@ class Round16Spec extends AnyFunSuite {
     assert(r(1L) === ((3L, BigDecimal(110.0 / 60.0)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
     assert(r(2L) === ((3L, 2.5)))
-    val tmp = java.nio.file.Files.createTempDirectory("r16hc").toString + "/s"
-    DedupStore.build(graft.sources.Tables.documents(spark, sf), tmp)
-    val real = DedupStore.verifiedNearDups(spark, tmp).cache()
+    val store = tmp("r16hc")
+    DedupStore.build(graft.sources.Tables.documents(spark, sf), store)
+    val real = DedupStore.verifiedNearDups(spark, store).cache()
     val hc = Graph.harmonicCentrality(real).collect()
     assert(hc.length <= 4 && hc.nonEmpty)
     hc.foreach { x =>
@@ -593,7 +500,7 @@ class Round16Spec extends AnyFunSuite {
     import graft.operators.SemanticStore
     import org.apache.spark.sql.functions.{col, max}
     val emb = graft.sources.Tables.embeddings(spark, sf)
-    val tmp = java.nio.file.Files.createTempDirectory("r16smrg").toString
+    val tmp = tmpDir("r16smrg")
     val cut = emb.agg(max(col("vec_id"))).head.getLong(0) / 2
     SemanticStore.build(emb.filter(col("vec_id") <= cut), s"$tmp/a")
     SemanticStore.build(emb.filter(col("vec_id") > cut), s"$tmp/b")
@@ -688,7 +595,7 @@ class Round16Spec extends AnyFunSuite {
     import graft.operators.{Ann, AnnIndex}
     import org.apache.spark.sql.functions.{col, max}
     val emb = graft.sources.Tables.embeddings(spark, sf)
-    val tmp = java.nio.file.Files.createTempDirectory("r16amrg").toString
+    val tmp = tmpDir("r16amrg")
     val cut = emb.agg(max(col("vec_id"))).head.getLong(0) / 2
     AnnIndex.build(emb.filter(col("vec_id") <= cut), s"$tmp/a")
     AnnIndex.build(emb.filter(col("vec_id") > cut), s"$tmp/b")
@@ -767,18 +674,16 @@ class Round16Spec extends AnyFunSuite {
   }
 
   /** Shard merge on the text index: (1) the merged store serves
-    * bit-identically to the direct full-corpus scorer; (2) the
-    * sidecar DELTA-MERGE (counts sum, bounds max/min over the shared
-    * block universe) equals a full-corpus build's re-derived sidecar
-    * cell for cell; (3) overlapping id spaces are rejected loudly;
-    * (4) a tombstone on one shard falls back to re-derivation and the
-    * merge physically purges the dead docs (serve equals a rebuild
-    * without them, block-max rung included). */
+    * bit-identically to the direct full-corpus scorer; (2) the merged
+    * `docid.range` sidecar equals a full-corpus build's; (3)
+    * overlapping id spaces are rejected loudly; (4) a tombstone on one
+    * shard is physically purged by the merge (serve and top-k equal a
+    * rebuild without the dead docs). */
   test("index shard merge: serve parity, exact sidecar merge, overlap rejection, tombstone purge") {
     import graft.operators.{Bm25, Bm25Index}
     import org.apache.spark.sql.functions.{col, max}
     val docs = graft.sources.Tables.documents(spark, sf)
-    val tmp = java.nio.file.Files.createTempDirectory("r16mrg").toString
+    val tmp = tmpDir("r16mrg")
     val cut = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
     Bm25Index.build(docs.filter(col("doc_id") <= cut), s"$tmp/a")
     Bm25Index.build(docs.filter(col("doc_id") > cut), s"$tmp/b")
@@ -789,21 +694,20 @@ class Round16Spec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(served === direct, "merged serve must equal the full-corpus scorer")
     Bm25Index.build(docs, s"$tmp/f")
-    def bmCells(path: String) = {
-      val ds = graft.sources.DeltaStore.committedDeltas(spark, path)
-      spark.read.parquet(ds.map(x => s"$x/blockmax"): _*).collect()
-        .map(r => (r.getString(0), r.getLong(1)) ->
-          (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
+    def range(path: String) = {
+      val Seq(d) = graft.sources.DeltaStore.committedDeltas(spark, path)
+      graft.sources.DeltaStore.readRange(graft.sources.DeltaStore.fsOf(spark, d), d)
     }
-    assert(bmCells(s"$tmp/m") === bmCells(s"$tmp/f"),
-      "merged sidecar must equal the full build's re-derived sidecar")
+    assert(range(s"$tmp/m").isDefined)
+    assert(range(s"$tmp/m") === range(s"$tmp/f"),
+      "merged id-range sidecar must equal the full build's")
     Bm25Index.build(docs.filter(col("doc_id") <= cut / 2), s"$tmp/o")
     val ex = intercept[IllegalArgumentException] {
       Bm25Index.mergeStores(spark, s"$tmp/a", s"$tmp/o", s"$tmp/m2")
     }
     assert(ex.getMessage.contains("disjoint id spaces"))
     // tombstone leg: delete a slice of shard a, merge, expect the
-    // dead docs purged and the block-max rung still serving
+    // dead docs purged
     val deadIds = docs.filter(col("doc_id") <= cut && col("doc_id") % 10 === 3)
       .select("doc_id")
     Bm25Index.delete(deadIds, s"$tmp/a", "del-01")
@@ -814,12 +718,12 @@ class Round16Spec extends AnyFunSuite {
     val direct3 = Bm25.bm25Score(live).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(served3 === direct3, "merge must purge tombstoned docs")
-    val bmTop = Bm25Index.blockMaxTopN(spark, s"$tmp/m3").collect()
+    val top = Bm25Index.searchTopN(spark, s"$tmp/m3").collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
-    val plainTop = Bm25Index.searchTopN(spark, s"$tmp/m3").collect()
+    val rebuiltTop = Bm25.searchTopN(live).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
-    assert(bmTop.toSeq === plainTop.toSeq,
-      "re-derived sidecar must serve the exact block-max top-k")
+    assert(top.toSeq === rebuiltTop.toSeq,
+      "the merged store must serve the rebuild's exact top-k")
   }
 
   /** Kendall tau over the two real runs: the exact C/D counts must
