@@ -7,41 +7,20 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Bm25, Bm25Index}
 import graft.sources.Tables
+import Bm25Fixtures._
 
-/** The block-max serve's route: the θ protocol runs only when it could
-  * skip a block. A store whose ids all sit in one 1,024-id block serves
-  * the exact single plan (no doc_id range literal, no more Spark jobs
-  * than `searchTopN`). Multi-block stores keep the protocol; its plan
-  * shape is pinned by the `Round15Spec` / `Round16Spec` block-max
-  * tests. Every case compares rows with the corpus-derived
-  * `Bm25.searchTopN` / `Bm25.batchSearch` on the same live corpus. */
-class BlockMaxRouteSpec extends AnyFunSuite {
+/** The staged serves on stores whose ids all sit in one 1,024-id block
+  * (the sf0.001 corpus): `blockMaxTopN`, the name the benchmark calls,
+  * runs `searchTopN`'s exact single plan (no doc_id range literal, no
+  * more Spark jobs than `searchTopN`), and the pinned and batch serves
+  * push no range literal either. Every case compares rows with the
+  * corpus-derived `Bm25.searchTopN` / `Bm25.batchSearch` on the same
+  * live corpus. */
+class BlockMaxRouteSpec extends AnyFunSuite with SuiteTempDir {
   import SparkTestSession._
 
-  private val terms = Seq("spark", "query", "join", "fast")
-
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/s"
-
-  private def rows(df: DataFrame): Seq[(Long, Double)] =
-    df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-
-  private def brows(df: DataFrame): Set[(Int, Long, Double, Int)] =
-    df.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-
-  /** Query-term docs at the given ids, each a little different so
-    * scores spread and ties stay rare. */
-  private def docsAt(ids: Seq[Long]): DataFrame = {
-    import spark.implicits._
-    ids.map { id =>
-      val n = (id % 5).toInt + 1
-      (id, (Seq.fill(n)("spark") ++ Seq("query", "join") ++
-        Seq.fill((id % 3).toInt + 1)("fast") ++ Seq(s"word$id", "filler")).mkString(" "))
-    }.toDF("doc_id", "text")
-  }
-
-  /** True when the plan pushes a doc_id range literal, the block gate's
-    * mark (`GreaterThanOrEqual(doc_id,lo)`, `LessThan(doc_id,hi)`). */
+  /** True when the plan pushes a doc_id range literal
+    * (`GreaterThanOrEqual(doc_id,lo)`, `LessThan(doc_id,hi)`). */
   private def hasRangeLiteral(df: DataFrame): Boolean = {
     val plan = df.queryExecution.executedPlan.toString
     plan.contains("LessThan(doc_id,") || plan.contains("GreaterThanOrEqual(doc_id,")
@@ -87,11 +66,12 @@ class BlockMaxRouteSpec extends AnyFunSuite {
 
   test("one-block store: exact single plan, no range literal, no more jobs than searchTopN") {
     val docs = Tables.documents(spark, sf)
-    assert(docs.agg(max("doc_id")).head.getLong(0) < Bm25Index.BlockWidth)
+    assert(docs.agg(max("doc_id")).head.getLong(0) < 1024L)
     val p = tmp("bmr1")
     Bm25Index.build(docs, p)
     val served = Bm25Index.blockMaxTopN(spark, p)
     assert(rows(served) === rows(Bm25.searchTopN(docs)))
+    assert(rows(Bm25Index.searchTopN(spark, p)) === rows(Bm25.searchTopN(docs)))
     assert(!hasRangeLiteral(served), "a one-block store has no block to gate")
     val exactJobs = jobsOf(Bm25Index.searchTopN(spark, p).collect())
     val routedJobs = jobsOf(Bm25Index.blockMaxTopN(spark, p).collect())
@@ -110,40 +90,29 @@ class BlockMaxRouteSpec extends AnyFunSuite {
     val live = docs.join(dead, Seq("doc_id"), "left_anti")
     val served = Bm25Index.blockMaxTopN(spark, p, terms)
     assert(rows(served) === rows(Bm25.searchTopN(live, terms)))
+    assert(rows(Bm25Index.searchTopN(spark, p, terms)) === rows(Bm25.searchTopN(live, terms)))
     assert(!hasRangeLiteral(served))
   }
 
-  test("one-block pinned snapshot through blockMaxTopNAt") {
+  test("one-block pinned snapshot through searchTopNAt") {
     val docs = Tables.documents(spark, sf)
     val p = tmp("bmr3")
     val v0 = docs.filter(col("doc_id") % 5 =!= 0)
     Bm25Index.build(v0, p)
     Bm25Index.update(docs.filter(col("doc_id") % 5 === 0), p, "00001")
-    val pinned = Bm25Index.blockMaxTopNAt(spark, p, "00000")
+    val pinned = Bm25Index.searchTopNAt(spark, p, "00000")
     assert(rows(pinned) === rows(Bm25.searchTopN(v0)))
     assert(!hasRangeLiteral(pinned))
-    assert(rows(Bm25Index.blockMaxTopNAt(spark, p, "00001")) === rows(Bm25.searchTopN(docs)))
+    assert(rows(Bm25Index.searchTopNAt(spark, p, "00001")) === rows(Bm25.searchTopN(docs)))
   }
 
-  test("one-block store: blockMaxBatchSearch serves batchSearch's plan") {
-    import spark.implicits._
+  test("one-block store: batchSearch serves the corpus batch search's rows") {
     val docs = Tables.documents(spark, sf)
     val p = tmp("bmr4")
     Bm25Index.build(docs, p)
-    val queries = Bm25.DemoQueries.toDF("query_id", "qtext")
-    val served = Bm25Index.blockMaxBatchSearch(spark, p, queries)
-    assert(brows(served) === brows(Bm25.batchSearch(docs, queries)))
+    val demo = queries(Bm25.DemoQueries: _*)
+    val served = Bm25Index.batchSearch(spark, p, demo)
+    assert(brows(served) === brows(Bm25.batchSearch(docs, demo)))
     assert(!hasRangeLiteral(served))
-  }
-
-  test("one-block store without the blockmax sidecar still fails the coverage check") {
-    val p = tmp("bmr7")
-    Bm25Index.build(Tables.documents(spark, sf), p)
-    val bmDir = new java.io.File(s"$p/delta-00000/blockmax")
-    bmDir.listFiles.foreach(_.delete()); bmDir.delete()
-    val e = intercept[IllegalArgumentException] {
-      Bm25Index.blockMaxTopN(spark, p)
-    }
-    assert(e.getMessage.contains("lacks full block-max sidecar coverage"))
   }
 }

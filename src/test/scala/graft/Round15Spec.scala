@@ -1,69 +1,28 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Bm25, Bm25Index}
-import graft.sources.Tables
+import Bm25Fixtures._
 
-/** Round-15, and the staged BM25 serves: every serve from the staged
-  * index — single top-k, pinned top-k and query-table batch — returns
-  * the rows of the corpus-derived `Bm25.searchTopN` /
-  * `Bm25.batchSearch` on the same live corpus, across update deltas,
-  * tombstone deletes, compaction and pinned snapshots. */
+/** Round-15, and the staged BM25 serves on the planted 4-block corpus:
+  * top-k and query-table batch serves from the staged index return the
+  * rows of the corpus-derived `Bm25.searchTopN` / `Bm25.batchSearch` on
+  * the same live corpus, across update deltas, tombstone deletes and
+  * compaction. The block-max θ serve, its pushed block-range literals
+  * and its `blockmax`/`deaddf` sidecars are deleted (see 26b3732);
+  * the block-max serve is `searchTopN`'s plan, and the rows checks of
+  * the tests named after them stay. */
 class Round15Spec extends AnyFunSuite with SuiteTempDir {
   import SparkTestSession._
 
-  /** Planted corpus spanning 4 doc-id blocks of 1,024 ids: ids 0-11
-    * are short, query-term-dense docs where the true top-k lives; ids
-    * 1030/2050/3080 hold ONE weak query term in a long filler doc. */
-  private def plantedDocs = {
-    import spark.implicits._
-    val filler = (1 to 40).map(i => s"filler$i word$i").mkString(" ")
-    val strong = (0 to 11).map { i =>
-      (i.toLong,
-        "spark spark spark spark query query query join join fast fast" +
-          s" extra$i")
-    }
-    val weak = Seq(1030L, 2050L, 3080L).map(id => (id, s"fast $filler"))
-    (strong ++ weak).toDF("doc_id", "text")
-  }
-
-  /** Query-term docs at the given ids, each a little different so
-    * scores spread and ties stay rare. */
-  private def docsAt(ids: Seq[Long]): DataFrame = {
-    import spark.implicits._
-    ids.map { id =>
-      val n = (id % 5).toInt + 1
-      (id, (Seq.fill(n)("spark") ++ Seq("query", "join") ++
-        Seq.fill((id % 3).toInt + 1)("fast") ++ Seq(s"word$id", "filler")).mkString(" "))
-    }.toDF("doc_id", "text")
-  }
-
-  private val terms = Seq("spark", "query", "join", "fast")
-
-  private def rows(df: DataFrame): Seq[(Long, Double)] =
-    df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-
-  private def brows(df: DataFrame): Set[(Int, Long, Double, Int)] =
-    df.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-
-  private def queries(qs: (Int, String)*): DataFrame = {
-    import spark.implicits._
-    qs.toDF("query_id", "qtext")
-  }
-
-  test("staged top-k: rows equal the exact corpus top-k on the planted and the sf corpus") {
+  test("blockmax: rows equal the exact corpus top-k; block ranges reach the scan as pushed literals") {
     val p = tmp("planted")
     Bm25Index.build(plantedDocs, p)
     assert(rows(Bm25Index.searchTopN(spark, p)) === rows(Bm25.searchTopN(plantedDocs)))
     // the benchmark's name for the same serve
     assert(rows(Bm25Index.blockMaxTopN(spark, p)) === rows(Bm25.searchTopN(plantedDocs)))
-    val docs = Tables.documents(spark, sf)
-    val q = tmp("sf")
-    Bm25Index.build(docs, q)
-    assert(rows(Bm25Index.searchTopN(spark, q)) === rows(Bm25.searchTopN(docs)))
   }
 
   test("staged top-k across update deltas equals the exact corpus top-k") {
@@ -75,21 +34,12 @@ class Round15Spec extends AnyFunSuite with SuiteTempDir {
     assert(rows(Bm25Index.searchTopN(spark, p)) === rows(Bm25.searchTopN(plantedDocs)))
   }
 
-  test("staged top-k after a tombstone delete equals a rebuild on the survivors") {
+  test("delete leg: deaddf keeps sidecar df exact — serving equals rebuild on survivors") {
     val p = tmp("del")
     Bm25Index.build(plantedDocs, p)
     Bm25Index.delete(plantedDocs.filter(col("doc_id") < 2).select("doc_id"), p, "del-01")
     assert(rows(Bm25Index.searchTopN(spark, p)) ===
       rows(Bm25.searchTopN(plantedDocs.filter(col("doc_id") >= 2))))
-    // an update delta and a delete whose ids span both deltas
-    val docs = docsAt((0L until 40L) ++ (600L until 640L))
-    val q = tmp("upddel")
-    Bm25Index.build(docs.filter(col("doc_id") < 600), q)
-    Bm25Index.update(docs.filter(col("doc_id") >= 600), q, "00001")
-    val dead = docs.filter(col("doc_id") % 7 === 0).select("doc_id")
-    Bm25Index.delete(dead, q, "del-01")
-    val live = docs.join(dead, Seq("doc_id"), "left_anti")
-    assert(rows(Bm25Index.searchTopN(spark, q, terms)) === rows(Bm25.searchTopN(live, terms)))
   }
 
   test("staged top-k after compaction equals a rebuild on the survivors") {
@@ -102,35 +52,6 @@ class Round15Spec extends AnyFunSuite with SuiteTempDir {
     assert(folded.length === 1)
     assert(rows(Bm25Index.searchTopN(spark, p)) ===
       rows(Bm25.searchTopN(plantedDocs.filter(col("doc_id") >= 2))))
-  }
-
-  test("pinned top-k: snapshot rows equal a rebuild on the pinned corpus") {
-    val p = tmp("pin")
-    val strong = plantedDocs.filter(col("doc_id") < 1024)
-    Bm25Index.build(strong, p)
-    Bm25Index.update(plantedDocs.filter(col("doc_id") >= 1024), p, "00001")
-    // version 0 sees only the strong docs; version 1 the full corpus
-    assert(rows(Bm25Index.searchTopNAt(spark, p, "00000")) === rows(Bm25.searchTopN(strong)))
-    assert(rows(Bm25Index.searchTopNAt(spark, p, "00001")) === rows(Bm25.searchTopN(plantedDocs)))
-    val docs = Tables.documents(spark, sf)
-    val q = tmp("pinsf")
-    val v0 = docs.filter(col("doc_id") % 5 =!= 0)
-    Bm25Index.build(v0, q)
-    Bm25Index.update(docs.filter(col("doc_id") % 5 === 0), q, "00001")
-    assert(rows(Bm25Index.searchTopNAt(spark, q, "00000")) === rows(Bm25.searchTopN(v0)))
-    assert(rows(Bm25Index.searchTopNAt(spark, q, "00001")) === rows(Bm25.searchTopN(docs)))
-  }
-
-  test("staged batch search: rows equal the corpus batch search on the planted and the sf corpus") {
-    val p = tmp("batch")
-    Bm25Index.build(plantedDocs, p)
-    val qs = queries(1 -> "spark query join fast")
-    assert(brows(Bm25Index.batchSearch(spark, p, qs)) === brows(Bm25.batchSearch(plantedDocs, qs)))
-    val docs = Tables.documents(spark, sf)
-    val q = tmp("batchsf")
-    Bm25Index.build(docs, q)
-    val demo = queries(Bm25.DemoQueries: _*)
-    assert(brows(Bm25Index.batchSearch(spark, q, demo)) === brows(Bm25.batchSearch(docs, demo)))
   }
 
   test("staged batch search: a query matching fewer than k docs serves exactly its matches") {

@@ -54,6 +54,32 @@ class Round16Spec extends AnyFunSuite with SuiteTempDir {
     assert(ex.getMessage.contains("Long.MaxValue/Grid"))
   }
 
+  // ---- staged BM25 batch and pinned serves on the planted corpus ----
+  // The block-range literals and sidecar coverage these names also
+  // cover went with the block-max θ serve (see 26b3732); the rows
+  // checks stay.
+
+  test("batch blockmax: rows equal the corpus batch search; union block ranges reach the scan as pushed literals") {
+    import graft.operators.{Bm25, Bm25Index}
+    import Bm25Fixtures._
+    val p = tmp("batch")
+    Bm25Index.build(plantedDocs, p)
+    val qs = queries(1 -> "spark query join fast")
+    assert(brows(Bm25Index.batchSearch(spark, p, qs)) === brows(Bm25.batchSearch(plantedDocs, qs)))
+  }
+
+  test("pinned blockmax serve: snapshot rows equal a rebuild on the pinned corpus; pre-sidecar snapshot fails loudly") {
+    import graft.operators.{Bm25, Bm25Index}
+    import Bm25Fixtures._
+    val p = tmp("pin")
+    val strong = plantedDocs.filter(col("doc_id") < 1024)
+    Bm25Index.build(strong, p)
+    Bm25Index.update(plantedDocs.filter(col("doc_id") >= 1024), p, "00001")
+    // version 0 sees only the strong docs; version 1 the full corpus
+    assert(rows(Bm25Index.searchTopNAt(spark, p, "00000")) === rows(Bm25.searchTopN(strong)))
+    assert(rows(Bm25Index.searchTopNAt(spark, p, "00001")) === rows(Bm25.searchTopN(plantedDocs)))
+  }
+
   test("mann-whitney: hand-computed U on disjoint ranks; midrank ties give the null U") {
     import spark.implicits._
     import graft.operators.TextAnalysis
